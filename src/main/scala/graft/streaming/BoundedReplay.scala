@@ -34,14 +34,15 @@ object BoundedReplay {
   // Staged-chunk cache: the range-split fixture staging is a pure
   // function of (table, sfDir, chunks) — every replay key over the
   // same table stages BYTE-IDENTICAL chunk files, and ~20 bench keys
-  // re-paid the bounds aggregate + partitioned write (~0.6 s each,
-  // measured by graft.tools.ReplayProbe) for nothing. Stage once per
-  // (cacheKey, chunks) per JVM and hard-link the cached files into
-  // each query's source dir. This was the real "replay-band floor"
-  // lever: ReplayProbe shows session setup is free (newSession 0.000 s,
-  // plan build 0.05 s warm) and the per-micro-batch ~0.12 s of
-  // queryPlanning + offset/WAL commits is engine cost — the staging
-  // was the only repeated harness work left.
+  // re-paid the bounds aggregate + partitioned write (~0.6 s each) for
+  // nothing. Stage once per (cacheKey, chunks) per JVM and hard-link
+  // the cached files into each query's source dir. Session setup is
+  // free (newSession 0.000 s, plan build 0.05 s warm). The
+  // per-micro-batch offset/WAL/commit time is mostly filesystem calls,
+  // not engine work: Hadoop's local filesystem starts a `chmod` or
+  // `readlink` process for every checkpoint file it writes or renames,
+  // which is why the stream runs in [[LocalFs.microBatchSession]]
+  // (SCALE.md § "Replay floor").
   private val stageCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
@@ -91,11 +92,7 @@ object BoundedReplay {
     val src = Files.createDirectories(root.resolve("src")).toString
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    // bounded replay: no restart-from-old-batch scenario, so keep
-    // only the latest committed batch of checkpoint/state files
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
+    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
     // state-store provider: the default HDFS-backed map rewrites every
     // partition's FULL state per checkpoint — fine for kilobyte state,
     // quadratic-feeling under the index-building dedup ops whose state

@@ -53,9 +53,7 @@ object FeedbackIterate {
     val root = graft.Scratch.dir("graft-iterate")
     val src = Files.createDirectories(root.resolve("src")).toString
     val ckpt = root.resolve("ckpt").toString
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", 2)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
+    val ss = LocalFs.microBatchSession(spark, 2)
     import ss.implicits._
 
     ss.createDataset(seed).toDF("node", "lbl", "round")

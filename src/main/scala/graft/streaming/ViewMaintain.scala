@@ -201,9 +201,7 @@ object ViewMaintain {
         sb.read.schema(snapSchema).parquet(dir.toString)
       else sb.read.schema(flatSnapSchema).parquet(dir.toString)
 
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
+    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
     // per-batch plans here are micro-batch-sized (KB..tens of MB): AQE
     // re-plans per query stage and submits each stage as its own job,
     // which at this granularity is pure scheduling overhead (measured
@@ -211,12 +209,8 @@ object ViewMaintain {
     // session's small fixed partition count takes one job per action.
     // A production deployment with unbounded per-batch volume keeps
     // AQE on — this session is sized per micro-batch by contract.
-    ss.conf.set("spark.sql.adaptive.enabled",
-      sys.props.getOrElse("graft.vm.aqe", "false"))
-    def phase[A](sc: org.apache.spark.SparkContext, name: String)(f: => A): A = {
-      sc.setJobDescription(s"vm: $name")
-      try f finally sc.setJobDescription(null)
-    }
+    // (The two-input loop keeps AQE on; see maintainJoinViewStream.)
+    ss.conf.set("spark.sql.adaptive.enabled", false)
 
     // durable state seeds: base snapshot s0 + view version v0
     phase(spark.sparkContext, "seed snapshot") {
@@ -449,9 +443,13 @@ object ViewMaintain {
     Seq(logDir, snapADir, snapBDir, viewDir)
       .foreach(Files.createDirectories(_))
 
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
+    // AQE stays ON in this loop, unlike the single-table one. Measured
+    // with it off (replay bench, stream_join_view_replay): Spark jobs
+    // per pass fell 75 -> 56, but tasks rose 141 -> 280 (AQE coalesces
+    // the compaction shuffles' partitions) and the compact phase rose
+    // 1.74 -> 2.58 s; the workload's wall time was not faster over 3
+    // before/after pairs.
+    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
 
     // per-side bucketing (the single-table loop's snapshotBuckets,
     // keyed on the side's FULL payload — a slice row can only affect
@@ -477,17 +475,21 @@ object ViewMaintain {
       else sb.read.schema(if (schema eq schemaA) flatA else flatB)
         .parquet(dir.toString)
 
-    writeSnap(oldA, gbOfSide(oldA, aCols), snapshotBuckets,
-      snapADir.resolve("s0"))
-    writeSnap(oldB, gbOfSide(oldB, bCols), snapshotBuckets,
-      snapBDir.resolve("s0"))
-    val v0 = buildJoinView(
-      readSide(ss, snapADir.resolve("s0"), schemaA)
-        .select(aCols.map(col): _*),
-      readSide(ss, snapBDir.resolve("s0"), schemaB)
-        .select(bCols.map(col): _*))
-    v0.write.parquet(viewDir.resolve("v0").toString)
-    val viewSchema = widen(v0.schema)
+    phase(spark.sparkContext, "seed snapshot") {
+      writeSnap(oldA, gbOfSide(oldA, aCols), snapshotBuckets,
+        snapADir.resolve("s0"))
+      writeSnap(oldB, gbOfSide(oldB, bCols), snapshotBuckets,
+        snapBDir.resolve("s0"))
+    }
+    val viewSchema = phase(ss.sparkContext, "seed view") {
+      val v0 = buildJoinView(
+        readSide(ss, snapADir.resolve("s0"), schemaA)
+          .select(aCols.map(col): _*),
+        readSide(ss, snapBDir.resolve("s0"), schemaB)
+          .select(bCols.map(col): _*))
+      v0.write.parquet(viewDir.resolve("v0").toString)
+      widen(v0.schema)
+    }
 
     replayChunks(ss, root, envelope, orderCol, chunks) {
       (batch: DataFrame, batchId: Long) =>
@@ -497,8 +499,9 @@ object ViewMaintain {
         //    single-table loop for why the old repartition(2) was a
         //    per-batch shuffle for nothing)
         val sliceDir = logDir.resolve(s"b$batchId")
-        sb.sparkContext.setJobDescription(s"vm: b$batchId slice")
-        batch.write.mode("overwrite").parquet(sliceDir.toString)
+        phase(sb.sparkContext, s"b$batchId slice") {
+          batch.write.mode("overwrite").parquet(sliceDir.toString)
+        }
         val slice = sb.read.schema(envSchema).parquet(sliceDir.toString)
         def sideOf(d: DataFrame, side: String, cols: Seq[String]) =
           d.filter(col("side") === side).select((cols :+ "w").map(col): _*)
@@ -527,11 +530,11 @@ object ViewMaintain {
           joinKeys, aVals, bVals)
         val prevV = sb.read.schema(viewSchema)
           .parquet(viewDir.resolve(s"v$batchId").toString)
-        sb.sparkContext.setJobDescription(s"vm: b$batchId view")
-        ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
-          .write.mode("overwrite")
-          .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
-        sb.sparkContext.setJobDescription(s"vm: b$batchId compact")
+        phase(sb.sparkContext, s"b$batchId view") {
+          ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
+            .write.mode("overwrite")
+            .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
+        }
         // 3) compact both snapshots on cadence, then truncate the
         //    absorbed slices + superseded snapshots. Bucketed layout:
         //    fold the WHOLE pending range (strictly-before slices +
@@ -539,7 +542,8 @@ object ViewMaintain {
         //    the rest from the last file-backed snapshot — rewrite
         //    mass ∝ touched churn per side, as in the single-table
         //    loop.
-        if (batchId + 1 - snapV >= compactEvery) {
+        if (batchId + 1 - snapV >= compactEvery) phase(sb.sparkContext,
+            s"b$batchId compact") {
           def compactSide(snapSideDir: Path, side: String,
               cols: Seq[String], schema: StructType,
               prevLive: DataFrame, dSide: DataFrame): Unit = {
@@ -573,7 +577,6 @@ object ViewMaintain {
           rm(snapADir.resolve(s"s$snapV"))
           rm(snapBDir.resolve(s"s$snapV"))
         }
-        sb.sparkContext.setJobDescription(null)
         ()
     }
     spark.read.parquet(
@@ -679,6 +682,14 @@ object ViewMaintain {
         }
       }
     } finally q.stop()
+  }
+
+  /** Run `f` with its Spark jobs labelled `vm: <name>` — the phase
+    * names the traced benchmark splits the loops' time by. */
+  private def phase[A](sc: org.apache.spark.SparkContext, name: String)(
+      f: => A): A = {
+    sc.setJobDescription(s"vm: $name")
+    try f finally sc.setJobDescription(null)
   }
 
   /** Highest `<prefix><N>` version present under a versioned dir
