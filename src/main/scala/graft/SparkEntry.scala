@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + Appendix A.
+/** Entry-point contract — see SURVEY.md §7 + Appendix A.
   * Aggregates every registered capability ([[Q]]) from the query modules;
   * each key has a matching DuckDB oracle unless the op is inherently
   * engine-specific (sketches, stubs), which get the rows-only check.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Central table readers for the driver-generated star schema + stream/LLM
-  * tables (see /root/repo/FIXTURES.md; reference scope per SURVEY.md §1).
+  * tables (see FIXTURES.md; reference scope per SURVEY.md §1).
   *
   * All access to `events` goes through [[Tables.events]]: the file stores
   * `ts` as parquet `timestamp[ns]`, which Spark 4.x refuses to read from

@@ -16,14 +16,17 @@ object SimilarityOps {
   /** `(vec_id, v: array<double>, nrm)` — normalized working set.
     * NOTE: downstream predicates (`isQuery`, `isCentroid`) are applied
     * AFTER this normalization, so they must reference `vec_id`, not the
-    * original id column name. Zero-norm vectors (cosine undefined) are
-    * excluded here rather than surfacing as null similarities. */
+    * original id column name. Vectors whose norm is zero or not finite
+    * (a NaN or infinite element: cosine undefined) are excluded here
+    * rather than surfacing as null or NaN similarities. Spark orders
+    * NaN above every double, so `nrm > 0` alone would keep them. */
   def normed(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
     df.select(col(idCol).as("vec_id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(expr("vec_dot(v, v)")))
-      .filter(col("nrm") > 0)
+      .filter(col("nrm") > 0 && !isnan(col("nrm")) &&
+        col("nrm") =!= Double.PositiveInfinity)
 
   /** Two-phase per-query top-k over a scored candidate table
     * `(qid, nbr, <scoreName>)` → `(qid, nbr, <scoreName>, rk)` — shared

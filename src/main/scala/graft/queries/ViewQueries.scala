@@ -141,8 +141,9 @@ object ViewQueries {
     * compaction reconciles and rewrites ONLY the few touched bucket
     * directories and hard-links the rest — the production-lake shape
     * the 75%-churn bench fixtures deliberately cannot show (they touch
-    * every bucket; see `ViewMaintain`'s scale note and ViewProbe's
-    * 8.2 MiB → 0.35 MiB write-mass measurement). Same full-recompute
+    * every bucket; see `ViewMaintain`'s scale note and the
+    * 8.2 MiB → 0.35 MiB write-mass measurement in SCALE.md § "View
+    * maintenance"). Same full-recompute
     * oracle contract as [[viewMaintainStream]], closing the gap where
     * the bucketed path was spec-parity-only: here the END-TO-END
     * result of incremental bucketed maintenance is hash-checked

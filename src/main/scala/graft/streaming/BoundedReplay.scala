@@ -3,7 +3,9 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.streaming.StreamingQuery
+import java.nio.file.{Files, Path, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end bounded replay harness: runs a REAL Structured Streaming
   * query (file source → stateful operator → parquet sink) over a
@@ -44,23 +46,59 @@ object BoundedReplay {
   // which is why the stream runs in [[LocalFs.microBatchSession]]
   // (SCALE.md § "Replay floor").
   private val stageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+    new java.util.concurrent.ConcurrentHashMap[String, Option[Path]]()
 
   /** Range-split `base` on `orderCol` into `chunks` partition dirs
-    * under a fresh scratch root (one bounds aggregate + one
-    * range-partitioned write) and return the staged dir. */
-  private def stageOnce(base: DataFrame, orderCol: Column,
-      chunks: Int): java.nio.file.Path = {
+    * `ck=<i>` under a fresh scratch root (one bounds aggregate + one
+    * range-partitioned write; a null order value lands in chunk 0) and
+    * return the staged dir — None, with nothing written, for an empty
+    * input. */
+  private[streaming] def stage(base: DataFrame, orderCol: Column,
+      chunks: Int): Option[Path] = {
     val b = base.agg(min(orderCol).as("lo"), max(orderCol).as("hi")).head()
-    val (lo, span) =
-      (b.getLong(0), math.max(1L, b.getLong(1) - b.getLong(0) + 1L))
-    val bucket = least(lit(chunks - 1),
-      floor((orderCol - lit(lo)) * lit(chunks.toLong) / lit(span))).cast("int")
-    val stage = graft.Scratch.dir("graft-replay-stage").resolve("chunks")
-    base.withColumn("ck", bucket).repartition(col("ck"))
-      .write.partitionBy("ck").parquet(stage.toString)
-    stage
+    if (b.isNullAt(0)) None else {
+      val (lo, span) =
+        (b.getLong(0), math.max(1L, b.getLong(1) - b.getLong(0) + 1L))
+      val bucket = coalesce(least(lit(chunks - 1),
+        floor((orderCol - lit(lo)) * lit(chunks.toLong) / lit(span)))
+        .cast("int"), lit(0))
+      val dir = graft.Scratch.dir("graft-replay-stage").resolve("chunks")
+      base.withColumn("ck", bucket).repartition(col("ck"))
+        .write.partitionBy("ck").parquet(dir.toString)
+      Some(dir)
+    }
   }
+
+  /** Feed the staged chunks to the started query `q` in order: hard-link
+    * chunk i's files into the query's source dir `src` and run ONE
+    * micro-batch over them, so the watermark advances between chunks.
+    * Absent chunk dirs (no row fell in that range) are skipped; links
+    * leave the staged files in place for the next replay of a cached
+    * stage. Stops `q` when done or failed. */
+  private[streaming] def feed(q: StreamingQuery, stage: Path, chunks: Int,
+      src: Path): Unit =
+    try (0 until chunks).foreach { i =>
+      val dir = stage.resolve(s"ck=$i")
+      if (Files.isDirectory(dir)) {
+        val listing = Files.list(dir)
+        try listing.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .zipWithIndex.foreach { case (f, j) =>
+            val t = src.resolve(s"chunk_${i}_$j.parquet")
+            // an already-fed chunk (retried/partial prior replay) is
+            // fine — the staged file is byte-identical, so keep it;
+            // the copy fallback likewise replaces rather than throws
+            try Files.createLink(t, f)
+            catch {
+              case _: java.nio.file.FileAlreadyExistsException => ()
+              case _: Exception =>
+                Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
+            }
+          }
+        finally listing.close()
+        q.processAllAvailable()
+      }
+    } finally q.stop()
 
   /** Shared replay core: stage `df` into `chunks` files range-split on
     * `orderCol` (one pass, cached per `cacheKey` across calls in this
@@ -89,7 +127,7 @@ object BoundedReplay {
       op: DataFrame => Dataset[_])(
       flush: Option[String => Dataset[_]]): DataFrame = {
     val root = graft.Scratch.dir(prefix)
-    val src = Files.createDirectories(root.resolve("src")).toString
+    val src = Files.createDirectories(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
     val ss = LocalFs.microBatchSession(spark, shufflePartitions)
@@ -114,15 +152,14 @@ object BoundedReplay {
     // stage every chunk in ONE range-partitioned pass (per-chunk
     // filter+write jobs would rescan the input `chunks` times) —
     // cached per (cacheKey, chunks) across calls, since the staging is
-    // a pure function of the table — then feed the source dir one
-    // hard-link per trigger (links leave the cached files in place)
-    val stage = cacheKey match {
+    // a pure function of the table
+    val staged = cacheKey match {
       case Some(k) => stageCache.computeIfAbsent(s"$k|$chunks",
-        _ => stageOnce(base, orderCol, chunks))
-      case None => stageOnce(base, orderCol, chunks)
+        _ => stage(base, orderCol, chunks))
+      case None => stage(base, orderCol, chunks)
     }
 
-    val streamed = op(ss.readStream.schema(base.schema).parquet(src))
+    val streamed = op(ss.readStream.schema(base.schema).parquet(src.toString))
     val sinkSchema = streamed.schema
     // coalesce shrinks only the SINK side (state partitioning is
     // fixed by the shuffle above it) — one output file per batch by
@@ -132,36 +169,7 @@ object BoundedReplay {
     val q = streamed.coalesce(sinkPartitions).writeStream.format("parquet")
       .option("path", out)
       .option("checkpointLocation", ckpt).outputMode("append").start()
-    try {
-      (0 until chunks).foreach { i =>
-        val dir = stage.resolve(s"ck=$i")
-        if (Files.isDirectory(dir)) {
-          val listing = Files.list(dir)
-          try {
-            val files = listing.iterator()
-            var j = 0
-            while (files.hasNext) {
-              val f = files.next()
-              if (f.getFileName.toString.endsWith(".parquet")) {
-                val t = java.nio.file.Paths.get(src, s"chunk_${i}_$j.parquet")
-                // already-fed chunk (retried/partial prior replay) is
-                // fine — the staged file is byte-identical, so keep it;
-                // the copy fallback likewise replaces rather than throws
-                try Files.createLink(t, f)
-                catch {
-                  case _: java.nio.file.FileAlreadyExistsException => ()
-                  case _: Exception => Files.copy(f, t,
-                    java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-                }
-                j += 1
-              }
-            }
-          } finally listing.close()
-          // files of one chunk per trigger → one micro-batch, in order
-          q.processAllAvailable()
-        }
-      }
-    } finally q.stop()
+    staged.fold(q.stop())(feed(q, _, chunks, src))
     val streamedOut = spark.read.schema(sinkSchema).parquet(out)
     flush.fold(streamedOut)(f => streamedOut.unionByName(f(ckpt).toDF()))
   }

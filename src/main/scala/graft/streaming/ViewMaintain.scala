@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.ViewOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import java.nio.file.{Files, Path}
 
 /** CONTINUOUS materialized-view maintenance on the real streaming
@@ -14,12 +14,12 @@ import java.nio.file.{Files, Path}
   *   - the batch's DELTA-LOG SLICE is committed first (the lakehouse
   *     transaction-log shape, keyed by batchId so a replayed batch
   *     overwrites its own slice),
-  *   - the base is then COMPACTED: the new batchId-keyed base snapshot
-  *     is the previous snapshot with the slice's signed weights
-  *     reconciled (only delta-touched payloads pass through the
-  *     weighted group-by; everything else is carried over by an
-  *     anti-join against the delta-sized touched set), and the
-  *     consumed slice is truncated,
+  *   - each base is then COMPACTED in its versioned side store: the
+  *     new batchId-keyed snapshot is the previous snapshot with the
+  *     slice's signed weights reconciled (only delta-touched payloads
+  *     pass through the weighted group-by; everything else is carried
+  *     over by an anti-join against the delta-sized touched set), and
+  *     the consumed slice is truncated,
   *   - the VIEW itself, versioned per batch, advances via the caller's
   *     maintain step (e.g. [[ViewOps.maintainAggView]]: counts/sums
   *     delta-merged, min/max recomputed only for delete-touched groups
@@ -28,6 +28,12 @@ import java.nio.file.{Files, Path}
   * The final view hash-matches the full-recompute oracle on the new
   * snapshot, certifying that a continuously-maintained view never
   * drifts from what a batch rebuild would produce.
+  *
+  * The changelog is staged and fed by [[BoundedReplay.stage]] and
+  * [[BoundedReplay.feed]], the same chunk stager and feeder the
+  * bounded replay keys run on: one chunk is one micro-batch. Both
+  * loops keep their bases in one [[SideStore]] each (the single-table
+  * loop one, the join loop one per input).
   *
   * @note scale: per micro-batch the work is (a) one delta-sized slice
   *   commit, (b) one base compaction — the base is scanned (twice: the
@@ -41,20 +47,24 @@ import java.nio.file.{Files, Path}
   *   compaction trade: each batch pays one O(base) read+write of the
   *   snapshot instead of an O(base + batches·delta) read — honest on
   *   an UNPARTITIONED base too, since nothing relies on partition
-  *   elimination; a production lake partitions the snapshot on the
-  *   group key and rewrites touched partitions only, or compacts
-  *   every N batches to amortize the rewrite. foreachBatch retries
-  *   are idempotent: slice, snapshot and view version are all keyed
-  *   by batchId, and the previous snapshot is only truncated AFTER
-  *   the batch's outputs commit, so a replayed batch recomputes the
-  *   same state from the same inputs. Measured (sf0.1, ViewProbe):
-  *   the three `stream_*view*_replay` bench keys' changelog is 447 k
-  *   signed rows against a 560 k-row base — a deliberate 75%-churn
-  *   full-taxonomy fixture — so their bench cost is churn mass, not
-  *   maintenance overhead (fixture construction ~2 s, replay ~11 s of
-  *   which each batch reconciles ~150 k payloads into the snapshot).
+  *   elimination; the bucketed store layout rewrites touched buckets
+  *   only. foreachBatch retries are idempotent: slice, snapshot and
+  *   view version are all keyed by batchId, and the previous snapshot
+  *   is only truncated AFTER the batch's outputs commit, so a replayed
+  *   batch recomputes the same state from the same inputs. Measured
+  *   (sf0.1, SCALE.md § "View maintenance"): the three
+  *   `stream_*view*_replay` bench keys' changelog is 447 k signed rows
+  *   against a 560 k-row base — a deliberate 75%-churn full-taxonomy
+  *   fixture — so their bench cost is churn mass, not maintenance
+  *   overhead.
   */
 object ViewMaintain {
+
+  // shuffle partitions of the maintainers' isolated sessions
+  // (compaction group-by, view merges): each micro-batch carries
+  // kilobytes to megabytes at the fixture scales; a deployment sizes
+  // this to the per-compaction input (delta + touched base mass)
+  private val ShufflePartitions = 8
 
   /** Replay `deltas` (signed rows, [[ViewOps.rowDeltas]] schema) in
     * `chunks` range-ordered micro-batches over `orderCol`, maintaining
@@ -66,8 +76,7 @@ object ViewMaintain {
   def maintainViewStream(spark: SparkSession, oldBase: DataFrame,
       deltas: DataFrame, orderCol: String, chunks: Int,
       groupCols: Seq[String], sumCols: Seq[String],
-      minMaxCols: Seq[String], compactEvery: Int = 1,
-      shufflePartitions: Int = 8,
+      minMaxCols: Seq[String],
       snapshotBuckets: Option[Int] = None): DataFrame = {
     val aggs = Seq(count(lit(1)).as("cnt")) ++
       sumCols.map(c => sum(col(c)).as("sum_" + c)) ++
@@ -80,8 +89,6 @@ object ViewMaintain {
       maintain = (prev, batch, live) =>
         ViewOps.maintainAggView(prev, batch, live,
           groupCols, sumCols, minMaxCols),
-      compactEvery = compactEvery,
-      shufflePartitions = shufflePartitions,
       snapshotBuckets = snapshotBuckets)
   }
 
@@ -91,274 +98,203 @@ object ViewMaintain {
   def maintainTopKViewStream(spark: SparkSession, oldBase: DataFrame,
       deltas: DataFrame, orderCol: String, chunks: Int,
       groupCols: Seq[String], scoreCol: String, idCol: String,
-      k: Int, shufflePartitions: Int = 8,
-      snapshotBuckets: Option[Int] = None): DataFrame =
+      k: Int, snapshotBuckets: Option[Int] = None): DataFrame =
     maintainCustomViewStream(spark, oldBase, deltas, orderCol, chunks,
       groupCols,
       buildView = b => ViewOps.topKView(b, groupCols, scoreCol, idCol, k),
       maintain = (prev, batch, live) =>
         ViewOps.maintainTopKView(prev, batch, live,
           groupCols, scoreCol, idCol, k),
-      shufflePartitions = shufflePartitions,
       snapshotBuckets = snapshotBuckets)
 
   /** The generic single-table core: stage the changelog into `chunks`
     * range-ordered micro-batches, and per batch (a) commit the
-    * batchId-keyed log slice, (b) compact the base snapshot (previous
-    * snapshot ⊎ pending slices, consumed slices truncated) on the
-    * `compactEvery` cadence, (c) advance the batchId-versioned view
-    * with `maintain`, handing it the live base pruned to the
-    * delete-touched groups. `buildView` seeds version 0 from the base
-    * snapshot. An EMPTY changelog replays no batches (detected for
-    * free in the staging bounds pass), so version 0 — `buildView` on
-    * the base snapshot — is the result.
+    * batchId-keyed log slice, (b) compact the base snapshot with
+    * exactly that slice and truncate the slice and the superseded
+    * snapshot, (c) advance the batchId-versioned view with `maintain`,
+    * handing it the new base pruned to the delete-touched groups.
+    * `buildView` seeds version 0 from the base snapshot. An EMPTY
+    * changelog replays no batches (detected for free in the staging
+    * bounds pass), so version 0 — `buildView` on the base snapshot —
+    * is the result.
     *
-    * `compactEvery` is the amortization knob: 1 (default) rewrites
-    * the snapshot every batch (flat per-batch cost, one O(base)
-    * read+write each); N > 1 lets up to N slices accumulate and pays
-    * the O(base) rewrite once per N batches — between compactions the
-    * live base is reconstructed lazily from snapshot + pending slices
-    * (bounded by N, never "every slice since the start" — the
-    * unbounded-rescan design this loop replaced). Same hashes either
-    * way; `ViewOpsSpec` pins cadence-independence. One documented
-    * semantic nuance of N > 1: [[applyDelta]]'s over-delete detection
-    * runs on the NET weight of the pooled pending slices, so a
-    * changelog that deletes a base-absent payload in batch i and
-    * re-inserts it in batch j (both inside one compaction window) nets
-    * to zero and passes, where compactEvery = 1 would fail loudly on
-    * batch i — deferred compaction trades per-slice validation
-    * granularity for the amortized rewrite, exactly like a lakehouse
-    * table that validates at commit-compaction rather than per
-    * transaction. Final view hashes are unaffected (a netted
-    * delete+reinsert is a no-op either way).
-    *
-    * `shufflePartitions` sizes every shuffle inside the maintainer's
-    * isolated session (compaction group-by, view merges). The default
-    * 8 is right for local[32] at the test scale where each micro-batch
-    * carries kilobytes-to-megabytes; a production deployment sizes it
-    * to the per-compaction input (delta + touched base mass), exactly
-    * as it would any batch job — pass it through rather than inherit
-    * the session-wide count sized for full-table scans.
-    *
-    * `snapshotBuckets = Some(n)` switches the snapshot layout to
-    * hash-bucketed directories (`gb = pmod(hash(groupCols), n)`,
-    * written `partitionBy("gb")`) and makes compaction INCREMENTAL:
-    * only buckets the pending slices touch are reconciled and
-    * rewritten; untouched bucket directories are carried into the new
-    * batchId-keyed snapshot as hard links (fall back to copy across
-    * devices) — the production-lake shape where the O(base) rewrite
-    * becomes O(touched partitions) under skewed churn, and the
-    * delete-touched-group rescan partition-prunes at the scan. The
-    * default None keeps the flat single-directory snapshot (right for
-    * the uniform-churn bench fixtures, where every bucket is touched
-    * and bucketing would only add write fan-out). Hashes are identical
-    * either way — `ViewOpsSpec` pins bucketed == flat. */
+    * `snapshotBuckets = Some(n)` switches the base store to
+    * hash-bucketed directories keyed on `groupCols` (see
+    * [[SideStore]]): compaction reconciles and rewrites only the
+    * buckets the slice touches, and the delete-touched-group rescan
+    * partition-prunes at the scan. The default None keeps the flat
+    * single-directory snapshot (right for the uniform-churn bench
+    * fixtures, where every bucket is touched and bucketing would only
+    * add write fan-out). Hashes are identical either way —
+    * `ViewOpsSpec` pins bucketed == flat. */
   def maintainCustomViewStream(spark: SparkSession, oldBase: DataFrame,
       deltas: DataFrame, orderCol: String, chunks: Int,
       groupCols: Seq[String],
       buildView: DataFrame => DataFrame,
       maintain: (DataFrame, DataFrame, DataFrame) => DataFrame,
-      compactEvery: Int = 1,
-      shufflePartitions: Int = 8,
       snapshotBuckets: Option[Int] = None): DataFrame = {
     require(deltas.columns.toSet == oldBase.columns.toSet + "w",
       s"delta schema ${deltas.columns.mkString(",")} must be the base " +
         s"schema ${oldBase.columns.mkString(",")} plus 'w' — a base " +
         "column absent from the changelog would read as NULL in the " +
         "delta log and break full-payload multiset cancellation")
-    require(compactEvery >= 1, s"compactEvery must be >= 1")
-    require(shufflePartitions >= 1, "shufflePartitions must be >= 1")
-    require(snapshotBuckets.forall(_ >= 1), "snapshotBuckets must be >= 1")
     val root = graft.Scratch.dir("graft-view-maintain")
-    val baseCols = oldBase.columns.toSeq
-    val logDir = root.resolve("log")
-    val snapDir = root.resolve("snap")
-    val viewDir = root.resolve("view")
-    Files.createDirectories(logDir)
-    Files.createDirectories(snapDir)
-    Files.createDirectories(viewDir)
-    def gbOf(d: DataFrame): Column = snapshotBuckets.fold(lit(0))(n =>
-      pmod(hash(groupCols.map(d(_)): _*), lit(n)))
-    // EVERY internal parquet read carries its schema pinned: bucketed
-    // snapshot dirs need it for correctness (a snapshot whose every
-    // row was deleted has no schema-bearing part file), and the flat
-    // reads need it for SPEED — each schema inference is a footer-
-    // reading Spark job, and this loop re-reads snapshots/slices/views
-    // every batch (measured r16, ViewProbe: 22 unlabeled jobs ≈ 3.2 s
-    // of a 14.4 s warm replay were exactly these). Pinned schemas are
-    // nullable-widened: column names/types are what the oracle gate
-    // compares; nullability flags never reach the declared result
-    // (the final view read stays inference-based).
-    def widen(s: StructType): StructType =
-      StructType(s.fields.map(_.copy(nullable = true)))
-    val flatSnapSchema = widen(oldBase.schema)
-    val snapSchema = StructType(flatSnapSchema.fields :+
-      org.apache.spark.sql.types.StructField("gb",
-        org.apache.spark.sql.types.IntegerType))
+    val viewDir = Files.createDirectories(root.resolve("view"))
+    val base = new SideStore(root.resolve("snap"), oldBase.schema,
+      groupCols, snapshotBuckets)
     val sliceSchema = widen(deltas.schema)
-    def readSnap(sb: SparkSession, dir: Path): DataFrame =
-      if (snapshotBuckets.isDefined)
-        sb.read.schema(snapSchema).parquet(dir.toString)
-      else sb.read.schema(flatSnapSchema).parquet(dir.toString)
 
-    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
     // per-batch plans here are micro-batch-sized (KB..tens of MB): AQE
     // re-plans per query stage and submits each stage as its own job,
     // which at this granularity is pure scheduling overhead (measured
-    // r16 ViewProbe: 12 jobs per view step); static planning with the
-    // session's small fixed partition count takes one job per action.
-    // A production deployment with unbounded per-batch volume keeps
-    // AQE on — this session is sized per micro-batch by contract.
+    // r16, OPTIMIZATION_r16.md: 12 jobs per view step); static planning
+    // with the session's small fixed partition count takes one job per
+    // action. A production deployment with unbounded per-batch volume
+    // keeps AQE on — this session is sized per micro-batch by contract.
     // (The two-input loop keeps AQE on; see maintainJoinViewStream.)
     ss.conf.set("spark.sql.adaptive.enabled", false)
 
     // durable state seeds: base snapshot s0 + view version v0
-    phase(spark.sparkContext, "seed snapshot") {
-      writeSnap(oldBase, gbOf(oldBase), snapshotBuckets, snapDir.resolve("s0"))
-    }
+    phase(spark.sparkContext, "seed snapshot") { base.seed(oldBase) }
     val viewSchema = phase(ss.sparkContext, "seed view") {
-      val v0 = buildView(readSnap(ss, snapDir.resolve("s0"))
-        .select(baseCols.map(col): _*))
+      val v0 = buildView(base.rows(ss, 0))
       v0.write.parquet(viewDir.resolve("v0").toString)
       widen(v0.schema)
     }
 
-    replayChunks(ss, root, deltas, orderCol, chunks) {
-      (batch: DataFrame, batchId: Long) =>
-        val sb = batch.sparkSession
-        // 1) WAL: the slice commits before any state mutation —
-        //    batchId-keyed; the micro-batch keeps its source
-        //    partitioning (the file source already splits a large
-        //    chunk by maxPartitionBytes, so a big delta batch is not
-        //    single-writer; the old repartition(2) here paid a full
-        //    shuffle + sort-before-repartition per batch for nothing)
-        val sliceDir = logDir.resolve(s"b$batchId")
-        phase(sb.sparkContext, s"b$batchId slice") {
-          batch.write.mode("overwrite").parquet(sliceDir.toString)
-        }
-        // 2) live base = latest snapshot ⊎ pending slices (at most
-        //    compactEvery of them — idempotent on retry: a replayed
-        //    batch overwrote its own slice above and recomputes from
-        //    the same surviving snapshot. If the retry fires AFTER its
-        //    own compaction already committed s{batchId+1}, the
-        //    pending range is empty and that snapshot IS the live
-        //    base — the view step still recomputes v{batchId+1} from
-        //    identical inputs instead of failing on a zero-path read.
-        val snapV = maxVersion(snapDir, "s")
-        val prevSnapDir = snapDir.resolve(s"s$snapV")
-        val prevSnap = readSnap(sb, prevSnapDir)
-          .select(baseCols.map(col): _*)
-        val pending = (snapV to batchId).map(b =>
-          logDir.resolve(s"b$b").toString).filter(p =>
-          Files.isDirectory(java.nio.file.Paths.get(p)))
-        val pendingDf = if (pending.isEmpty) null
-          else sb.read.schema(sliceSchema).parquet(pending: _*)
-        val live = if (pending.isEmpty) prevSnap
-          else applyDelta(prevSnap, pendingDf, baseCols)
-        // 3) compact on cadence: write the reconciled base as the new
-        //    batchId-keyed snapshot and truncate the consumed slices.
-        //    Bucketed layout: reconcile ONLY the slice-touched buckets
-        //    (a slice row can only affect the bucket its own groupCols
-        //    hash to) and hard-link the untouched bucket dirs across —
-        //    rewrite cost ∝ touched churn, not base size.
-        val compactNow = pending.nonEmpty &&
-          (batchId + 1 - snapV) >= compactEvery
-        val newSnapDir = snapDir.resolve(s"s${batchId + 1}")
-        val snap = if (compactNow) {
-          phase(sb.sparkContext, s"b$batchId compact") {
-            snapshotBuckets match {
-              case Some(_) =>
-                val touched = pendingDf
-                  .select(gbOf(pendingDf).as("gb")).distinct()
-                  .collect().map(_.getInt(0)).toSet // ≤ n values by construction
-                val snapTouched = readSnap(sb, prevSnapDir)
-                  .filter(col("gb").isin(touched.toSeq: _*))
-                  .select(baseCols.map(col): _*)
-                val reconciled = applyDelta(snapTouched, pendingDf, baseCols)
-                writeSnap(reconciled, gbOf(reconciled), snapshotBuckets,
-                  newSnapDir)
-                linkUntouchedBuckets(prevSnapDir, newSnapDir, touched)
-              case None =>
-                live.write.mode("overwrite").parquet(newSnapDir.toString)
-            }
-          }
-          readSnap(sb, newSnapDir)
-        } else if (pending.isEmpty) {
-          readSnap(sb, prevSnapDir) // retry-after-compaction
-        } else live
-        // 4) advance view v{batchId} -> v{batchId+1}; the maintain
-        //    step only rescans delete-touched groups, so hand it the
-        //    live base pruned to those groups — under the bucketed
-        //    layout a bucket filter partition-prunes the snapshot scan
-        //    before the semi join refines to exact groups
-        phase(sb.sparkContext, s"b$batchId view") {
-          val slice = sb.read.schema(sliceSchema).parquet(sliceDir.toString)
-          val negKeys = slice.filter(col("w") < 0)
-            .select(groupCols.map(col): _*).distinct()
-          val snapForPrune =
-            if (snap.columns.contains("gb")) {
-              val negBuckets = negKeys.select(gbOf(negKeys).as("gb"))
-                .distinct().collect().map(_.getInt(0)).toSeq
-              snap.filter(col("gb").isin(negBuckets: _*))
-                .select(baseCols.map(col): _*)
-            } else snap.select(baseCols.map(col): _*)
-          val pruned = snapForPrune.join(negKeys, groupCols, "left_semi")
-          val prev = sb.read.schema(viewSchema)
-            .parquet(viewDir.resolve(s"v$batchId").toString)
-          maintain(prev, slice, pruned)
-            .write.mode("overwrite")
-            .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
-        }
-        // 5) truncate consumed state (only AFTER this batch's outputs
-        //    committed): on compaction, the absorbed slices + the
-        //    superseded snapshot
-        if (compactNow) {
-          (snapV to batchId).foreach(b => rm(logDir.resolve(s"b$b")))
-          rm(prevSnapDir)
-        }
-        ()
+    replay(ss, root, deltas, orderCol, chunks) { (sb, batchId, sliceDir) =>
+      val slice = sb.read.schema(sliceSchema).parquet(sliceDir.toString)
+      // compact: s{batchId+1} = s{batchId} ⊎ this slice. A retry that
+      // fires AFTER its own compaction already committed s{batchId+1}
+      // finds that snapshot live and reuses it — the view step still
+      // recomputes v{batchId+1} from identical inputs
+      val compact = base.version == batchId
+      if (compact) phase(sb.sparkContext, s"b$batchId compact") {
+        base.compact(sb, batchId, slice)
+      }
+      // advance view v{batchId} -> v{batchId+1}; the maintain step
+      // only rescans delete-touched groups, so hand it the new base
+      // pruned to those groups
+      phase(sb.sparkContext, s"b$batchId view") {
+        val negKeys = slice.filter(col("w") < 0)
+          .select(groupCols.map(col): _*).distinct()
+        val pruned = base.rowsInBucketsOf(sb, batchId + 1, negKeys)
+          .join(negKeys, groupCols, "left_semi")
+        val prev = sb.read.schema(viewSchema)
+          .parquet(viewDir.resolve(s"v$batchId").toString)
+        maintain(prev, slice, pruned)
+          .write.mode("overwrite")
+          .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
+      }
+      // truncate consumed state only AFTER this batch's outputs commit
+      if (compact) { rm(sliceDir); base.truncate(batchId) }
     }
     spark.read.parquet(
       viewDir.resolve(s"v${maxVersion(viewDir)}").toString)
   }
 
-  /** Write a snapshot version — flat single directory, or
-    * `partitionBy("gb")` hash-bucketed when `buckets` is set. The
-    * bucketed form repartitions ON the bucket first so each bucket
-    * lands as ONE file: without it every input task fans out a file
-    * per bucket it sees (task-count × bucket-count small files), and
-    * the listing + open cost of that fan-out was measured to cost
-    * more than the pruning saved. */
-  private def writeSnap(d: DataFrame, gb: Column, buckets: Option[Int],
-      dir: Path): Unit = buckets match {
-    case Some(_) => d.withColumn("gb", gb).repartition(col("gb"))
-      .write.mode("overwrite").partitionBy("gb").parquet(dir.toString)
-    case None => d.write.mode("overwrite").parquet(dir.toString)
-  }
+  /** One versioned side of the maintained state: snapshot versions
+    * `s<N>` under `dir` (the side's rows after batch N−1), each read
+    * back with its schema pinned.
+    *
+    * `buckets = Some(n)` lays each version out hash-bucketed on
+    * `bucketCols` (`gb = pmod(hash(bucketCols), n)`, written
+    * `partitionBy("gb")`): a slice row can only affect the bucket its
+    * own `bucketCols` hash to, so compaction reconciles ONLY the
+    * slice-touched buckets and carries the untouched bucket dirs into
+    * the new version as hard links — the production-lake shape where
+    * the O(base) rewrite becomes O(touched buckets) under skewed churn.
+    *
+    * EVERY read pins the schema: the bucketed layout needs it for
+    * correctness (a bucket whose every row was deleted leaves no
+    * schema-bearing part file), and the flat reads need it for SPEED —
+    * each schema inference is a footer-reading Spark job, and the loops
+    * re-read snapshots every batch (OPTIMIZATION_r16.md). Pinned
+    * schemas are nullable-widened: column names/types are what the
+    * oracle gate compares; nullability flags never reach the declared
+    * result (the final view read stays inference-based). */
+  private final class SideStore(dir: Path, schema: StructType,
+      bucketCols: Seq[String], buckets: Option[Int]) {
+    require(buckets.forall(_ >= 1), "snapshotBuckets must be >= 1")
+    private val cols = schema.fieldNames.toSeq
+    private val pinned = buckets.fold(widen(schema))(_ =>
+      widen(schema).add("gb", IntegerType))
+    Files.createDirectories(dir)
 
-  /** Carry the bucket directories the compaction did NOT touch from
-    * the previous snapshot into the new one — hard links (same-device
-    * scratch: metadata-only, no data copied), falling back to a file
-    * copy if the filesystem refuses the link. This is what turns the
-    * per-compaction snapshot rewrite from O(base) into O(touched). */
-  private def linkUntouchedBuckets(prevDir: Path, newDir: Path,
-      touched: Set[Int]): Unit = {
-    val ls = Files.list(prevDir)
-    try ls.iterator().forEachRemaining { bdir =>
-      val name = bdir.getFileName.toString
-      if (name.startsWith("gb=") &&
-          !touched.contains(name.stripPrefix("gb=").toInt)) {
-        val dst = Files.createDirectories(newDir.resolve(name))
-        val fs = Files.list(bdir)
-        try fs.iterator().forEachRemaining { f =>
-          val t = dst.resolve(f.getFileName.toString)
-          try Files.createLink(t, f)
-          catch { case _: Exception =>
-            Files.copy(f, t,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING) }
-        } finally fs.close()
+    private def path(v: Long): Path = dir.resolve(s"s$v")
+    private def bucketOf(d: DataFrame): Column =
+      pmod(hash(bucketCols.map(d(_)): _*), lit(buckets.get))
+    private def bucketsOf(d: DataFrame): Seq[Int] =
+      d.select(bucketOf(d).as("gb")).distinct()
+        .collect().map(_.getInt(0)).toSeq // ≤ n values by construction
+    private def read(sb: SparkSession, v: Long): DataFrame =
+      sb.read.schema(pinned).parquet(path(v).toString)
+    private def rowsIn(sb: SparkSession, v: Long, bs: Seq[Int]): DataFrame =
+      read(sb, v).filter(col("gb").isin(bs: _*)).select(cols.map(col): _*)
+
+    /** Highest version present. */
+    def version: Long = maxVersion(dir, "s")
+
+    /** The rows of version `v`. */
+    def rows(sb: SparkSession, v: Long): DataFrame =
+      read(sb, v).select(cols.map(col): _*)
+
+    /** The rows of version `v` in the buckets `keys` (carrying
+      * `bucketCols`) hash to — every row under the flat layout. */
+    def rowsInBucketsOf(sb: SparkSession, v: Long,
+        keys: DataFrame): DataFrame =
+      if (buckets.isEmpty) rows(sb, v) else rowsIn(sb, v, bucketsOf(keys))
+
+    /** Write version 0. */
+    def seed(d: DataFrame): Unit = write(d, 0)
+
+    /** Write version `v`+1 = version `v` ⊎ `slice` (signed rows
+      * carrying this side's columns and `w`). */
+    def compact(sb: SparkSession, v: Long, slice: DataFrame): Unit =
+      if (buckets.isEmpty) write(applyDelta(rows(sb, v), slice, cols), v + 1)
+      else {
+        val touched = bucketsOf(slice)
+        write(applyDelta(rowsIn(sb, v, touched), slice, cols), v + 1)
+        linkUntouched(v, touched.toSet)
       }
-    } finally ls.close()
+
+    /** Delete version `v`. */
+    def truncate(v: Long): Unit = rm(path(v))
+
+    /** Flat: one directory. Bucketed: repartitioned ON the bucket
+      * first so each bucket lands as ONE file — without it every input
+      * task fans out a file per bucket it sees (task-count ×
+      * bucket-count small files), and the listing + open cost of that
+      * fan-out was measured to cost more than the pruning saved. */
+    private def write(d: DataFrame, v: Long): Unit =
+      if (buckets.isEmpty) d.write.mode("overwrite").parquet(path(v).toString)
+      else d.withColumn("gb", bucketOf(d)).repartition(col("gb"))
+        .write.mode("overwrite").partitionBy("gb").parquet(path(v).toString)
+
+    /** Carry the bucket dirs of version `v` the compaction did NOT
+      * touch into version `v`+1 — hard links (same-device scratch:
+      * metadata-only, no data copied), falling back to a file copy if
+      * the filesystem refuses the link. This is what turns the
+      * per-compaction rewrite from O(base) into O(touched). */
+    private def linkUntouched(v: Long, touched: Set[Int]): Unit = {
+      val ls = Files.list(path(v))
+      try ls.iterator().forEachRemaining { bdir =>
+        val name = bdir.getFileName.toString
+        if (name.startsWith("gb=") &&
+            !touched.contains(name.stripPrefix("gb=").toInt)) {
+          val dst = Files.createDirectories(path(v + 1).resolve(name))
+          val fs = Files.list(bdir)
+          try fs.iterator().forEachRemaining { f =>
+            val t = dst.resolve(f.getFileName.toString)
+            try Files.createLink(t, f)
+            catch { case _: Exception =>
+              Files.copy(f, t,
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING) }
+          } finally fs.close()
+        }
+      } finally ls.close()
+    }
   }
 
   /** TWO-INPUT continuous maintenance of an aggregate-over-join view —
@@ -368,10 +304,10 @@ object ViewMaintain {
     * the loop splits the batch into ΔA/ΔB, derives the join-view delta
     * against the PRE-batch snapshots (`Δ(A⋈B) = ΔA⋈A-side-old's B ∪
     * A_old⋈ΔB ∪ ΔA⋈ΔB`), merges it into the versioned view with
-    * [[ViewOps.maintainSumView]], and then compacts both base
-    * snapshots. The view never touches either base table — its merge
-    * is delta-sized; only the snapshot compaction reads the bases,
-    * once each, shuffle-free.
+    * [[ViewOps.maintainSumView]], and then compacts both side stores.
+    * The view never touches either base table — its merge is
+    * delta-sized; only the snapshot compaction reads the bases, once
+    * each, shuffle-free.
     *
     * `viewGroupCols`/`viewSumCols` must be drawn from
     * `joinKeys ++ aVals ++ bVals` (the join-delta output columns).
@@ -382,27 +318,18 @@ object ViewMaintain {
     *   side (AQE does this at real delta/base ratios), ΔA⋈ΔB is
     *   delta×delta, and the sum-view merge is touched-group-sized —
     *   the fact⋈dim rollup refreshed continuously at delta cost while
-    *   BOTH tables change under it. `compactEvery` amortizes the two
-    *   per-batch snapshot rewrites exactly as in
-    *   [[maintainCustomViewStream]]: between compactions the
-    *   pre-batch live sides are reconstructed lazily from snapshot +
-    *   bounded pending slices. `snapshotBuckets` carries the
-    *   single-table loop's bucketed layout to BOTH side snapshots
-    *   (bucket = hash of the side's full payload): compaction
-    *   reconciles only pending-touched buckets and hard-links the
-    *   rest — O(touched) rewrite per side under skewed churn, same
-    *   hashes (`ViewOpsSpec`). */
+    *   BOTH tables change under it. `snapshotBuckets` buckets BOTH
+    *   side stores, each on its side's full payload: compaction
+    *   reconciles only slice-touched buckets and hard-links the rest —
+    *   O(touched) rewrite per side under skewed churn, same hashes
+    *   (`ViewOpsSpec`). */
   def maintainJoinViewStream(spark: SparkSession,
       oldA: DataFrame, deltaA: DataFrame,
       oldB: DataFrame, deltaB: DataFrame,
       orderCol: String, chunks: Int, joinKeys: Seq[String],
       aVals: Seq[String], bVals: Seq[String],
       viewGroupCols: Seq[String], viewSumCols: Seq[String],
-      compactEvery: Int = 1, shufflePartitions: Int = 8,
       snapshotBuckets: Option[Int] = None): DataFrame = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    require(shufflePartitions >= 1, "shufflePartitions must be >= 1")
-    require(snapshotBuckets.forall(_ >= 1), "snapshotBuckets must be >= 1")
     val aCols = oldA.columns.toSeq
     val bCols = oldB.columns.toSeq
     require(deltaA.columns.toSet == aCols.toSet + "w" &&
@@ -411,12 +338,6 @@ object ViewMaintain {
     val joinOutCols = (joinKeys ++ aVals ++ bVals).toSet
     require((viewGroupCols ++ viewSumCols).forall(joinOutCols),
       s"view columns must come from the join-delta output $joinOutCols")
-    def buildJoinView(a: DataFrame, b: DataFrame): DataFrame = {
-      val aggs = Seq(count(lit(1)).as("cnt")) ++
-        viewSumCols.map(c => sum(col(c)).as("sum_" + c))
-      a.join(b, joinKeys).groupBy(viewGroupCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-    }
     // an empty two-sided changelog replays no batches (detected for
     // free in the staging bounds pass) — version 0 is the result
     require((aCols ++ bCols).contains(orderCol),
@@ -434,14 +355,14 @@ object ViewMaintain {
           else lit(null).cast(colType(c)).as(c)) :+ col("w"): _*)
     val envelope = pad(deltaA, "A", aCols.toSet)
       .unionByName(pad(deltaB, "B", bCols.toSet))
+    val envSchema = widen(envelope.schema)
 
     val root = graft.Scratch.dir("graft-join-view-maintain")
-    val logDir = root.resolve("log")
-    val snapADir = root.resolve("snapA")
-    val snapBDir = root.resolve("snapB")
-    val viewDir = root.resolve("view")
-    Seq(logDir, snapADir, snapBDir, viewDir)
-      .foreach(Files.createDirectories(_))
+    val viewDir = Files.createDirectories(root.resolve("view"))
+    val storeA = new SideStore(root.resolve("snapA"), oldA.schema, aCols,
+      snapshotBuckets)
+    val storeB = new SideStore(root.resolve("snapB"), oldB.schema, bCols,
+      snapshotBuckets)
 
     // AQE stays ON in this loop, unlike the single-table one. Measured
     // with it off (replay bench, stream_join_view_replay): Spark jobs
@@ -449,135 +370,49 @@ object ViewMaintain {
     // the compaction shuffles' partitions) and the compact phase rose
     // 1.74 -> 2.58 s; the workload's wall time was not faster over 3
     // before/after pairs.
-    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
-
-    // per-side bucketing (the single-table loop's snapshotBuckets,
-    // keyed on the side's FULL payload — a slice row can only affect
-    // the bucket its own payload hashes to, so compaction reconciles
-    // ONLY the pending-touched buckets and hard-links the rest)
-    def gbOfSide(d: DataFrame, cols: Seq[String]): Column =
-      snapshotBuckets.fold(lit(0))(nb =>
-        pmod(hash(cols.map(d(_)): _*), lit(nb)))
-    // schemas pinned on every internal read — same correctness/speed
-    // reasoning as the single-table loop (inference is a Spark job per
-    // read; nullability is widened and never reaches the result)
-    def widen(s: StructType): StructType =
-      StructType(s.fields.map(_.copy(nullable = true)))
-    def sideSchema(old: DataFrame) = StructType(widen(old.schema).fields :+
-      org.apache.spark.sql.types.StructField("gb",
-        org.apache.spark.sql.types.IntegerType))
-    val (schemaA, schemaB) = (sideSchema(oldA), sideSchema(oldB))
-    val (flatA, flatB) = (widen(oldA.schema), widen(oldB.schema))
-    val envSchema = widen(envelope.schema)
-    def readSide(sb: SparkSession, dir: Path,
-        schema: StructType): DataFrame =
-      if (snapshotBuckets.isDefined) sb.read.schema(schema).parquet(dir.toString)
-      else sb.read.schema(if (schema eq schemaA) flatA else flatB)
-        .parquet(dir.toString)
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
 
     phase(spark.sparkContext, "seed snapshot") {
-      writeSnap(oldA, gbOfSide(oldA, aCols), snapshotBuckets,
-        snapADir.resolve("s0"))
-      writeSnap(oldB, gbOfSide(oldB, bCols), snapshotBuckets,
-        snapBDir.resolve("s0"))
+      storeA.seed(oldA)
+      storeB.seed(oldB)
     }
     val viewSchema = phase(ss.sparkContext, "seed view") {
-      val v0 = buildJoinView(
-        readSide(ss, snapADir.resolve("s0"), schemaA)
-          .select(aCols.map(col): _*),
-        readSide(ss, snapBDir.resolve("s0"), schemaB)
-          .select(bCols.map(col): _*))
+      val v0 = storeA.rows(ss, 0).join(storeB.rows(ss, 0), joinKeys)
+        .groupBy(viewGroupCols.map(col): _*)
+        .agg(count(lit(1)).as("cnt"),
+          viewSumCols.map(c => sum(col(c)).as("sum_" + c)): _*)
       v0.write.parquet(viewDir.resolve("v0").toString)
       widen(v0.schema)
     }
 
-    replayChunks(ss, root, envelope, orderCol, chunks) {
-      (batch: DataFrame, batchId: Long) =>
-        val sb = batch.sparkSession
-        // 1) WAL slice (both sides together — the transaction); keeps
-        //    the micro-batch's source partitioning (see the
-        //    single-table loop for why the old repartition(2) was a
-        //    per-batch shuffle for nothing)
-        val sliceDir = logDir.resolve(s"b$batchId")
-        phase(sb.sparkContext, s"b$batchId slice") {
-          batch.write.mode("overwrite").parquet(sliceDir.toString)
-        }
-        val slice = sb.read.schema(envSchema).parquet(sliceDir.toString)
-        def sideOf(d: DataFrame, side: String, cols: Seq[String]) =
-          d.filter(col("side") === side).select((cols :+ "w").map(col): _*)
-        val dA = sideOf(slice, "A", aCols)
-        val dB = sideOf(slice, "B", bCols)
-        // 2) join-view delta against the PRE-batch live sides (latest
-        //    snapshot ⊎ pending slices STRICTLY BEFORE this batch),
-        //    merged into the versioned view — no base access beyond
-        //    the two delta-sided join terms
-        val snapV = maxVersion(snapADir, "s")
-        val pendingPrev = (snapV until batchId).map(b =>
-          logDir.resolve(s"b$b").toString).filter(p =>
-          Files.isDirectory(java.nio.file.Paths.get(p)))
-        def liveSide(snapSideDir: Path, side: String,
-            cols: Seq[String], schema: StructType): DataFrame = {
-          val snap = readSide(sb, snapSideDir.resolve(s"s$snapV"), schema)
-            .select(cols.map(col): _*)
-          if (pendingPrev.isEmpty) snap
-          else applyDelta(snap,
-            sideOf(sb.read.schema(envSchema).parquet(pendingPrev: _*),
-              side, cols), cols)
-        }
-        val prevA = liveSide(snapADir, "A", aCols, schemaA)
-        val prevB = liveSide(snapBDir, "B", bCols, schemaB)
-        val dJ = ViewOps.joinViewDeltas(prevA, dA, prevB, dB,
-          joinKeys, aVals, bVals)
-        val prevV = sb.read.schema(viewSchema)
-          .parquet(viewDir.resolve(s"v$batchId").toString)
-        phase(sb.sparkContext, s"b$batchId view") {
-          ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
-            .write.mode("overwrite")
-            .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
-        }
-        // 3) compact both snapshots on cadence, then truncate the
-        //    absorbed slices + superseded snapshots. Bucketed layout:
-        //    fold the WHOLE pending range (strictly-before slices +
-        //    this batch) into only its touched buckets and hard-link
-        //    the rest from the last file-backed snapshot — rewrite
-        //    mass ∝ touched churn per side, as in the single-table
-        //    loop.
-        if (batchId + 1 - snapV >= compactEvery) phase(sb.sparkContext,
-            s"b$batchId compact") {
-          def compactSide(snapSideDir: Path, side: String,
-              cols: Seq[String], schema: StructType,
-              prevLive: DataFrame, dSide: DataFrame): Unit = {
-            val newDir = snapSideDir.resolve(s"s${batchId + 1}")
-            snapshotBuckets match {
-              case Some(_) =>
-                val pendingAll = (snapV to batchId).map(b =>
-                  logDir.resolve(s"b$b").toString).filter(pp =>
-                  Files.isDirectory(java.nio.file.Paths.get(pp)))
-                val dAll = sideOf(
-                  sb.read.schema(envSchema).parquet(pendingAll: _*),
-                  side, cols)
-                val touched = dAll.select(gbOfSide(dAll, cols).as("gb"))
-                  .distinct().collect().map(_.getInt(0)).toSet
-                val prevDir = snapSideDir.resolve(s"s$snapV")
-                val snapTouched = readSide(sb, prevDir, schema)
-                  .filter(col("gb").isin(touched.toSeq: _*))
-                  .select(cols.map(col): _*)
-                val reconciled = applyDelta(snapTouched, dAll, cols)
-                writeSnap(reconciled, gbOfSide(reconciled, cols),
-                  snapshotBuckets, newDir)
-                linkUntouchedBuckets(prevDir, newDir, touched)
-              case None =>
-                applyDelta(prevLive, dSide, cols).write.mode("overwrite")
-                  .parquet(newDir.toString)
-            }
-          }
-          compactSide(snapADir, "A", aCols, schemaA, prevA, dA)
-          compactSide(snapBDir, "B", bCols, schemaB, prevB, dB)
-          (snapV to batchId).foreach(b => rm(logDir.resolve(s"b$b")))
-          rm(snapADir.resolve(s"s$snapV"))
-          rm(snapBDir.resolve(s"s$snapV"))
-        }
-        ()
+    replay(ss, root, envelope, orderCol, chunks) { (sb, batchId, sliceDir) =>
+      val slice = sb.read.schema(envSchema).parquet(sliceDir.toString)
+      def sideOf(side: String, cols: Seq[String]) =
+        slice.filter(col("side") === side).select((cols :+ "w").map(col): _*)
+      val dA = sideOf("A", aCols)
+      val dB = sideOf("B", bCols)
+      // join-view delta against the PRE-batch sides (the latest
+      // snapshots), merged into the versioned view — no base access
+      // beyond the two delta-sided join terms
+      val v = storeA.version
+      val dJ = ViewOps.joinViewDeltas(storeA.rows(sb, v), dA,
+        storeB.rows(sb, v), dB, joinKeys, aVals, bVals)
+      val prevV = sb.read.schema(viewSchema)
+        .parquet(viewDir.resolve(s"v$batchId").toString)
+      phase(sb.sparkContext, s"b$batchId view") {
+        ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
+          .write.mode("overwrite")
+          .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
+      }
+      // compact both side stores with this batch's slice, then
+      // truncate the slice and the superseded snapshots
+      if (v == batchId) phase(sb.sparkContext, s"b$batchId compact") {
+        storeA.compact(sb, v, dA)
+        storeB.compact(sb, v, dB)
+        rm(sliceDir)
+        storeA.truncate(v)
+        storeB.truncate(v)
+      }
     }
     spark.read.parquet(
       viewDir.resolve(s"v${maxVersion(viewDir)}").toString)
@@ -628,61 +463,44 @@ object ViewMaintain {
   }
 
   /** Stage `deltas` into `chunks` range-ordered micro-batches over
-    * `orderCol` and replay them through a foreachBatch stream, calling
-    * `onBatch` per micro-batch. Blocks until all chunks are consumed. */
-  private def replayChunks(ss: SparkSession, root: Path,
-      deltas: DataFrame, orderCol: String, chunks: Int)(
-      onBatch: (DataFrame, Long) => Unit): Unit = {
-    val src = Files.createDirectories(root.resolve("src")).toString
-    val ckpt = root.resolve("ckpt").toString
+    * `orderCol` ([[BoundedReplay.stage]]) and feed them to a
+    * foreachBatch stream ([[BoundedReplay.feed]]) in `ss`. Each batch
+    * first commits its batchId-keyed slice to `root/log` — the WAL:
+    * a replayed batch overwrites its own slice — then runs `step` on
+    * (batch session, batchId, slice dir). Blocks until every chunk is
+    * consumed; an empty changelog stages nothing and runs no batch. */
+  private def replay(ss: SparkSession, root: Path, deltas: DataFrame,
+      orderCol: String, chunks: Int)(
+      step: (SparkSession, Long, Path) => Unit): Unit = {
     // the changelog (often a full-outer rowDeltas join) is consumed
     // twice — the bounds agg and the staging write — so cache it once
-    val sc = deltas.sparkSession.sparkContext
-    sc.setJobDescription("vm: staging")
-    val d = deltas.persist()
-    val b = d.agg(min(col(orderCol)).as("lo"),
-      max(col(orderCol)).as("hi")).head()
-    // empty changelog: nothing to stage or replay — the seeded version
-    // 0 (built from the base snapshot) is already the final view
-    if (b.isNullAt(0)) { d.unpersist(); sc.setJobDescription(null); return }
-    val (lo, span) =
-      (b.getLong(0), math.max(1L, b.getLong(1) - b.getLong(0) + 1L))
-    val bucket = coalesce(least(lit(chunks - 1),
-      floor((col(orderCol) - lit(lo)) * lit(chunks.toLong) / lit(span)))
-      .cast("int"), lit(0))
-    val stage = root.resolve("stage")
-    d.withColumn("ck", bucket).repartition(col("ck"))
-      .write.partitionBy("ck").parquet(stage.toString)
-    d.unpersist()
-    sc.setJobDescription(null)
-    val deltaSchema = StructType(deltas.schema.fields)
-
-    val q = ss.readStream.schema(deltaSchema).parquet(src)
-      .writeStream
-      .foreachBatch(onBatch)
-      .option("checkpointLocation", ckpt).start()
-    try {
-      (0 until chunks).foreach { i =>
-        val dir = stage.resolve(s"ck=$i")
-        if (Files.isDirectory(dir)) {
-          val listing = Files.list(dir)
-          try {
-            val files = listing.iterator()
-            var j = 0
-            while (files.hasNext) {
-              val f = files.next()
-              if (f.getFileName.toString.endsWith(".parquet")) {
-                Files.move(f,
-                  java.nio.file.Paths.get(src, s"chunk_${i}_$j.parquet"))
-                j += 1
-              }
-            }
-          } finally listing.close()
-          q.processAllAvailable()
+    val staged = phase(deltas.sparkSession.sparkContext, "staging") {
+      val d = deltas.persist()
+      try BoundedReplay.stage(d, col(orderCol), chunks)
+      finally d.unpersist()
+    }
+    staged.foreach { stage =>
+      val src = Files.createDirectories(root.resolve("src"))
+      val logDir = root.resolve("log")
+      // the slice keeps the micro-batch's source partitioning (the file
+      // source already splits a large chunk by maxPartitionBytes, so a
+      // big delta batch is not single-writer)
+      val onBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
+        val sliceDir = logDir.resolve(s"b$batchId")
+        phase(batch.sparkSession.sparkContext, s"b$batchId slice") {
+          batch.write.mode("overwrite").parquet(sliceDir.toString)
         }
+        step(batch.sparkSession, batchId, sliceDir)
       }
-    } finally q.stop()
+      BoundedReplay.feed(ss.readStream.schema(deltas.schema)
+        .parquet(src.toString).writeStream.foreachBatch(onBatch)
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .start(), stage, chunks, src)
+    }
   }
+
+  private def widen(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
 
   /** Run `f` with its Spark jobs labelled `vm: <name>` — the phase
     * names the traced benchmark splits the loops' time by. */

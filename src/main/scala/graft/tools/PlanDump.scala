@@ -38,7 +38,7 @@ object PlanDump {
       sb.append(plan.trim).append("\n```\n")
     }
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
+      java.nio.file.Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md written (${keys.size} keys)")
     spark.stop()
   }

@@ -209,8 +209,9 @@ class ViewOpsSpec extends SparkSpec {
       (4L, 1L, 60L)).toDF("k", "i", "v")
     val dA = ViewOps.rowDeltas(oldA, newA, Seq("k"), Seq("g"))
     val dB = ViewOps.rowDeltas(oldB, newB, Seq("k", "i"), Seq("v"))
-    val got = graft.streaming.ViewMaintain.maintainJoinViewStream(
-        spark, oldA, dA, oldB, dB, orderCol = "k", chunks = 3,
+    def run(chunks: Int) =
+      graft.streaming.ViewMaintain.maintainJoinViewStream(
+        spark, oldA, dA, oldB, dB, orderCol = "k", chunks = chunks,
         joinKeys = Seq("k"), aVals = Seq("g"), bVals = Seq("v"),
         viewGroupCols = Seq("g"), viewSumCols = Seq("v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -219,18 +220,11 @@ class ViewOpsSpec extends SparkSpec {
       .agg(count(lit(1)).as("cnt"), sum("v").as("sum_v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
+    val got = run(3)
     assert(got == want && !got.exists(_._1 == "z"))
-    // cadence-independence on the two-input loop: the deferred form
-    // must reconstruct BOTH pre-batch live sides from snapshot +
-    // pending slices before deriving the three-term delta
-    val amortized = graft.streaming.ViewMaintain.maintainJoinViewStream(
-        spark, oldA, dA, oldB, dB, orderCol = "k", chunks = 3,
-        joinKeys = Seq("k"), aVals = Seq("g"), bVals = Seq("v"),
-        viewGroupCols = Seq("g"), viewSumCols = Seq("v"),
-        compactEvery = 2)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    assert(amortized == want, "join-view cadence drifted")
+    // more chunks than the changelog's 4 distinct keys: the empty
+    // ranges stage no chunk dir and the feeder must skip them
+    assert(run(9) == want, "join view drifted over absent chunk dirs")
   }
 
   test("streaming maintainers short-circuit on an EMPTY changelog") {
@@ -294,38 +288,24 @@ class ViewOpsSpec extends SparkSpec {
         sum("x").as("sum_x"), min("x").as("min_x"), max("x").as("max_x")),
       deltas, newS, Seq("grp"), Seq("x"), Seq("x"))
       .collect().map(_.toSeq).toSet
-    val streamed = graft.streaming.ViewMaintain.maintainViewStream(
-        spark, oldS, deltas, orderCol = "id", chunks = 3,
-        groupCols = Seq("grp"), sumCols = Seq("x"), minMaxCols = Seq("x"))
-      .collect().map(_.toSeq).toSet
-    assert(streamed == batch)
-  }
-
-  test("compaction cadence is invisible to the view (compactEvery 1 == 2 == chunks)") {
-    // delete + re-insert of the SAME payload split ACROSS batches —
-    // the case where deferred compaction must net the pending slices
-    // correctly instead of failing one slice's lone -1 as an
-    // over-delete against an unrefreshed snapshot
-    def run(every: Int) = graft.streaming.ViewMaintain
+    def streamed(chunks: Int) = graft.streaming.ViewMaintain
       .maintainViewStream(spark, oldS, deltas, orderCol = "id",
-        chunks = 3, groupCols = Seq("grp"), sumCols = Seq("x"),
-        minMaxCols = Seq("x"), compactEvery = every)
+        chunks = chunks, groupCols = Seq("grp"), sumCols = Seq("x"),
+        minMaxCols = Seq("x"))
       .collect().map(_.toSeq).toSet
-    val everyBatch = run(1)
-    assert(run(2) == everyBatch, "amortized cadence drifted")
-    assert(run(3) == everyBatch, "compact-once-at-end drifted")
+    assert(streamed(3) == batch)
+    // more chunks than the changelog's 5 distinct ids: the empty
+    // ranges stage no chunk dir and the feeder must skip them
+    assert(streamed(12) == batch, "view drifted over absent chunk dirs")
   }
 
   test("bucketed snapshot layout (snapshotBuckets) is invisible to the view") {
-    def run(buckets: Option[Int], every: Int) = graft.streaming.ViewMaintain
+    def run(buckets: Option[Int]) = graft.streaming.ViewMaintain
       .maintainViewStream(spark, oldS, deltas, orderCol = "id",
         chunks = 3, groupCols = Seq("grp"), sumCols = Seq("x"),
-        minMaxCols = Seq("x"), compactEvery = every,
-        snapshotBuckets = buckets)
+        minMaxCols = Seq("x"), snapshotBuckets = buckets)
       .collect().map(_.toSeq).toSet
-    val flat = run(None, 1)
-    assert(run(Some(4), 1) == flat, "bucketed compaction drifted")
-    assert(run(Some(4), 2) == flat, "bucketed + deferred cadence drifted")
+    assert(run(Some(4)) == run(None), "bucketed compaction drifted")
   }
 
   test("join maintainer: bucketed side snapshots are invisible to the view") {
@@ -337,16 +317,14 @@ class ViewOpsSpec extends SparkSpec {
       (4L, 1L, 60L)).toDF("k", "i", "v")
     val dA = ViewOps.rowDeltas(oldA, newA, Seq("k"), Seq("g"))
     val dB = ViewOps.rowDeltas(oldB, newB, Seq("k", "i"), Seq("v"))
-    def run(buckets: Option[Int], every: Int) =
+    def run(buckets: Option[Int]) =
       graft.streaming.ViewMaintain.maintainJoinViewStream(
         spark, oldA, dA, oldB, dB, orderCol = "k", chunks = 3,
         joinKeys = Seq("k"), aVals = Seq("g"), bVals = Seq("v"),
         viewGroupCols = Seq("g"), viewSumCols = Seq("v"),
-        compactEvery = every, snapshotBuckets = buckets)
+        snapshotBuckets = buckets)
       .collect().map(_.toSeq).toSet
-    val flat = run(None, 1)
-    assert(run(Some(4), 1) == flat, "bucketed join-view drifted")
-    assert(run(Some(4), 2) == flat, "bucketed + deferred cadence drifted")
+    assert(run(Some(4)) == run(None), "bucketed join-view drifted")
   }
 
   test("bucketed compaction under skewed churn: untouched buckets carried exactly") {

@@ -246,4 +246,20 @@ class SimilaritySpec extends SparkSpec {
     assert(planted.subsetOf(found),
       s"missed ${(planted -- found).size} of 50 planted strong dups")
   }
+
+  test("normed drops vectors whose norm is zero, NaN or infinite") {
+    import spark.implicits._
+    // Spark orders NaN above every double, so a `nrm > 0` filter alone
+    // keeps the NaN and Inf norms and their cosines come out NaN
+    val df = Seq(
+      (1L, Seq(1.0f, 2.0f)), (2L, Seq(0.0f, 0.0f)),
+      (3L, Seq(Float.NaN, 1.0f)), (4L, Seq(Float.PositiveInfinity, 1.0f)),
+      (5L, Seq(Float.NegativeInfinity, 0.0f)), (6L, Seq(3.0f, 4.0f))
+    ).toDF("vec_id", "embedding")
+    val kept = graft.operators.SimilarityOps.normed(df)
+      .select("vec_id", "nrm").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(kept.keySet == Set(1L, 6L))
+    assert(kept(6L) == 5.0)
+  }
 }
