@@ -1,51 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: run two representative queries through the same
-    // full-evaluation path (scan → decimal agg → sort) so the first
-    // timed queries aren't charged cold-JIT/codegen setup (measured:
-    // ~10x inflation on whichever real query runs first otherwise).
-    try {
-      SparkEntry.queries("agg_pricing_summary")(spark, sfDir).queryExecution.toRdd.count()
-      SparkEntry.queries("proj_compute")(spark, sfDir).queryExecution.toRdd.count()
-    } catch { case _: Throwable => () }
-    def stealJiffies(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().find(_.startsWith("cpu "))
-          .map(_.trim.split("\\s+")(8).toLong).getOrElse(0L)
-        finally src.close()
-      } catch { case _: Throwable => 0L }
-    def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
-      val s0 = stealJiffies()
-      val t0 = System.nanoTime()
-      // Execute the query's OWN plan (toRdd): df.count() would wrap the
-      // plan in a count aggregate and let Catalyst prune the projected
-      // columns and eliminate sorts — timing a row-count scan instead of
-      // the operator under test.
-      val ok =
-        try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      // -1 marks a failed query so a crashing key can never IMPROVE the
-      // reported total (it previously counted its partial elapsed time)
-      val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      (dt, stealJiffies() - s0)
-    }
+    GraftSession.warmUp(spark, sfDir)
+    def timeOne(name: String) = GraftSession.timeKey(spark, sfDir, name, "bench")
     // Host-speed calibration: a fixed single-thread integer loop whose
     // time depends only on how fast this VM actually runs (frequency /
     // cache / neighbor pressure), never on Spark or data. Future rounds
@@ -73,9 +34,9 @@ object Bench {
       dt
     }
     val calib = calibrate()
-    val steal0 = stealJiffies()
-    val firstPass = SparkEntry.queries.map { case (name, fn) =>
-      name -> timeOne(name, fn)
+    val steal0 = GraftSession.stealJiffies()
+    val firstPass = SparkEntry.queries.map { case (name, _) =>
+      name -> timeOne(name)
     }
     // Host-neighbor CPU steal on this microVM sporadically inflates
     // single keys up to 10x (BASELINE.md "variance"). A slow key gets
@@ -105,16 +66,17 @@ object Bench {
         Map.empty
       }
     var rerunsLeft = 6
-    val results = firstPass.map { case (name, (t1, st1)) =>
-      val stormy = st1 > 5 * t1
+    val results = firstPass.map { case (name, first) =>
+      val t1 = first.seconds
+      val stormy = first.steal > 5 * t1
       val farOverRef = quietRef.get(name).exists(r => t1 > 3 * r)
       if (t1 > 2.5 && (stormy || farOverRef) && rerunsLeft > 0) {
         rerunsLeft -= 1
-        val (t2, _) = timeOne(name, SparkEntry.queries(name))
+        val t2 = timeOne(name).seconds
         name -> (if (t2 < 0) t1 else math.min(t1, t2)) // a crashed re-run can't hide a real first run
       } else name -> t1
     }
-    val stealD = stealJiffies() - steal0
+    val stealD = GraftSession.stealJiffies() - steal0
     // The driver records only a 2000-char TAIL of stdout and parses the
     // JSON line out of it (r1's 77-key full-precision line overflowed
     // the window and head-truncated → "parsed": null). So: print ONE

@@ -13,8 +13,9 @@ import java.util.Comparator
   * otherwise. On tmpfs the bytes are cheap; what the bounded replay
   * keys still paid per checkpoint file was Hadoop's local filesystem
   * starting a `chmod`/`readlink` process (about 7 ms per mkdir plus
-  * create against 0.04 ms through `java.nio`), which the micro-batch
-  * sessions avoid through [[graft.streaming.LocalFs]]. Scratch roots
+  * create against 0.04 ms through `java.nio`), which every
+  * [[graft.GraftSession]] session and every micro-batch session avoid
+  * through [[graft.streaming.LocalFs]]. Scratch roots
   * are deleted by a JVM shutdown hook (tmpfs pages are RAM — leaking
   * them across a long bench run would be a memory leak, not a disk
   * leak).

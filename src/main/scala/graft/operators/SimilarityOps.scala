@@ -1329,10 +1329,10 @@ object SimilarityOps {
     val spark = typed.sparkSession
     import spark.implicits._
     // Seeds: the nCells lowest ids. An id-hash SPREAD was tried and
-    // measured strictly worse on both fixtures (RecallProbe: 0.46/0.68
-    // vs 0.84/1.00) — Lloyd refinement recovers distribution shape from
-    // any deterministic seed, and low-id seeds keep the probe recall
-    // bound reproducible.
+    // measured strictly worse on both fixtures (SCALE.md, "IVF recall":
+    // 0.46/0.68 vs 0.84/1.00) — Lloyd refinement recovers distribution
+    // shape from any deterministic seed, and low-id seeds keep the probe
+    // recall bound reproducible.
     var cents = typed.orderBy("vec_id").limit(nCells).collect()
       .map { case (id, v, nr) => (id, v.toArray, nr) }
     for (_ <- 1 to refineIters if cents.nonEmpty) {

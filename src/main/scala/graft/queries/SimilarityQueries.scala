@@ -650,9 +650,10 @@ object SimilarityQueries {
   /** The full production ANN stack: coarse cells prune, PQ codes
     * compress, exact pass re-ranks. Rows-only; recall ≥ 0.9 gated by
     * `SimilaritySpec` (measured 0.92 at sf0.01 / 1.00 at sf0.1 with
-    * nprobe=8/16 cells, 32-code books, rerank 400 — the RecallProbe
-    * sweep showed shortlist depth and codebook resolution, not probe
-    * count, dominate recall once nprobe clears the routing misses). */
+    * nprobe=8/16 cells, 32-code books, rerank 400 — the IVF-PQ sweep
+    * in SCALE.md, "IVF recall", showed shortlist depth and codebook
+    * resolution, not probe count, dominate recall once nprobe clears
+    * the routing misses). */
   private val knnIvfPq = Q.noOracle("llm_knn_ivfpq") { (s, d) =>
     SimilarityOps.knnIvfPq(Tables.embeddings(s, d),
         isQuery = col("vec_id") < 5, nCells = 16, cellIters = 2,

@@ -795,10 +795,11 @@ object StreamingQueries {
     * chain, replacing the r14 join-form replay that paid two state
     * stores per unrolled slot per micro-batch and was adjudicated out
     * at 15–56 s per key at sf0.1. This form probes at the
-    * replay-harness floor (~1.2x the kleene-replay reference in the
-    * same JVM — `graft.tools.GroupStreamProbe`). Same oracle as the
-    * batch [[cepGroupTimes]] key: replay output must equal the batch
-    * unrolled chain exactly (all-paths emission, no flush gap). */
+    * replay-harness floor (~1.2-1.3x the kleene-replay reference in
+    * the same JVM — SCALE.md, "Findings of the retired probes"). Same
+    * oracle as the batch [[cepGroupTimes]] key: replay output must
+    * equal the batch unrolled chain exactly (all-paths emission, no
+    * flush gap). */
   private val streamGroupTimesReplay = Q(
     "stream_group_times_replay", cepGroupTimes.oracle.get) { (s, d) =>
     val grp = Seq("click" -> (col("event_type") === "click"),

@@ -65,7 +65,10 @@ object LocalFs {
     * `shufflePartitions` shuffle/state partitions, only the latest
     * committed batch of checkpoint files retained (no loop restarts
     * from an old batch), and `file:` resolved to the no-fork
-    * filesystem for both Hadoop APIs. The FileSystem cache is keyed by
+    * filesystem for both Hadoop APIs. Sessions from
+    * [[graft.GraftSession.local]] already resolve `file:` so, but a
+    * caller's session built elsewhere (a benchmark harness, an outside
+    * user of `graft.api`) may not. The FileSystem cache is keyed by
     * scheme, authority and user, not by configuration, so it is
     * disabled for `file:` in this session — otherwise whichever
     * `file:` instance the JVM made first would answer. The caller's
@@ -75,9 +78,7 @@ object LocalFs {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
-    ss.conf.set("fs.file.impl", classOf[NoForkLocalFileSystem].getName)
-    ss.conf.set("fs.AbstractFileSystem.file.impl",
-      classOf[NoForkLocalFs].getName)
+    graft.GraftSession.noForkFile.foreach { case (k, v) => ss.conf.set(k, v) }
     ss.conf.set("fs.file.impl.disable.cache", true)
     ss
   }

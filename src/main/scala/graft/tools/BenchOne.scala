@@ -1,30 +1,20 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     // key accepts a comma-separated list: profile a related set in ONE
     // JVM (shared JIT/codegen/stage-cache warmth, like the real bench)
     val keys = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = args(1); val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.extensions","graft.functions.GraftExtensions")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.entry(spark).count()
-    def steal(): Long =
-      try scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).map(_.trim.split("\\s+")(8).toLong)
-        .getOrElse(0L)
-      catch { case _: Throwable => 0L }
+    GraftSession.warmUp(spark, sfDir)
     keys.foreach { key =>
       (1 to reps).foreach { r =>
-        val s0 = steal(); val t0 = System.nanoTime()
-        // toRdd: run the query's own plan; .count() would prune the work
-        val n = graft.SparkEntry.queries(key)(spark, sfDir).queryExecution.toRdd.count()
-        println(f"[benchone] $key rep$r: ${(System.nanoTime()-t0)/1e9}%.2f s ($n rows, steal ${steal()-s0})")
+        val t = GraftSession.timeKey(spark, sfDir, key, "benchone")
+        if (t.failed) println(s"[benchone] $key rep$r: FAILED")
+        else println(f"[benchone] $key rep$r: ${t.seconds}%.2f s (${t.rows} rows, steal ${t.steal})")
       }
     }
     spark.stop()

@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** In-bench-order probe: replay the EXACT key sequence [[graft.Bench]]
   * runs (same warm-up, same `SparkEntry.queries` iteration order, same
@@ -18,35 +18,23 @@ object BenchSeq {
     val target = args(0); val sfDir = args(1)
     val nBefore = args.lift(2).map(_.toInt).getOrElse(10)
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    try {
-      graft.SparkEntry.queries("agg_pricing_summary")(spark, sfDir)
-        .queryExecution.toRdd.count()
-      graft.SparkEntry.queries("proj_compute")(spark, sfDir)
-        .queryExecution.toRdd.count()
-    } catch { case _: Throwable => () }
+    GraftSession.warmUp(spark, sfDir)
     val order = graft.SparkEntry.queries.keys.toSeq
     val ti = order.indexOf(target)
     require(ti >= 0, s"unknown key $target")
     val before = order.slice(math.max(0, ti - nBefore), ti)
     println(s"[benchseq] bench-order predecessors: ${before.mkString(", ")}")
-    def time(k: String): Double = {
-      val t0 = System.nanoTime()
-      try graft.SparkEntry.queries(k)(spark, sfDir)
-        .queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        println(s"[benchseq] $k FAILED: ${e.getMessage.take(120)}") }
-      (System.nanoTime() - t0) / 1e9
+    // a failed key prints FAILED and no time (its message goes to stderr)
+    def time(k: String): String = {
+      val t = GraftSession.timeKey(spark, sfDir, k, "benchseq")
+      if (t.failed) "FAILED" else f"${t.seconds}%.2f s"
     }
-    before.foreach(k => println(f"[benchseq]   pre $k: ${time(k)}%.2f s"))
+    before.foreach(k => println(s"[benchseq]   pre $k: ${time(k)}"))
     (1 to reps).foreach(r =>
-      println(f"[benchseq] $target rep$r: ${time(target)}%.2f s"))
+      println(s"[benchseq] $target rep$r: ${time(target)}"))
     spark.stop()
   }
 }

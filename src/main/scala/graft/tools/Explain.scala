@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Plan auditor: prints `explain("formatted")` for the named keys (or a
   * default plan-critical set) so shuffle/broadcast/pushdown choices can
@@ -14,13 +13,7 @@ object Explain {
     val keys = if (args.length > 1) args.drop(1).toSeq else Seq(
       "join_broadcast_dim", "filter_compound", "topk_global",
       "agg_pricing_summary", "llm_dedup_fuzzy", "llm_knn_cosine", "join_asof")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, 4)
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       println(s"\n========== $k ==========")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Writes `PLANS.md`: the formatted physical plan of EVERY registered
   * key, so pushdown / broadcast / shuffle / codegen choices are
@@ -12,13 +11,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val keys = SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline keys\n\n")

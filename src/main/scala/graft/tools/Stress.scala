@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,38 +38,20 @@ object Stress {
     val out = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val keys = if (args.length > 3) args.drop(3).toSeq else defaultKeys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!new java.io.File(s"$out/_BLOWN").exists()) blow(spark, src, out, factor)
 
-    // warm the JIT/codegen path once, as Bench does
-    graft.SparkEntry.queries("agg_pricing_summary")(spark, out)
-      .queryExecution.toRdd.count()
-    def steal(): Long = try {
-      val s = scala.io.Source.fromFile("/proc/stat")
-      try s.getLines().find(_.startsWith("cpu "))
-        .map(_.trim.split("\\s+")(8).toLong).getOrElse(0L)
-      finally s.close()
-    } catch { case _: Throwable => 0L }
-    val s0 = steal()
+    GraftSession.warmUp(spark, out)
+    val s0 = GraftSession.stealJiffies()
     keys.foreach { k =>
-      val t0 = System.nanoTime()
-      val r = try Right(graft.SparkEntry.queries(k)(spark, out)
-          .queryExecution.toRdd.count())
-        catch { case e: Throwable => Left(e.getMessage) }
-      val t = (System.nanoTime() - t0) / 1e9
-      r match {
-        case Right(n) => println(f"[stress] $k: $t%.2f s ($n rows)")
-        case Left(m) => println(s"[stress] $k: FAILED $m")
-      }
+      val t = GraftSession.timeKey(spark, out, k, "stress")
+      if (t.failed) println(s"[stress] $k: FAILED")
+      else println(f"[stress] $k: ${t.seconds}%.2f s (${t.rows} rows)")
     }
-    println(s"[stress] factor=$factor steal_jiffies=${steal() - s0}")
+    println(s"[stress] factor=$factor steal_jiffies=${GraftSession.stealJiffies() - s0}")
     spark.stop()
   }
 

@@ -88,8 +88,7 @@ class LocalFsSpec extends SparkSpec {
 
   test("FileContext rename with OVERWRITE leaves the stock files and checksums") {
     val noForkConf = new Configuration()
-    noForkConf.set("fs.AbstractFileSystem.file.impl",
-      classOf[NoForkLocalFs].getName)
+    graft.GraftSession.noForkFile.foreach { case (k, v) => noForkConf.set(k, v) }
     val results = Seq(new Configuration(), noForkConf).map { conf =>
       val fc = FileContext.getLocalFSFileContext(conf)
       val dir = graft.Scratch.dir("localfs-rename")
@@ -120,11 +119,14 @@ class LocalFsSpec extends SparkSpec {
     val conf = hadoopConf(LocalFs.microBatchSession(spark, 2))
     assert(FileSystem.get(fileUri, conf).isInstanceOf[NoForkLocalFileSystem])
     assert(AbstractFileSystem.get(fileUri, conf).isInstanceOf[NoForkLocalFs])
-    // the caller's session keeps the JVM's own classes
-    val callerConf = hadoopConf(spark)
-    assert(!FileSystem.get(fileUri, callerConf)
+    // the base session (GraftSession.local) is no-fork from its build on
+    val baseConf = hadoopConf(spark)
+    assert(FileSystem.get(fileUri, baseConf)
       .isInstanceOf[NoForkLocalFileSystem])
-    assert(!AbstractFileSystem.get(fileUri, callerConf)
+    assert(AbstractFileSystem.get(fileUri, baseConf)
       .isInstanceOf[NoForkLocalFs])
+    // the cached file: instance may still be a stock one in a caller's
+    // session built elsewhere, so micro-batch sessions bypass the cache
+    assert(conf.getBoolean("fs.file.impl.disable.cache", false))
   }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * production choice once keyed state outgrows executor memory) must
   * produce identical rows, including the end-of-replay StateFlush
   * drain read back from a RocksDB checkpoint. Measured at sf0.1
-  * (graft.tools.StateStoreProbe): the providers are within noise of
-  * each other at test scale (state fits the page cache either way) —
-  * the knob exists for the 100 TB deployment, not the bench.
+  * (SCALE.md, "Findings of the retired probes"): RocksDB is no slower
+  * than the HDFS-backed map at test scale (0.74–1.11×; state fits the
+  * page cache either way) — the knob exists for the 100 TB
+  * deployment, not the bench.
   */
 class StateStoreParitySpec extends SparkSpec {
 
