@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths,
+  StandardCopyOption}
 import java.util.Comparator
 
 /** Harness-side scratch-space selector (replay checkpoints, staged
@@ -40,18 +41,33 @@ object Scratch {
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   sys.addShutdownHook {
     var p = live.poll()
-    while (p != null) { deleteTree(p); p = live.poll() }
+    while (p != null) {
+      try deleteTree(p) catch { case _: Throwable => () }
+      p = live.poll()
+    }
   }
 
-  private def deleteTree(p: Path): Unit =
-    try {
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-        finally walk.close()
-      }
-    } catch { case _: Throwable => () }
+  /** Delete `p` and everything under it, if it exists. A failure
+    * propagates: index compaction and side-store truncation must not
+    * go on over a half-deleted tree. */
+  private[graft] def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(Comparator.reverseOrder[Path]())
+        .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    }
+
+  /** Hard-link `f` as `t` (same-device scratch: metadata-only, no data
+    * copied), falling back to a file copy where the filesystem refuses
+    * the link. An existing `t` is kept: callers only ever place a
+    * byte-identical file there. */
+  private[graft] def linkOrCopy(f: Path, t: Path): Unit =
+    try Files.createLink(t, f)
+    catch {
+      case _: FileAlreadyExistsException => ()
+      case _: Exception => Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
+    }
 
   /** Create a fresh scratch directory with best-effort exit cleanup. */
   def dir(prefix: String): Path = {
@@ -60,12 +76,6 @@ object Scratch {
     live.add(p)
     p
   }
-
-  /** Eagerly delete a scratch dir created by [[dir]] — call ONLY once
-    * nothing lazy (a returned DataFrame!) still reads from it. On tmpfs
-    * the pages are RAM until the JVM exits, so call sites that fully
-    * materialize their result should release early. */
-  def release(p: Path): Unit = { live.remove(p); deleteTree(p) }
 
   /** [[dir]] as a string path (the common call shape in query code). */
   def dirString(prefix: String): String = dir(prefix).toString

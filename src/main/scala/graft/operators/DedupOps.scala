@@ -884,7 +884,6 @@ object DedupOps {
   def saveDedupIndex(df: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 3): Unit = {
-    rmTree(java.nio.file.Paths.get(s"$path/tombstones"))
     EpochLog.reset(path)
     val sets = shingleSets(df, idCol, textCol, n).persist()
     rowBands(sets).withColumn("epoch", lit(0L))
@@ -930,34 +929,8 @@ object DedupOps {
     * epoch and serves immediately, no compaction needed.
     * [[compactDedupIndex]] folds tombstones in offline. */
   def deleteFromDedupIndex(ids: DataFrame, path: String,
-      idCol: String = "doc_id"): Unit = {
-    ids.select(col(idCol).cast("long").as("doc_id"))
-      .withColumn("epoch", lit(EpochLog.next(path)))
-      .write.mode("append").parquet(s"$path/tombstones")
-    ()
-  }
-
-  /** The index's live tombstone set `(doc_id, epoch)` — one row per id
-    * at its LATEST delete epoch — if any deletes were recorded. */
-  private def dedupTombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = java.nio.file.Paths.get(path, "tombstones")
-    if (java.nio.file.Files.isDirectory(dir))
-      Some(spark.read.parquet(dir.toString)
-        .groupBy(col("doc_id").cast("long").as("doc_id"))
-        .agg(max(col("epoch")).as("t_epoch")))
-    else None
-  }
-
-  /** Mask an index table's tombstoned rows: a row survives unless a
-    * tombstone of its id was issued AT OR AFTER the row's write epoch. */
-  private def minusDedupTombstones(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      tbl: DataFrame): DataFrame =
-    dedupTombstonesOf(spark, path).fold(tbl) { t =>
-      tbl.join(t, tbl("doc_id") === t("doc_id") &&
-        t("t_epoch") >= tbl("epoch"), "left_anti")
-    }
+      idCol: String = "doc_id"): Unit =
+    EpochLog.tombstone(ids.select(col(idCol).as("doc_id")), path, "doc_id")
 
   /** Fold tombstones into the index: rewrite `bands/` and `sets/`
     * without the masked rows (epoch-aware — re-crawls newer than
@@ -966,20 +939,10 @@ object DedupOps {
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     requireNotBucketed(path, "compactDedupIndex")
-    dedupTombstonesOf(spark, path).foreach { _ =>
-      // keep each table's lake layout across compactions, so the
-      // pruning guarantees of [[saveDedupIndex]] survive the rewrite
-      Seq("bands" -> "band", "sets" -> "bkt").foreach { case (tbl, part) =>
-        val survivors =
-          minusDedupTombstones(spark, path, spark.read.parquet(s"$path/$tbl"))
-        val tmp = java.nio.file.Paths.get(s"$path/${tbl}_compact")
-        survivors.write.mode("overwrite").partitionBy(part)
-          .parquet(tmp.toString)
-        rmTree(java.nio.file.Paths.get(s"$path/$tbl"))
-        java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$path/$tbl"))
-      }
-      rmTree(java.nio.file.Paths.get(s"$path/tombstones"))
-    }
+    // keep each table's lake layout across compactions, so the
+    // pruning guarantees of [[saveDedupIndex]] survive the rewrite
+    EpochLog.compact(spark, path, Seq("bands" -> "band", "sets" -> "bkt"),
+      "doc_id")
   }
 
   /** Refuse the plain-layout mutation ops on a BUCKETED index
@@ -1037,14 +1000,6 @@ object DedupOps {
     }
   }
 
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-    }
-
   /** Serve NEAR-DUP LOOKUPS against a [[saveDedupIndex]] epoch: every
     * `(new_id, old_id, jac ≥ minJaccard)` pair linking the incoming
     * batch to the SAVED corpus — candidates from the band-bucket
@@ -1067,20 +1022,31 @@ object DedupOps {
     *   [[minhashNearDups]]; verification keeps precision exact. */
   def dedupAgainstIndex(newDocs: DataFrame, path: String,
       minJaccard: Double = 0.8, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3): DataFrame = {
+      textCol: String = "text", n: Int = 3): DataFrame =
+    serveIndex(newDocs, path, minJaccard, idCol, textCol, n,
+      newDocs.sparkSession.read.parquet(s"$path/bands"),
+      Seq("band", "bsig"))(identity)
+
+  /** The serve both index layouts share: probe the live saved `bands`
+    * rows on `key` with the batch's row-local bands (`keyed` adds the
+    * key columns `rowBands` lacks), then verify each candidate pair
+    * once with exact Jaccard against the live `sets/`. */
+  private def serveIndex(newDocs: DataFrame, path: String,
+      minJaccard: Double, idCol: String, textCol: String, n: Int,
+      bands: DataFrame, key: Seq[String])(
+      keyed: DataFrame => DataFrame): DataFrame = {
     val spark = newDocs.sparkSession
     val nd = shingleSets(newDocs, idCol, textCol, n)
-    val probe = rowBands(nd)
+    val probe = keyed(rowBands(nd))
       .join(nd.select(col("doc_id"), col("xs").as("new_xs"),
         col("n_sh").as("new_n")), "doc_id")
-    val savedBands = minusDedupTombstones(spark, path,
-        spark.read.parquet(s"$path/bands"))
-      .select(col("doc_id").as("old_id"), col("band"), col("bsig"))
-    val savedSets = minusDedupTombstones(spark, path,
-        spark.read.parquet(s"$path/sets"))
+    val savedBands = EpochLog.live(spark, path, bands, "doc_id")
+      .select(col("doc_id").as("old_id") +: key.map(col): _*)
+    val savedSets = EpochLog.live(spark, path,
+        spark.read.parquet(s"$path/sets"), "doc_id")
       .select(col("doc_id").as("old_id"), col("xs").as("old_xs"),
         col("n_sh").as("old_n"))
-    probe.join(savedBands, Seq("band", "bsig"))
+    probe.join(savedBands, key)
       // one verify per PAIR, not per colliding band: a true near-dup
       // collides on many of its 16 bands, and each redundant row would
       // re-pay the exact-intersect (on a stream this dedup is the one
@@ -1124,11 +1090,10 @@ object DedupOps {
   def saveDedupIndexBucketed(df: DataFrame, table: String, path: String,
       nBuckets: Int = 64, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 3): Unit = {
-    rmTree(java.nio.file.Paths.get(s"$path/tombstones"))
     EpochLog.reset(path)
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    rmTree(java.nio.file.Paths.get(s"$path/bands_bucketed"))
+    graft.Scratch.deleteTree(java.nio.file.Paths.get(s"$path/bands_bucketed"))
     val sets = shingleSets(df, idCol, textCol, n).persist()
     rowBands(sets).withColumn("epoch", lit(0L))
       .withColumn("bkey", concat_ws(":", col("band"), col("bsig")))
@@ -1156,29 +1121,10 @@ object DedupOps {
     *   serve. */
   def dedupAgainstIndexBucketed(newDocs: DataFrame, table: String,
       path: String, minJaccard: Double = 0.8, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 3): DataFrame = {
-    val spark = newDocs.sparkSession
-    val nd = shingleSets(newDocs, idCol, textCol, n)
-    val probe = rowBands(nd)
-      .withColumn("bkey", concat_ws(":", col("band"), col("bsig")))
-      .join(nd.select(col("doc_id"), col("xs").as("new_xs"),
-        col("n_sh").as("new_n")), "doc_id")
-    val savedBands = minusDedupTombstones(spark, path, spark.table(table))
-      .select(col("doc_id").as("old_id"), col("bkey"))
-    val savedSets = minusDedupTombstones(spark, path,
-        spark.read.parquet(s"$path/sets"))
-      .select(col("doc_id").as("old_id"), col("xs").as("old_xs"),
-        col("n_sh").as("old_n"))
-    probe.join(savedBands, Seq("bkey"))
-      .dropDuplicates("doc_id", "old_id")
-      .join(savedSets, "old_id")
-      .withColumn("c",
-        size(array_intersect(col("new_xs"), col("old_xs"))).cast("double"))
-      .select(col("doc_id").as("new_id"), col("old_id"),
-        round(col("c") / (col("new_n") + col("old_n") - col("c")), 6)
-          .as("jac"))
-      .filter(col("jac") >= minJaccard)
-  }
+      textCol: String = "text", n: Int = 3): DataFrame =
+    serveIndex(newDocs, path, minJaccard, idCol, textCol, n,
+      newDocs.sparkSession.table(table), Seq("bkey"))(
+      _.withColumn("bkey", concat_ws(":", col("band"), col("bsig"))))
 
   def editSimilarityJoin(df: DataFrame, maxDist: Int,
       idCol: String = "doc_id", strCol: String = "text",

@@ -132,12 +132,16 @@ object LayoutOps {
     require(targetFileBytes > 0)
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) totalBytes += f.getLen
-    }
+    // listStatus, not listFiles: a LocatedFileStatus copies each file's
+    // permission, which the local filesystem without libhadoop loads by
+    // starting an `ls -ld` per file; getLen needs none of it
+    def parquetBytes(p: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(p).iterator.map { f =>
+        if (f.isDirectory) parquetBytes(f.getPath)
+        else if (f.getPath.getName.endsWith(".parquet")) f.getLen
+        else 0L
+      }.sum
+    val totalBytes = parquetBytes(path)
     val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
     spark.read.parquet(dir).repartition(nFiles)
       .write.mode("overwrite").parquet(outDir)

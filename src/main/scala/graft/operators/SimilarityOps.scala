@@ -475,7 +475,6 @@ object SimilarityOps {
   def saveIvfIndex(df: DataFrame, path: String, nCells: Int = 16,
       iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding", trainOn: Option[DataFrame] = None): Unit = {
-    deleteDir(java.nio.file.Paths.get(s"$path/tombstones"))
     EpochLog.reset(path)
     val n = normed(df, idCol, vecCol).persist()
     // trainOn: centroids from a designated training corpus (the bulk
@@ -516,10 +515,7 @@ object SimilarityOps {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cid").cast("long"), col("cv"), col("cnrm"))
-      .as[(Long, Seq[Double], Double)].collect()
-      .map(c => (c._1, c._2.toArray, c._3)).sortBy(_._1)
+    val cents = loadCentroids(spark, path)
     require(cents.nonEmpty, s"no centroids at $path/centroids")
     val bc = spark.sparkContext.broadcast(cents)
     normed(newVecs, idCol, vecCol)
@@ -528,34 +524,11 @@ object SimilarityOps {
       .mapPartitions { it =>
         val cen = bc.value
         it.map { case (id, vSeq, nrm) =>
-          val v = vSeq.toArray
-          var bestCos = Double.NegativeInfinity
-          var bestCid = Long.MaxValue
-          cen.foreach { case (cid, cv, cnrm) =>
-            val m = math.min(v.length, cv.length)
-            var s = 0.0
-            var j = 0
-            while (j < m) { s += v(j) * cv(j); j += 1 }
-            val c = s / (nrm * cnrm)
-            if (c > bestCos || (c == bestCos && cid < bestCid)) {
-              bestCos = c; bestCid = cid
-            }
-          }
-          (id, vSeq, nrm, bestCid)
+          (id, vSeq, nrm, cen(nearestCell(cen, vSeq.toArray, nrm))._1)
         }
       }
       .toDF("vec_id", "v", "nrm", "cid")
   }
-
-  /** Claim the index's next write EPOCH — a monotonic counter kept as
-    * empty marker files under `path/epochs/` (`e1`, `e2`, …): O(1), no
-    * table scan, and deterministic across reruns (the counter depends
-    * only on how many mutations preceded it, never on wall clock).
-    * Every append and every delete claims one, which is what lets a
-    * tombstone mask exactly the rows that existed when it was issued.
-    * A production lake would use its transaction log's commit id here
-    * — same monotonicity contract. */
-  private def nextEpoch(path: String): Long = EpochLog.next(path)
 
   /** Append [[ivfAssignSaved]] rows to the index's `assigned/` table —
     * the commit half of ANN index maintenance. Plain parquet append
@@ -568,7 +541,7 @@ object SimilarityOps {
     * maintained index unchanged. */
   def appendToIvfIndex(assigned: DataFrame, path: String): Unit = {
     assigned.select(col("vec_id"), col("v"), col("nrm"), col("cid"))
-      .withColumn("epoch", lit(nextEpoch(path)))
+      .withColumn("epoch", lit(EpochLog.next(path)))
       .write.mode("append").partitionBy("cid").parquet(s"$path/assigned")
     ()
   }
@@ -592,36 +565,8 @@ object SimilarityOps {
     * (delete → re-insert == rebuild-after-reinsert, spec-pinned on
     * both serve kernels). */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
-      idCol: String = "vec_id"): Unit = {
-    ids.select(col(idCol).cast("long").as("vec_id"))
-      .withColumn("epoch", lit(nextEpoch(path)))
-      .write.mode("append").parquet(s"$path/tombstones")
-    ()
-  }
-
-  /** The index's live tombstone set `(vec_id, epoch)`, if any deletes
-    * were recorded — one row per id at its LATEST delete epoch. */
-  private def tombstonesOf(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val dir = java.nio.file.Paths.get(path, "tombstones")
-    if (java.nio.file.Files.isDirectory(dir))
-      Some(spark.read.parquet(dir.toString)
-        .groupBy(col("vec_id").cast("long").as("vec_id"))
-        .agg(max(col("epoch")).as("epoch")))
-    else None
-  }
-
-  /** Apply an index's tombstones to its `assigned/` rows (no-op when
-    * none were recorded) — the serve-time half of the delete path:
-    * a row survives unless a tombstone of its id was issued AT OR
-    * AFTER the row's own write epoch. */
-  private def minusTombstones(spark: SparkSession, path: String,
-      assigned: DataFrame): DataFrame =
-    tombstonesOf(spark, path).fold(assigned) { t =>
-      assigned.as("a").join(t.as("t"),
-        col("a.vec_id") === col("t.vec_id") &&
-          col("t.epoch") >= col("a.epoch"), "left_anti")
-    }
+      idCol: String = "vec_id"): Unit =
+    EpochLog.tombstone(ids.select(col(idCol).as("vec_id")), path, "vec_id")
 
   /** Fold tombstones into the index: rewrite `assigned/` without the
     * masked rows (epoch-aware — a re-insert newer than its id's
@@ -633,27 +578,7 @@ object SimilarityOps {
     * snapshot compaction: pay one O(index) rewrite to make every
     * subsequent serve tombstone-free. */
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
-    tombstonesOf(spark, path).foreach { t =>
-      val survivors = minusTombstones(spark, path,
-        spark.read.parquet(s"$path/assigned"))
-        .select(col("vec_id"), col("v"), col("nrm"), col("epoch"),
-          col("cid"))
-      val tmp = java.nio.file.Paths.get(s"$path/assigned_compact")
-      survivors.write.mode("overwrite").partitionBy("cid")
-        .parquet(tmp.toString)
-      deleteDir(java.nio.file.Paths.get(s"$path/assigned"))
-      java.nio.file.Files.move(tmp,
-        java.nio.file.Paths.get(s"$path/assigned"))
-      deleteDir(java.nio.file.Paths.get(s"$path/tombstones"))
-    }
-
-  private def deleteDir(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-  }
+    EpochLog.compact(spark, path, Seq("assigned" -> "cid"), "vec_id")
 
   /** CELL-BLOCKED embedding near-dup — the SemDeDup-shaped semantic
     * dedup route (Abbas et al., arXiv:2303.09540: cluster the
@@ -763,9 +688,9 @@ object SimilarityOps {
     val probedCells = probeRows.map(_.getLong(3)).distinct.toSeq
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val assigned = minusTombstones(spark, path,
+    val assigned = EpochLog.live(spark, path,
       spark.read.parquet(s"$path/assigned")
-        .filter(col("cid").isin(probedCells: _*)))
+        .filter(col("cid").isin(probedCells: _*)), "vec_id")
     val scored = assigned.join(broadcast(probes), "cid")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos",
@@ -802,12 +727,9 @@ object SimilarityOps {
       maxIndexRows: Long = 1000000L): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cid").cast("long"), col("cv"), col("cnrm"))
-      .as[(Long, Seq[Double], Double)].collect()
-      .map(c => (c._1, c._2.toArray, c._3)).sortBy(_._1)
-    val assignedDs = minusTombstones(spark, path,
-        spark.read.parquet(s"$path/assigned"))
+    val cents = loadCentroids(spark, path)
+    val assignedDs = EpochLog.live(spark, path,
+        spark.read.parquet(s"$path/assigned"), "vec_id")
       .select(col("vec_id").cast("long"), col("v"), col("nrm"),
         col("cid").cast("long"))
       .as[(Long, Seq[Double], Double, Long)]
@@ -831,14 +753,7 @@ object SimilarityOps {
         val byCell = bcCells.value
         it.flatMap { case (qid, qvSeq, qn) =>
           val qv = qvSeq.toArray
-          // probe routing: raw cosine, (cos DESC, cid) — detProbes' order
-          val probed = cen.map { case (cid, cv, cnrm) =>
-            val m = math.min(qv.length, cv.length)
-            var s = 0.0
-            var j = 0
-            while (j < m) { s += qv(j) * cv(j); j += 1 }
-            (s / (qn * cnrm), cid)
-          }.sortBy { case (c, cid) => (-c, cid) }.take(np).map(_._2)
+          val probed = probedCells(cen, qv, qn, np)
           var buf = Vector.empty[(Double, Long)]
           def trim(b: Vector[(Double, Long)]) =
             if (b.length <= k) b
@@ -1164,10 +1079,7 @@ object SimilarityOps {
       vecCol: String = "embedding", maxIndexRows: Long = 1000000L): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
-      .select(col("cid").cast("long"), col("cv"), col("cnrm"))
-      .as[(Long, Seq[Double], Double)].collect()
-      .map(c => (c._1, c._2.toArray, c._3)).sortBy(_._1)
+    val cents = loadCentroids(spark, path)
     val cellOf = spark.read.parquet(s"$path/cellOf")
       .select(col("cid").cast("long"), col("vec_id").cast("long"))
       .as[(Long, Long)].collect()
@@ -1208,14 +1120,8 @@ object SimilarityOps {
         val sub = bks(0)(0).length
         it.flatMap { case (qid, qvSeq, qn) =>
           val qv = qvSeq.toArray
-          // probe routing on the RAW vector — detProbes' arithmetic
-          val probed = cen.map { case (cid, cv, cnrm) =>
-            val mm = math.min(qv.length, cv.length)
-            var s = 0.0
-            var j = 0
-            while (j < mm) { s += qv(j) * cv(j); j += 1 }
-            (s / (qn * cnrm), cid)
-          }.sortBy { case (c0, cid) => (-c0, cid) }.take(np).map(_._2)
+          // probe routing on the RAW vector
+          val probed = probedCells(cen, qv, qn, np)
           // the query's unit vector + per-(subspace, code) ADC table,
           // quantized to 10⁻¹² units — detAdcTable's arithmetic
           val uq = qv.map(_ / qn)
@@ -1474,14 +1380,7 @@ object SimilarityOps {
     val np = math.min(nprobe, cells.length)
     val qinfo = unit.filter(isQuery).collect().map { case (qid, qvSeq) =>
       val qv = qvSeq.toArray
-      val probed = cells.map { case (cid, cv, cn) =>
-        val mm = math.min(qv.length, cv.length)
-        var s = 0.0
-        var i = 0
-        while (i < mm) { s += qv(i) * cv(i); i += 1 }
-        (cid, s / cn)
-      }.sortBy { case (cid, c) => (-c, cid) }.take(np).map(_._1).toSet
-      (qid, probed, adcTable(books, qv, sub))
+      (qid, probedCells(cells, qv, 1.0, np).toSet, adcTable(books, qv, sub))
     }
     val bcQ = spark.sparkContext.broadcast(qinfo)
     val adc = encoded.mapPartitions { it =>
@@ -1542,15 +1441,7 @@ object SimilarityOps {
     val probes = typed.filter(isQuery).mapPartitions { it =>
       val cs = bc.value
       it.flatMap { case (qid, vSeq, qn) =>
-        val qv = vSeq.toArray
-        cs.map { case (cid, cv, cn) =>
-          val m = math.min(qv.length, cv.length)
-          var s = 0.0
-          var i = 0
-          while (i < m) { s += qv(i) * cv(i); i += 1 }
-          (cid, s / (qn * cn))
-        }.sortBy { case (cid, c) => (-c, cid) }.take(np)
-          .map { case (cid, _) => (qid, vSeq, qn, cid) }
+        probedCells(cs, vSeq.toArray, qn, np).map(cid => (qid, vSeq, qn, cid))
       }
     }.toDF("qid", "qv", "qn", "cid")
       .withColumn("qs", greatest(expr("array_max(transform(qv, x -> abs(x)))"),
@@ -1849,6 +1740,31 @@ object SimilarityOps {
     normed(df, idCol, vecCol).as[(Long, Seq[Double], Double)].persist()
   }
 
+  /** A saved index's `centroids/` as a cid-sorted routing array
+    * `(cid, cv, cnrm)` — what the append and serve kernels broadcast. */
+  private def loadCentroids(spark: SparkSession,
+      path: String): Array[(Long, Array[Double], Double)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$path/centroids")
+      .select(col("cid").cast("long"), col("cv"), col("cnrm"))
+      .as[(Long, Seq[Double], Double)].collect()
+      .map(c => (c._1, c._2.toArray, c._3)).sortBy(_._1)
+  }
+
+  /** Cosine of `v` (norm `nr`) to centroid `c`: the dot product summed
+    * left to right over the shorter length, divided by `nr · cnrm` —
+    * `vec_dot`'s arithmetic, so the cell routing below is bit-identical
+    * to `detAssignCells` / `detProbes`. */
+  private def cellCos(c: (Long, Array[Double], Double), v: Array[Double],
+      nr: Double): Double = {
+    val cv = c._2
+    val m = math.min(v.length, cv.length)
+    var s = 0.0
+    var i = 0
+    while (i < m) { s += v(i) * cv(i); i += 1 }
+    s / (nr * c._3)
+  }
+
   /** Index of the centroid with max cosine to `v`; ties keep the first
     * (lowest cid — callers keep `cs` sorted by cid ascending), matching
     * the declarative `ORDER BY cos DESC, cid` tie-break. */
@@ -1858,17 +1774,19 @@ object SimilarityOps {
     var bestCos = Double.NegativeInfinity
     var ci = 0
     while (ci < cs.length) {
-      val cv = cs(ci)._2
-      val m = math.min(v.length, cv.length)
-      var s = 0.0
-      var i = 0
-      while (i < m) { s += v(i) * cv(i); i += 1 }
-      val c = s / (nr * cs(ci)._3)
+      val c = cellCos(cs(ci), v, nr)
       if (c > bestCos) { bestCos = c; best = ci }
       ci += 1
     }
     best
   }
+
+  /** The cids of the `np` centroids nearest `v`, `(cos DESC, cid)`
+    * ranked — detProbes' order. */
+  private def probedCells(cs: Array[(Long, Array[Double], Double)],
+      v: Array[Double], nr: Double, np: Int): Array[Long] =
+    cs.map(c => (cellCos(c, v, nr), c._1))
+      .sortBy { case (c, cid) => (-c, cid) }.take(np).map(_._2)
 
   /** Shared IVF probe path: assign corpus rows to cells and route each
     * query to its `nprobe` nearest cells — both narrow passes against
@@ -1894,15 +1812,7 @@ object SimilarityOps {
     val probes = typed.filter(isQuery).mapPartitions { it =>
       val cs = bc.value
       it.flatMap { case (qid, vSeq, qn) =>
-        val qv = vSeq.toArray
-        cs.map { case (cid, cv, cn) =>
-          val m = math.min(qv.length, cv.length)
-          var s = 0.0
-          var i = 0
-          while (i < m) { s += qv(i) * cv(i); i += 1 }
-          (cid, s / (qn * cn))
-        }.sortBy { case (cid, c) => (-c, cid) }.take(np)
-          .map { case (cid, _) => (qid, vSeq, qn, cid) }
+        probedCells(cs, vSeq.toArray, qn, np).map(cid => (qid, vSeq, qn, cid))
       }
     }.toDF("qid", "qv", "qn", "cid")
     val scored = assigned.join(broadcast(probes), "cid")

@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** End-to-end bounded replay harness: runs a REAL Structured Streaming
@@ -84,53 +84,47 @@ object BoundedReplay {
         try listing.iterator().asScala
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .zipWithIndex.foreach { case (f, j) =>
-            val t = src.resolve(s"chunk_${i}_$j.parquet")
             // an already-fed chunk (retried/partial prior replay) is
-            // fine — the staged file is byte-identical, so keep it;
-            // the copy fallback likewise replaces rather than throws
-            try Files.createLink(t, f)
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException => ()
-              case _: Exception =>
-                Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
-            }
+            // fine — the staged file is byte-identical, so keep it
+            graft.Scratch.linkOrCopy(f, src.resolve(s"chunk_${i}_$j.parquet"))
           }
         finally listing.close()
         q.processAllAvailable()
       }
     } finally q.stop()
 
+  /** Shuffle/state partitions of the isolated replay session: each
+    * micro-batch carries 1/chunks of the input, so the session-wide
+    * partition count (sized for full-table batch queries) would spend
+    * the whole batch on per-partition state-store file I/O — 32
+    * partitions × chunks batches of checkpoint deltas for kilobytes of
+    * state each. The partition count is baked into the query's
+    * checkpoint, so it is decided here, never inherited from the
+    * caller's session conf. (A real deployment sizes it to peak
+    * per-batch volume; 2 keeps multi-partition semantics — partitioned
+    * state, cross-partition watermark, partition-independent results —
+    * under test at the minimum per-batch store overhead: 8 → 2
+    * measured −20–40% on every replay key, most on the state-heavy
+    * dedup index.) */
+  private val ShufflePartitions = 2
+
   /** Shared replay core: stage `df` into `chunks` files range-split on
     * `orderCol` (one pass, cached per `cacheKey` across calls in this
     * JVM — the staging depends only on the table), feed them to a
     * file-source streaming query built by `op` one hard-link per
-    * trigger, and return streamed output ∪ `flush`(checkpoint).
-    *
-    * The stream runs in an isolated session with few shuffle/state
-    * partitions: each micro-batch carries 1/chunks of the input, so
-    * the session-wide partition count (sized for full-table batch
-    * queries) would spend the whole batch on per-partition state-store
-    * file I/O — 32 partitions × chunks batches of checkpoint deltas
-    * for kilobytes of state each. The partition count is baked into
-    * the query's checkpoint, so this is decided here (the
-    * `shufflePartitions` parameter), never inherited from the
-    * caller's session conf. (A real deployment sizes it to peak per-batch
-    * volume; 2 keeps multi-partition semantics — partitioned state,
-    * cross-partition watermark, partition-independent results — under
-    * test at the minimum per-batch store overhead: 8 → 2 measured
-    * −20–40% on every replay key, most on the state-heavy dedup
-    * index.) */
+    * trigger, and return streamed output ∪ `flush`(checkpoint). The
+    * stream runs in an isolated session with [[ShufflePartitions]]
+    * shuffle/state partitions. */
   private def replayCore(spark: SparkSession, df: SparkSession => DataFrame,
       orderCol: Column, chunks: Int, prefix: String, sinkPartitions: Int,
-      shufflePartitions: Int = 2, cacheKey: Option[String] = None,
-      stateStore: String = "hdfs")(
+      cacheKey: String, stateStore: String)(
       op: DataFrame => Dataset[_])(
       flush: Option[String => Dataset[_]]): DataFrame = {
     val root = graft.Scratch.dir(prefix)
     val src = Files.createDirectories(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
-    val ss = LocalFs.microBatchSession(spark, shufflePartitions)
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
     // state-store provider: the default HDFS-backed map rewrites every
     // partition's FULL state per checkpoint — fine for kilobyte state,
     // quadratic-feeling under the index-building dedup ops whose state
@@ -153,11 +147,8 @@ object BoundedReplay {
     // filter+write jobs would rescan the input `chunks` times) —
     // cached per (cacheKey, chunks) across calls, since the staging is
     // a pure function of the table
-    val staged = cacheKey match {
-      case Some(k) => stageCache.computeIfAbsent(s"$k|$chunks",
-        _ => stage(base, orderCol, chunks))
-      case None => stage(base, orderCol, chunks)
-    }
+    val staged = stageCache.computeIfAbsent(s"$cacheKey|$chunks",
+      _ => stage(base, orderCol, chunks))
 
     val streamed = op(ss.readStream.schema(base.schema).parquet(src.toString))
     val sinkSchema = streamed.schema
@@ -183,12 +174,11 @@ object BoundedReplay {
     * @param flush drains the stopped query's surviving state from the
     *              checkpoint (a [[StateFlush]] method) */
   def replayEvents(spark: SparkSession, sfDir: String, chunks: Int = 5,
-      shufflePartitions: Int = 2, stateStore: String = "hdfs")(
+      stateStore: String = "hdfs")(
       op: DataFrame => Dataset[_])(flush: String => Dataset[_]): DataFrame =
     replayCore(spark, ss => Tables.events(ss, sfDir),
       unix_micros(col("ts")), chunks, "graft-replay", 1,
-      shufflePartitions, cacheKey = Some(s"events|$sfDir"),
-      stateStore = stateStore)(op)(Some(flush))
+      s"events|$sfDir", stateStore)(op)(Some(flush))
 
   /** [[replayEvents]] with DETERMINISTIC ARRIVAL JITTER — the
     * out-of-order replay the lateness semantics need: arrival stamp
@@ -202,27 +192,24 @@ object BoundedReplay {
     * — all inputs exact longs ≤ 2⁵³, so the double division rounds
     * identically in any IEEE engine. */
   def replayEventsJittered(spark: SparkSession, sfDir: String,
-      jitterUs: Long, chunks: Int = 5, shufflePartitions: Int = 2,
-      stateStore: String = "hdfs")(
+      jitterUs: Long, chunks: Int = 5, stateStore: String = "hdfs")(
       op: DataFrame => Dataset[_])(flush: String => Dataset[_]): DataFrame =
     replayCore(spark, ss => Tables.events(ss, sfDir),
       unix_micros(col("ts")) + pmod(col("event_id"), lit(7L)) * lit(jitterUs),
-      chunks, "graft-replay-jit", 1,
-      shufflePartitions, cacheKey = Some(s"events-jit$jitterUs|$sfDir"),
-      stateStore = stateStore)(op)(Some(flush))
+      chunks, "graft-replay-jit", 1, s"events-jit$jitterUs|$sfDir",
+      stateStore)(op)(Some(flush))
 
   /** [[replayEvents]] for the EMBEDDINGS table — the query-stream
     * replay the serving-shape keys run under (synthetic arrival stamp
     * from vec_id, id-ordered chunks, REAL streaming query, no flush —
     * stateless lookups answer within their own micro-batch). */
   def replayEmbeddings(spark: SparkSession, sfDir: String, chunks: Int = 5,
-      shufflePartitions: Int = 2, stateStore: String = "hdfs")(
+      stateStore: String = "hdfs")(
       op: DataFrame => Dataset[_]): DataFrame =
     replayCore(spark, ss => Tables.embeddings(ss, sfDir).withColumn("ts",
         timestamp_micros(lit(1704067200000000L) + col("vec_id") * lit(1000000L))),
-      col("vec_id"), chunks, "graft-replay-emb", 1,
-      shufflePartitions, cacheKey = Some(s"embeddings|$sfDir"),
-      stateStore = stateStore)(op)(None)
+      col("vec_id"), chunks, "graft-replay-emb", 1, s"embeddings|$sfDir",
+      stateStore)(op)(None)
 
   /** [[replayEvents]] for the DOCUMENTS table — the corpus-ingest
     * replay the streaming dedup family runs under: documents are
@@ -234,12 +221,10 @@ object BoundedReplay {
     * emit a pair the moment its second document arrives, so a
     * complete replay leaves no closable state behind. */
   def replayDocuments(spark: SparkSession, sfDir: String, chunks: Int = 5,
-      sinkPartitions: Int = 1, shufflePartitions: Int = 2,
-      stateStore: String = "hdfs")(
+      sinkPartitions: Int = 1, stateStore: String = "hdfs")(
       op: DataFrame => Dataset[_]): DataFrame =
     replayCore(spark, ss => Tables.documents(ss, sfDir).withColumn("ts",
         timestamp_micros(lit(1704067200000000L) + col("doc_id") * lit(1000000L))),
       col("doc_id"), chunks, "graft-replay-docs", sinkPartitions,
-      shufflePartitions, cacheKey = Some(s"documents|$sfDir"),
-      stateStore = stateStore)(op)(None)
+      s"documents|$sfDir", stateStore)(op)(None)
 }

@@ -188,7 +188,10 @@ object ViewMaintain {
           .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
       }
       // truncate consumed state only AFTER this batch's outputs commit
-      if (compact) { rm(sliceDir); base.truncate(batchId) }
+      if (compact) {
+        graft.Scratch.deleteTree(sliceDir)
+        base.truncate(batchId)
+      }
     }
     spark.read.parquet(
       viewDir.resolve(s"v${maxVersion(viewDir)}").toString)
@@ -260,7 +263,7 @@ object ViewMaintain {
       }
 
     /** Delete version `v`. */
-    def truncate(v: Long): Unit = rm(path(v))
+    def truncate(v: Long): Unit = graft.Scratch.deleteTree(path(v))
 
     /** Flat: one directory. Bucketed: repartitioned ON the bucket
       * first so each bucket lands as ONE file — without it every input
@@ -286,11 +289,7 @@ object ViewMaintain {
           val dst = Files.createDirectories(path(v + 1).resolve(name))
           val fs = Files.list(bdir)
           try fs.iterator().forEachRemaining { f =>
-            val t = dst.resolve(f.getFileName.toString)
-            try Files.createLink(t, f)
-            catch { case _: Exception =>
-              Files.copy(f, t,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING) }
+            graft.Scratch.linkOrCopy(f, dst.resolve(f.getFileName.toString))
           } finally fs.close()
         }
       } finally ls.close()
@@ -409,7 +408,7 @@ object ViewMaintain {
       if (v == batchId) phase(sb.sparkContext, s"b$batchId compact") {
         storeA.compact(sb, v, dA)
         storeB.compact(sb, v, dB)
-        rm(sliceDir)
+        graft.Scratch.deleteTree(sliceDir)
         storeA.truncate(v)
         storeB.truncate(v)
       }
@@ -523,12 +522,4 @@ object ViewMaintain {
       m
     } finally vs.close()
   }
-
-  private def rm(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
 }

@@ -103,10 +103,23 @@ class DedupIndexSpec extends SparkSpec {
     DedupOps.compactDedupIndex(spark, path)
     assert(!java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(path, "tombstones")))
+    // the rewrite keeps both tables' partition layouts
+    Seq("bands" -> "band", "sets" -> "bkt").foreach { case (tbl, part) =>
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(path, tbl))
+      val names = try ls.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+        finally ls.close()
+      assert(names.nonEmpty && names.forall(_.startsWith(s"$part=")),
+        s"compaction must keep $tbl/ partitioned by $part: $names")
+    }
     assert(serve() == after, "compaction changed the served pairs")
     // a SECOND delete outranks the re-crawl
     DedupOps.deleteFromDedupIndex(Seq(back).toDF("doc_id"), path)
     assert(serve().isEmpty, "newer tombstone must mask the re-crawl")
+    // and an append after compaction still serves: a third crawl of
+    // the same doc outranks the second delete
+    DedupOps.appendToDedupIndex(docs.filter(col("doc_id") === back), path)
+    assert(serve() == after, "an append after compaction must serve")
   }
 
   test("rebuild-in-place after deletes serves fresh rows (stale tombstones reset)") {

@@ -93,6 +93,16 @@ class SimilaritySpec extends SparkSpec {
     assert(!java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(path, "tombstones")),
       "compaction must truncate the tombstone log")
+    // the rewrite keeps the cid= layout serve pruning and appends rely on
+    def assignedDirs() = {
+      import scala.jdk.CollectionConverters._
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(path, "assigned"))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+      finally ls.close()
+    }
+    assert(assignedDirs().nonEmpty && assignedDirs().forall(_.startsWith("cid=")),
+      s"compaction must keep assigned/ partitioned by cid: ${assignedDirs()}")
     assert(serve() == tombstoned,
       "folding tombstones into assigned/ must not change any answer")
     // the in-memory serving kernel honors tombstones identically:
@@ -105,6 +115,16 @@ class SimilaritySpec extends SparkSpec {
         r.getInt(3))).toSet
     graft.operators.SimilarityOps.compactIvfIndex(spark, path)
     assert(mem == serve(), "in-memory and join-form serves disagree")
+    assert(assignedDirs().forall(_.startsWith("cid=")),
+      s"compaction must keep assigned/ partitioned by cid: ${assignedDirs()}")
+    // an append after compaction lands in the same layout and serves:
+    // re-inserting the second delete's rows restores the first
+    // compaction's index, answer for answer
+    graft.operators.SimilarityOps.appendToIvfIndex(
+      graft.operators.SimilarityOps.ivfAssignSaved(
+        emb.filter(col("vec_id") % 10 === 3), path), path)
+    assert(serve() == tombstoned,
+      "an append after compaction must serve like the pre-delete index")
   }
 
   test("SQ8 ANN: int8 shortlist + exact rerank reaches recall >= 0.95") {
