@@ -124,23 +124,8 @@ object BoundedReplay {
     val src = Files.createDirectories(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
-    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
-    // state-store provider: the default HDFS-backed map rewrites every
-    // partition's FULL state per checkpoint — fine for kilobyte state,
-    // quadratic-feeling under the index-building dedup ops whose state
-    // grows each batch. "rocksdb" switches to Spark's bundled RocksDB
-    // provider with changelog checkpointing (only the batch's changed
-    // entries hit the checkpoint) — the production choice for large
-    // streaming state, and the provider is pinned into the checkpoint
-    // exactly like the partition count, so it is decided here.
-    if (stateStore == "rocksdb") {
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-    } else require(stateStore == "hdfs",
-      s"stateStore must be 'hdfs' or 'rocksdb', got '$stateStore'")
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions, stateStore,
+      aqe = true)
     val base = df(ss)
 
     // stage every chunk in ONE range-partitioned pass (per-chunk

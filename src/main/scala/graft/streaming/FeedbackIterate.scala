@@ -53,7 +53,7 @@ object FeedbackIterate {
     val root = graft.Scratch.dir("graft-iterate")
     val src = Files.createDirectories(root.resolve("src")).toString
     val ckpt = root.resolve("ckpt").toString
-    val ss = LocalFs.microBatchSession(spark, 2)
+    val ss = LocalFs.microBatchSession(spark, 2, "hdfs", aqe = true)
     import ss.implicits._
 
     ss.createDataset(seed).toDF("node", "lbl", "round")

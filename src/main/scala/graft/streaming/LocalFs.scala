@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop's raw local filesystem without its two per-file process
@@ -61,25 +62,55 @@ private class NoForkRawLocalFs(uri: URI, conf: Configuration)
 
 object LocalFs {
 
+  private val sessions = new java.util.concurrent.ConcurrentHashMap[
+    (SparkContext, Int, String, Boolean), SparkSession]()
+
   /** The isolated session every bounded micro-batch loop runs in:
-    * `shufflePartitions` shuffle/state partitions, only the latest
-    * committed batch of checkpoint files retained (no loop restarts
-    * from an old batch), and `file:` resolved to the no-fork
-    * filesystem for both Hadoop APIs. Sessions from
-    * [[graft.GraftSession.local]] already resolve `file:` so, but a
-    * caller's session built elsewhere (a benchmark harness, an outside
-    * user of `graft.api`) may not. The FileSystem cache is keyed by
-    * scheme, authority and user, not by configuration, so it is
-    * disabled for `file:` in this session — otherwise whichever
-    * `file:` instance the JVM made first would answer. The caller's
-    * session is left as it is. */
-  def microBatchSession(spark: SparkSession,
-      shufflePartitions: Int): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
-    graft.GraftSession.noForkFile.foreach { case (k, v) => ss.conf.set(k, v) }
-    ss.conf.set("fs.file.impl.disable.cache", true)
-    ss
+    * `shufflePartitions` shuffle/state partitions, the `stateStore`
+    * provider (`hdfs`, or `rocksdb` with changelog checkpointing),
+    * adaptive execution on or off (`aqe`), only the latest committed
+    * batch of checkpoint files retained (no loop restarts from an old
+    * batch), and `file:` resolved to the no-fork filesystem for both
+    * Hadoop APIs. Sessions from [[graft.GraftSession.local]] already
+    * resolve `file:` so, but a caller's session built elsewhere (a
+    * benchmark harness, an outside user of `graft.api`) may not. The
+    * FileSystem cache is keyed by scheme, authority and user, not by
+    * configuration, so it is disabled for `file:` in this session —
+    * otherwise whichever `file:` instance the JVM made first would
+    * answer. The caller's session is left as it is.
+    *
+    * Each distinct configuration is built once per SparkContext and
+    * shared: every session that runs a stream registers a
+    * `StreamingQueryListenerBus` on the context for the life of the
+    * JVM, so a session per loop would leave one per run. Callers set
+    * no conf on the returned session. */
+  def microBatchSession(spark: SparkSession, shufflePartitions: Int,
+      stateStore: String, aqe: Boolean): SparkSession = {
+    require(stateStore == "hdfs" || stateStore == "rocksdb",
+      s"stateStore must be 'hdfs' or 'rocksdb', got '$stateStore'")
+    sessions.keySet.removeIf(_._1.isStopped)
+    sessions.computeIfAbsent((spark.sparkContext, shufflePartitions, stateStore, aqe), _ => {
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+      ss.conf.set("spark.sql.streaming.minBatchesToRetain", 1)
+      ss.conf.set("spark.sql.adaptive.enabled", aqe)
+      graft.GraftSession.noForkFile.foreach { case (k, v) => ss.conf.set(k, v) }
+      ss.conf.set("fs.file.impl.disable.cache", true)
+      // state-store provider: the default HDFS-backed map rewrites every
+      // partition's FULL state per checkpoint — fine for kilobyte state,
+      // quadratic-feeling under the index-building dedup ops whose
+      // state grows each batch. RocksDB with changelog checkpointing
+      // writes only the batch's changed entries — the production choice
+      // for large streaming state. The provider is pinned into each
+      // query's checkpoint, like the partition count.
+      if (stateStore == "rocksdb") {
+        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        ss.conf.set(
+          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+          "true")
+      }
+      ss
+    })
   }
 }

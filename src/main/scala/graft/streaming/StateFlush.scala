@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-of-replay flush for timer-gated operators (SURVEY §2.9 T7/T8
@@ -11,142 +10,90 @@ import org.apache.spark.sql.functions._
   * streaming-vs-batch tail gap. Spark 4's state data source closes it
   * WITHOUT sentinel events: after the query stops, read the stateful
   * operator's surviving state straight from the checkpoint
-  * (`spark.read.format("statestore")`) and apply the operator's own
-  * emission logic to it as one batch step. Streamed output ∪ flush =
-  * the batch twin, exactly.
+  * (the `statestore` data source) and run the operator's OWN close
+  * step on every key at [[StreamOps.EndOfStream]] — the function its
+  * timer path runs at the live watermark, so the two can never drift.
+  * Streamed ∪ flush = the batch twin, exactly.
   *
   * This is also the production drain pattern: stop a continuous
   * pipeline at a corpus epoch, flush its open windows from the
   * checkpoint, and hand downstream a COMPLETE result without waiting a
   * watermark-delay past the last real event.
   *
-  * @note scale: the state source reads one row per OPEN window from the
+  * @note scale: the state source reads one row per OPEN key from the
   *   last committed snapshot — distributed, no driver materialization;
-  *   the rank/emission step is one window function / flatMap over that
-  *   (small) frame.
+  *   the close step is one flatMap over that (small) frame.
   */
 object StateFlush {
 
+  /** Every surviving `(key, state)` row of the stopped query at
+    * `checkpoint`, closed by `close` at watermark `wmUs`. */
+  private def drain[K: Encoder, S: Encoder, O: Encoder](spark: SparkSession,
+      checkpoint: String, close: StreamOps.Close[K, S, O],
+      wmUs: Long = StreamOps.EndOfStream): Dataset[O] =
+    spark.read.format("statestore").option("path", checkpoint).load()
+      .select(col("key.value").as("_1"), col("value.groupState").as("_2"))
+      .as[(K, S)](Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[S]]))
+      .flatMap { case (k, s) =>
+        val out = new StreamOps.Out[O]
+        close(k, s, wmUs, out)
+        out
+      }
+
   /** Top-k emission for every window still open in a stopped
-    * [[StreamOps.windowTopN]] query: same ordering contract as the
-    * timer path ((n DESC, user_id ASC), rank ≤ k). */
+    * [[StreamOps.windowTopN]] query. */
   def windowTopN(spark: SparkSession, checkpoint: String,
       k: Int = 3): Dataset[WinTopRow] = {
     import spark.implicits._
-    val w = Window.partitionBy(col("ws_us"))
-      .orderBy(col("n").desc, col("user_id"))
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("ws_us"),
-        explode(col("value.groupState.counts")).as(Seq("user_id", "n")))
-      .withColumn("rnk", row_number().over(w).cast("int"))
-      .filter(col("rnk") <= k)
-      .select(col("ws_us"), col("user_id"), col("n"), col("rnk"))
-      .as[WinTopRow]
+    drain(spark, checkpoint, StreamOps.windowTopNClose(k, 0L))
   }
 
-  /** Pending-row drain for a stopped [[StreamOps.overRows]] query: a
-    * bounded replay ends with every row above the final watermark still
-    * buffered per key. Those rows are complete in state (the operator
-    * never drops un-emitted data), so emitting them here in the same
-    * `(ts, event_id)` order, seeded with the key's saved frame context,
-    * yields exactly the rows the batch window-function twin produces
-    * for the tail. */
+  /** Pending-row drain for a stopped [[StreamOps.overRows]] query: the
+    * rows above the final watermark are complete in state (the operator
+    * never drops un-emitted data), so emitting them in `(ts, event_id)`
+    * order, seeded with the key's saved frame context, yields exactly
+    * the rows the batch window-function twin produces for the tail. */
   def overRows(spark: SparkSession, checkpoint: String,
       nPrec: Int = 3): Dataset[OverRow] = {
     import spark.implicits._
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("user_id"),
-        col("value.groupState.ctx").as("ctx"),
-        col("value.groupState.pending").as("pending"))
-      .as[(Long, Seq[Long], Seq[OverPend])]
-      .flatMap { case (uid, ctx0, pending) =>
-        var ctx = ctx0
-        pending.sortBy(p => (p.ts_us, p.event_id)).map { p =>
-          val frame = ctx :+ p.c4
-          ctx = frame.takeRight(nPrec)
-          OverRow(uid, p.event_id, frame.size,
-            BigDecimal(frame.sum, 4).toDouble)
-        }
-      }
+    drain(spark, checkpoint, StreamOps.overRowsClose(nPrec))
   }
 
   /** Final resolution for a stopped
     * [[StreamOps.cepGroupRangeReluctantStream]] /
     * [[StreamOps.cepGroupRangeGreedyStream]] query: the stream is
-    * over, so every live partial is dead by definition and every
-    * anchor's buffered completion set is complete — resolve each
-    * anchor to its extremal count exactly as the automaton does when
-    * an anchor's last partial dies mid-stream. Streamed ∪ this = the
-    * batch closed-range kernel, exactly. */
+    * over, so every live partial is dead and every anchor's buffered
+    * completion set is complete — each anchor resolves to its extremal
+    * count exactly as when its last partial dies mid-stream. */
   def groupRangeClosed(spark: SparkSession, checkpoint: String,
       keyCol: String, group: Seq[(String, org.apache.spark.sql.Column)],
       m: Int, post: Seq[(String, org.apache.spark.sql.Column)],
       greedy: Boolean,
       pre: Seq[(String, org.apache.spark.sql.Column)] = Nil): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val g = group.size
-    val npre = pre.size
-    val rows = spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("k"),
-        col("value.groupState.cIdsFlat").as("cIdsFlat"),
-        col("value.groupState.cLens").as("cLens"),
-        col("value.groupState.cReps").as("cReps"),
-        col("value.groupState.cTotalUs").as("cTotalUs"))
-      .as[(Long, Seq[Long], Seq[Int], Seq[Int], Seq[Long])]
-      .flatMap { case (k, flat, lens, reps, totals) =>
-        val cs = scala.collection.mutable.ArrayBuffer
-          .empty[(Array[Long], Array[Long], Int, Long)]
-        var off = 0
-        lens.indices.foreach { i =>
-          val all = flat.slice(off, off + lens(i)).toArray
-          off += lens(i)
-          val cut = npre + g * reps(i)
-          cs += ((all.take(cut), all.drop(cut), reps(i), totals(i)))
-        }
-        cs.groupBy(_._1(0)).valuesIterator.flatMap { anch =>
-          val pick = if (greedy) anch.map(_._3).max else anch.map(_._3).min
-          anch.filter(_._3 == pick).map { case (gi, pi, r, t) =>
-            GRMatch(k, gi.toSeq, pi.toSeq, r, t) }
-        }
-      }
+    val rows = drain(spark, checkpoint,
+      StreamOps.groupRangeClose(pre.size, group.size, 0L, greedy))
     StreamOps.groupRangeClosedShape(rows.toDF(), keyCol, pre, group, m, post)
   }
 
   /** Final resolution for a stopped [[StreamOps.cepSkipToNextStream]]
-    * query: the stream ends, so every unresolved start's candidate set
-    * is complete in state — emit each pending A's earliest buffered B
-    * inside its window (exactly what the batch argmin computes for the
-    * tail), drop starts with none. */
+    * query: every unresolved start's candidate set is complete, so each
+    * pending A emits its earliest buffered B inside its window; starts
+    * with none drop. */
   def cepSkipToNext(spark: SparkSession, checkpoint: String,
       withinUs: Long): Dataset[SkipNextMatch] = {
     import spark.implicits._
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("k"),
-        col("value.groupState.openA").as("openA"),
-        col("value.groupState.bufB").as("bufB"))
-      .as[(Long, Seq[(Long, Long)], Seq[(Long, Long)])]
-      .flatMap { case (k, openA, bufB) =>
-        val bs = bufB.sortBy(identity)
-        openA.sortBy(identity).flatMap { case (aTs, aId) =>
-          bs.find { case (bTs, _) => bTs > aTs && bTs <= aTs + withinUs }
-            .map { case (bTs, bId) => SkipNextMatch(k, aId, bId, bTs - aTs) }
-        }
-      }
+    drain(spark, checkpoint, StreamOps.skipToNextClose(withinUs))
   }
 
   /** Each user's final pending hour bucket for a stopped
     * [[StreamOps.forwardFill]] query — the one row per key a bounded
     * replay omits (a tail bucket flushes only when its successor
-    * opens). Streamed ∪ this = the batch scaffold's per-user rows up to
-    * each user's own last hour. */
+    * opens). */
   def forwardFill(spark: SparkSession,
       checkpoint: String): Dataset[FillRow] = {
     import spark.implicits._
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("user_id"),
-        col("value.groupState.curHourUs").as("h_us"),
-        col("value.groupState.curValue").as("v_fill"))
-      .as[FillRow]
+    drain(spark, checkpoint, StreamOps.forwardFillClose)
   }
 
   /** Remaining cumulative sub-window emissions for a stopped
@@ -155,28 +102,8 @@ object StateFlush {
   def cumulateAppend(spark: SparkSession, checkpoint: String,
       sizeHours: Int = 4, stepMinutes: Int = 60): Dataset[CumRow] = {
     import spark.implicits._
-    val sizeUs = sizeHours * 3600L * 1000000L
-    val stepUs = stepMinutes * 60L * 1000000L
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("ws"),
-        col("value.groupState.steps").as("steps"),
-        col("value.groupState.emittedUpTo").as("emittedUpTo"))
-      .as[(Long, Map[Long, (Long, Long)], Long)]
-      .flatMap { case (ws, steps, emittedUpTo) =>
-        if (steps.isEmpty) Iterator.empty
-        else {
-          val first = steps.keysIterator.min
-          val start = math.max(first, emittedUpTo + stepUs)
-          Iterator.iterate(start)(_ + stepUs)
-            .takeWhile(_ <= ws + sizeUs)
-            .map { we =>
-              val (n, s6) = steps.iterator.filter(_._1 <= we)
-                .foldLeft((0L, 0L)) { case ((a, b), (_, (n2, s2))) => (a + n2, b + s2) }
-              CumRow(ws, we, n,
-                BigDecimal(s6, 6).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-            }
-        }
-      }
+    drain(spark, checkpoint, StreamOps.cumulateClose(
+      sizeHours * 3600L * 1000000L, stepMinutes * 60L * 1000000L))
   }
 
   /** Partial-tail drain for a stopped [[StreamOps.countWindows]]
@@ -186,44 +113,16 @@ object StateFlush {
   def countWindows(spark: SparkSession,
       checkpoint: String): Dataset[CountWinRow] = {
     import spark.implicits._
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("user_id"),
-        col("value.groupState.bucket").as("bucket"),
-        col("value.groupState.cnt").as("cnt"),
-        col("value.groupState.sum6").as("sum6"))
-      .as[(Long, Int, Int, Long)]
-      .filter(_._3 > 0)
-      .map { case (uid, bucket, cnt, s6) =>
-        CountWinRow(uid, bucket, cnt, gapSum4(s6))
-      }
+    drain(spark, checkpoint, StreamOps.countWindowsClose)
   }
 
-  /** The shared emission rounding of [[StreamOps.gapFillHourlyStream]]:
-    * decimal(18,6) micro-units → `round(·, 4)` double, exactly Spark's
-    * `round(sum(CAST ... DECIMAL(18,6)), 4)` in the batch oracle. */
-  private[streaming] def gapSum4(s6: Long): Double =
-    BigDecimal(s6, 6).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Grid drain for a stopped [[StreamOps.gapFillHourlyStream]] query:
-    * sweep every key's cursor from its checkpointed position to the
-    * grid end `hiUs` (exclusive), emitting pending accumulators and
+    * the operator's own cursor sweep with the grid end `hiUs`
+    * (exclusive) as the watermark, emitting pending accumulators and
     * explicit zeros — the flush half of streamed ∪ flushed == batch. */
   def gapFill(spark: SparkSession, checkpoint: String,
       hiUs: Long): Dataset[GapRow] = {
     import spark.implicits._
-    val hourUs = 3600L * 1000000L
-    spark.read.format("statestore").option("path", checkpoint).load()
-      .select(col("key.value").as("event_type"),
-        col("value.groupState.nextHourUs").as("nextHourUs"),
-        col("value.groupState.pending").as("pending"))
-      .as[(String, Long, Map[Long, (Long, Long)])]
-      .flatMap { case (key, nextHourUs, pending) =>
-        Iterator.iterate(nextHourUs)(_ + hourUs)
-          .takeWhile(_ + hourUs <= hiUs)
-          .map { h =>
-            val (n, s6) = pending.getOrElse(h, (0L, 0L))
-            GapRow(h, key, n, gapSum4(s6))
-          }
-      }
+    drain(spark, checkpoint, StreamOps.gapFillClose, hiUs)
   }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.{Det, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Typed rows for the stateful forward-fill processor. */
 case class FillEvent(user_id: Long, ts_us: Long, event_id: Long, value: Double)
@@ -59,25 +60,23 @@ case class ColdIndexState(docs: List[ColdPosting])
   * already-emitted sub-window ends. */
 case class CumState(steps: Map[Long, (Long, Long)], emittedUpTo: Long)
 case class CumRow(ws_us: Long, we_us: Long, n: Long, sum_value: Double)
-/** Kleene-pattern automaton rows ([[StreamOps.cepKleeneStream]]):
-  * `prev` is the class of the key's last relevant event; `aId/aTsUs`
-  * are valid when prev == "A"; the run fields hold the in-progress
-  * anchored B+ run. O(1) per key by construction. */
-case class KleeneEvent(k: Long, ts_us: Long, event_id: Long, cls: String)
+/** Kleene-pattern automaton rows, shared by the three contiguous twins
+  * ([[StreamOps.cepKleeneStream]], [[StreamOps.cepKleeneMeasuresStream]],
+  * [[StreamOps.cepKleeneUntilStream]]) and the two relaxed ones: `v6` is
+  * the event's value as exact decimal(18,6) micro-units (0 where no
+  * measure is taken) and `tsw` the raw timestamp (the event-time-timeout
+  * checker needs the watermarked column in the fMGWS child). In the
+  * state, `prev` is the class of the key's last relevant event;
+  * `aId/aTsUs` are valid when prev == "A"; the run fields hold the
+  * in-progress anchored B+ run, and `acc` its accumulator (the last B's
+  * time, or the measures twin's micro-unit sum). O(1) per key. */
+case class KleeneEvent(k: Long, ts_us: Long, event_id: Long, cls: String,
+    v6: Long, tsw: java.sql.Timestamp)
 case class KleeneState(prev: String, aId: Long, aTsUs: Long,
     runActive: Boolean, runAId: Long, runATsUs: Long,
-    firstB: Long, lastB: Long, nB: Long, lastBTsUs: Long = 0L)
+    firstB: Long, lastB: Long, nB: Long, acc: Long)
 case class KleeneMatch(user_id: Long, a_id: Long, n_b: Long,
     first_b_id: Long, last_b_id: Long, c_id: Long, span_us: Long)
-/** [[StreamOps.cepKleeneMeasuresStream]] rows: the [[KleeneState]]
-  * automaton plus the run's MEASURES accumulator — `sumB6` is the
-  * exact decimal(18,6) sum of the loop events' value as micro-units
-  * (×10⁶ long), so streaming and batch sums are bit-identical. */
-case class KleeneMEvent(k: Long, ts_us: Long, event_id: Long, cls: String,
-    v6: Long)
-case class KleeneMState(prev: String, aId: Long, aTsUs: Long,
-    runActive: Boolean, runAId: Long, runATsUs: Long,
-    firstB: Long, lastB: Long, nB: Long, sumB6: Long)
 case class KleeneMeasuresMatch(user_id: Long, a_id: Long, c_id: Long,
     span_us: Long, n_clicks: Long, sum_value: Double, avg_value: Double,
     first_click: Long, last_click: Long)
@@ -101,17 +100,13 @@ case class SessCapRow(user_id: Long, event_id: Long, session_id: Int)
   * `within` horizon (an anchor dies the moment any later event sits
   * past its deadline, and — via the event-time timer — when the
   * watermark passes its deadline on a key that has gone quiet, so
-  * idle keys hold no state past their last anchor's horizon). */
+  * idle keys hold no state past their last anchor's horizon).
+  * `bSum6s` are cumulative micro-unit prefix sums parallel to `bIds`
+  * (`bSum6s(L−1)` IS prefix L's exact decimal(18,6) sum ×10⁶; all zero
+  * for the twin that takes no measure). */
 case class RelaxedAnchor(aId: Long, aTsUs: Long, bIds: Seq[Long],
-    closedUpTo: Int)
+    bSum6s: Seq[Long], closedUpTo: Int)
 case class RelaxedState(anchors: List[RelaxedAnchor])
-/** Input rows of the relaxed automata: [[KleeneEvent]] plus the raw
-  * watermark-tagged timestamp (the event-time-timeout checker needs
-  * the watermarked column to survive into the fMGWS child). */
-case class RelaxedEvent(k: Long, ts_us: Long, event_id: Long, cls: String,
-    tsw: java.sql.Timestamp)
-case class RelaxedMEvent(k: Long, ts_us: Long, event_id: Long, cls: String,
-    v6: Long, tsw: java.sql.Timestamp)
 /** [[StreamOps.cepGroupTimesStream]] rows — the MULTIPLEXED group-
   * quantifier automaton: `mask` carries which group members an event
   * satisfies (bit j = member j's predicate), each [[GTPartial]] is one
@@ -131,9 +126,10 @@ case class GTEvent(k: Long, ts_us: Long, event_id: Long, mask: Int,
   * `idsFlat`) — the [[ContCandPack]] trick applied to STATE: a nested
   * `List[case class(Seq[Long])]` state row pays the object-encoder
   * per touched key per micro-batch; primitive arrays serialize flat
-  * (measured 2.5-4x on the sf0.1 replay probe). */
+  * (measured 2.5-4x on the sf0.1 replay probe). `phase` is read only
+  * by the closed-range automaton ([[GRState]]). */
 case class GTState(idsFlat: Array[Long], lens: Array[Int],
-    firstTs: Array[Long], lastTs: Array[Long])
+    firstTs: Array[Long], lastTs: Array[Long], phase: Array[Int])
 case class GTMatch(user_id: Long, ids: Seq[Long], total_us: Long)
 /** [[StreamOps.cepGroupKleeneStream]] rows — the group-Kleene boundary
   * emission: FIRST/LAST/COUNT per completed repetition (the MEASURES a
@@ -142,30 +138,22 @@ case class GTMatch(user_id: Long, ids: Seq[Long], total_us: Long)
 case class GKMatch(user_id: Long, first_id: Long, last_id: Long,
     reps: Int, total_us: Long)
 /** [[StreamOps.cepGroupRangeReluctantStream]] state — the closed-range
-  * automaton's live partials (packed primitive arrays exactly as
-  * [[GTState]]) PLUS the per-anchor PENDING COMPLETIONS the
-  * reluctant/greedy pick buffers until the anchor resolves (= its last
-  * live partial dies; until then a shorter/longer count could still
-  * complete). `phase(i)` = −1 while partial i walks the repeated group
-  * slots (next slot = len mod g), else `(reps << 8) | postIdx` while
-  * it walks the post chain at its forked repetition count. Completions
-  * pack as `cIdsFlat`/`cLens` (group ids then post ids) with their
-  * `cReps`/`cTotalUs`. */
-case class GRState(idsFlat: Array[Long], lens: Array[Int],
-    firstTs: Array[Long], lastTs: Array[Long], phase: Array[Int],
-    cIdsFlat: Array[Long], cLens: Array[Int], cReps: Array[Int],
-    cTotalUs: Array[Long])
+  * automaton's `live` partials PLUS the per-anchor PENDING COMPLETIONS
+  * (`done`) the reluctant/greedy pick buffers until the anchor resolves
+  * (= its last live partial dies; until then a shorter/longer count
+  * could still complete), both packed as [[GTState]]. A live
+  * `phase(i)` = −1 while partial i walks the repeated group slots
+  * (next slot = len mod g), else `(reps << 8) | postIdx` while it walks
+  * the post chain at its forked repetition count. A completion holds
+  * its group ids then post ids, its first and last event time, and its
+  * repetition count as `phase`. */
+case class GRState(live: GTState, done: GTState)
 /** One resolved closed-range match: `gids` = the bound group events
   * (length g·reps — the final projection null-pads to the m-shape),
   * `pids` = the post-chain events. */
 case class GRMatch(user_id: Long, gids: Seq[Long], pids: Seq[Long],
     reps: Int, total_us: Long)
-/** [[StreamOps.cepKleeneRelaxedMeasuresStream]] rows: the relaxed
-  * anchor plus cumulative micro-unit prefix sums parallel to `bIds`
-  * (`bSum6s(L−1)` IS prefix L's exact decimal(18,6) sum ×10⁶). */
-case class RelaxedMAnchor(aId: Long, aTsUs: Long, bIds: Seq[Long],
-    bSum6s: Seq[Long], closedUpTo: Int)
-case class RelaxedMState(anchors: List[RelaxedMAnchor])
+/** [[StreamOps.cepKleeneRelaxedMeasuresStream]] output. */
 case class RelaxedMMatch(user_id: Long, a_id: Long, n_b: Long,
     first_b_id: Long, last_b_id: Long, c_id: Long, sum_b: Double,
     avg_b: Double, span_us: Long)
@@ -190,8 +178,6 @@ case class SkipNextMatch(user_id: Long, a_id: Long, b_id: Long, gap_us: Long)
   * the rows still above the watermark, un-emitted. */
 case class OverPend(ts_us: Long, event_id: Long, c4: Long)
 case class OverState(ctx: Seq[Long], pending: Seq[OverPend])
-/** ValueState wrapper for the TWS port's frame context. */
-case class OverCtx(vals: Seq[Long])
 case class OverRow(user_id: Long, event_id: Long, n_frame: Int, over_sum: Double)
 
 /** Driver-side global top-k state for [[StreamOps.topNContinuous]]:
@@ -1048,6 +1034,76 @@ object StreamOps {
       delayUs: Long = 10L * 60 * 1000000): Dataset[FillEvent] =
     PerKeyWatermark(ev, delayUs)
 
+  /** What a [[keyedAutomaton]] step or close step emits into. */
+  private[streaming] type Out[O] = scala.collection.mutable.ArrayBuffer[O]
+
+  /** An operator's close step: given the watermark `wmUs`, emit what the
+    * watermark has proven for key `K` and return the state that stays
+    * open. The timer path runs it at the live watermark; the
+    * end-of-replay drain ([[StateFlush]]) runs the SAME function at
+    * [[EndOfStream]]. */
+  private[streaming] type Close[K, S, O] = (K, S, Long, Out[O]) => S
+
+  /** The watermark at which every open window, run and partial match of
+    * a stopped stream is closed. */
+  private[streaming] val EndOfStream = Long.MaxValue
+
+  private def noClose[K, S, O]: Close[K, S, O] = (_, s, _, _) => s
+
+  /** The one keyed event-time automaton frame behind every per-key
+    * operator below — Flink's `KeyedProcessFunction` with keyed state, an
+    * event-time timer and idle-state removal — on
+    * `flatMapGroupsWithState`: group `events` by `key`, start each key
+    * at `init`, drop rows at or below the watermark when `late` names
+    * their event time, feed the rest through `step` (in `order`'s
+    * `(ts, id)` order when given), then — whenever the input carries a
+    * watermark — run `close` at it, on a timer firing exactly as after
+    * new data. A state `isIdle` holds for is REMOVED (it must equal
+    * `init` in every field a later step reads, so removal is
+    * invisible); any other state is kept, and with a `deadline` the
+    * event-time timer is armed to fire once the watermark passes the
+    * earliest live deadline (µs), clamped above the current watermark
+    * as the API requires. */
+  private def keyedAutomaton[K: Encoder, E, S: Encoder, O: Encoder](
+      events: Dataset[E], key: E => K, init: S,
+      order: Option[E => (Long, Long)], late: Option[E => Long],
+      isIdle: S => Boolean, deadline: Option[(K, S) => Long])(
+      step: (K, S, E, Out[O]) => S, close: Close[K, S, O]): Dataset[O] = {
+    val watermarked = events.queryExecution.analyzed.output
+      .exists(_.metadata.contains(EventTimeWatermark.delayKey))
+    val timeout =
+      if (deadline.isDefined) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    events.groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, timeout) { (k, it, state) =>
+        val wmUs =
+          if (watermarked) state.getCurrentWatermarkMs() * 1000L else Long.MinValue
+        var st = state.getOption.getOrElse(init)
+        val out = new Out[O]
+        val fresh = late.fold(it)(ts => it.filter(ts(_) > wmUs))
+        order.fold(fresh)(o => fresh.toVector.sortBy(o).iterator)
+          .foreach(e => st = step(k, st, e, out))
+        if (watermarked) st = close(k, st, wmUs, out)
+        if (isIdle(st)) state.remove()
+        else {
+          state.update(st)
+          deadline.foreach(d => state.setTimeoutTimestamp(math.max(
+            Math.floorDiv(d(k, st), 1000L), state.getCurrentWatermarkMs() + 1L)))
+        }
+        out.iterator
+      }
+  }
+
+  /** The shared decimal rounding of every exact micro-unit sum:
+    * decimal(18,6) micro-units → `round(·, 4)` double, exactly Spark's
+    * `round(sum(CAST ... DECIMAL(18,6)), 4)` in the batch twins. */
+  private def round4(s6: Long): Double =
+    BigDecimal(s6, 6).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private def r4(d: Double): Double =
+    java.math.BigDecimal.valueOf(d)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** T8 Kleene: streaming twin of [[CepOps.cepKleene]] (`A B+ C` with
     * skip-past-last-row) as a per-key O(1)-state automaton
     * (`flatMapGroupsWithState`): track the class of the last relevant
@@ -1072,42 +1128,63 @@ object StreamOps {
       withinUs: Long): Dataset[KleeneMatch] = {
     val sp = ev.sparkSession
     import sp.implicits._
+    kleeneContiguous[KleeneMatch](
+      kleeneEvents(ev, keyCol, tsCol, idCol, predA, predB, predC, lit(0L)),
+      (_, e) => e.ts_us) { (key, st, e) =>
+      if (e.ts_us > st.runATsUs + withinUs) None
+      else Some(KleeneMatch(key, st.runAId, st.nB, st.firstB, st.lastB,
+        e.event_id, e.ts_us - st.runATsUs))
+    }
+  }
+
+  /** The classified event projection of the five Kleene twins: class
+    * A/B/C by the first matching predicate (unclassified rows dropped),
+    * `value`'s exact micro-units, and the raw timestamp. */
+  private def kleeneEvents(ev: DataFrame, keyCol: String, tsCol: String,
+      idCol: String, predA: Column, predB: Column, predC: Column,
+      value: Column): Dataset[KleeneEvent] = {
+    val sp = ev.sparkSession
+    import sp.implicits._
     ev.withColumn("__cls",
         when(predA, lit("A")).when(predB, lit("B")).when(predC, lit("C")))
       .filter(col("__cls").isNotNull)
       .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"), col("__cls").as("cls"))
+        col(idCol).as("event_id"), col("__cls").as("cls"),
+        (value.cast("decimal(18,6)") * lit(1000000L)).cast("long").as("v6"),
+        col(tsCol).as("tsw"))
       .as[KleeneEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[KleeneState, KleeneMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        var st = state.getOption.getOrElse(
-          KleeneState("", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[KleeneMatch]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          e.cls match {
-            case "A" => // kills any open run (A is not a valid terminator)
-              st = KleeneState("A", e.event_id, e.ts_us,
-                runActive = false, 0L, 0L, 0L, 0L, 0L)
-            case "B" =>
-              st =
-                if (st.runActive)
-                  st.copy(prev = "B", lastB = e.event_id, nB = st.nB + 1,
-                    lastBTsUs = e.ts_us)
-                else if (st.prev == "A") // anchor: B immediately after A
-                  KleeneState("B", 0L, 0L, runActive = true,
-                    st.aId, st.aTsUs, e.event_id, e.event_id, 1L, e.ts_us)
-                else st.copy(prev = "B") // unanchored B — transparent run
-            case _ => // "C"
-              if (st.runActive && e.ts_us <= st.runATsUs + withinUs)
-                out += KleeneMatch(key, st.runAId, st.nB, st.firstB,
-                  st.lastB, e.event_id, e.ts_us - st.runATsUs)
-              st = KleeneState("C", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L)
-          }
-        }
-        state.update(st)
-        out.iterator
-      }
+  }
+
+  /** The contiguous `A B+ C` automaton of the three Kleene twins: they
+    * differ only in the run accumulator (`acc(prev, b)`, seeded with 0
+    * on the anchoring B) and in the row `emit` makes when a C ends an
+    * active run. Idle — and removed — whenever no run is active and the
+    * last relevant event was not an A: every field is then unread, so
+    * the row equals the start state. */
+  private def kleeneContiguous[O: Encoder](events: Dataset[KleeneEvent],
+      acc: (Long, KleeneEvent) => Long)(
+      emit: (Long, KleeneState, KleeneEvent) => Option[O]): Dataset[O] = {
+    val sp = events.sparkSession
+    import sp.implicits._
+    val start = KleeneState("", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L, 0L)
+    keyedAutomaton[Long, KleeneEvent, KleeneState, O](events, _.k, start,
+      Some(e => (e.ts_us, e.event_id)), None,
+      s => !s.runActive && s.prev != "A", None)((key, st, e, out) =>
+      e.cls match {
+        case "A" => // kills any open run (A is not a valid terminator)
+          start.copy(prev = "A", aId = e.event_id, aTsUs = e.ts_us)
+        case "B" =>
+          if (st.runActive)
+            st.copy(prev = "B", lastB = e.event_id, nB = st.nB + 1,
+              acc = acc(st.acc, e))
+          else if (st.prev == "A") // anchor: B immediately after A
+            KleeneState("B", 0L, 0L, runActive = true, st.aId, st.aTsUs,
+              e.event_id, e.event_id, 1L, acc(0L, e))
+          else st.copy(prev = "B") // unanchored B — transparent run
+        case _ => // "C": ends the run, matched or not
+          if (st.runActive) out ++= emit(key, st, e)
+          start
+      }, noClose)
   }
 
   /** Streaming twin of [[graft.streaming.CepOps.cepKleeneRelaxed]] —
@@ -1131,78 +1208,53 @@ object StreamOps {
       idCol: String, predA: Column, predB: Column, predC: Column,
       withinUs: Long, maxPrefix: Int,
       delay: String = "10 minutes"): Dataset[KleeneMatch] = {
-    require(maxPrefix >= 1, "maxPrefix must be >= 1")
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withWatermark(tsCol, delay)
-      .withColumn("__cls",
-        when(predA, lit("A")).when(predB, lit("B")).when(predC, lit("C")))
-      .filter(col("__cls").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"), col("__cls").as("cls"),
-        col(tsCol).as("tsw"))
-      .as[RelaxedEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[RelaxedState, KleeneMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        if (state.hasTimedOut) {
-          // quiet key: the watermark passed a deadline — expire every
-          // anchor no in-horizon event can still close (an event this
-          // late would be watermark-dropped before reaching us)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val live = state.getOption.map(_.anchors).getOrElse(Nil)
-            .filter(a => wmUs <= a.aTsUs + withinUs)
-          if (live.isEmpty) state.remove()
-          else {
-            state.update(RelaxedState(live))
-            armRelaxedTimer(state, live.map(a => a.aTsUs + withinUs))
-          }
-          Iterator.empty
-        } else {
-        var anchors = state.getOption.map(_.anchors).getOrElse(Nil)
-        val out = scala.collection.mutable.ArrayBuffer.empty[KleeneMatch]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          // an anchor whose deadline any event has passed can never
-          // close another prefix — drop it before processing
-          anchors = anchors.filter(a => e.ts_us <= a.aTsUs + withinUs)
-          e.cls match {
-            case "A" =>
-              anchors = RelaxedAnchor(e.event_id, e.ts_us, Vector.empty, 0) :: anchors
-            case "B" =>
-              anchors = anchors.map { a =>
-                if (a.bIds.length < maxPrefix) a.copy(bIds = a.bIds :+ e.event_id)
-                else a
-              }
-            case _ => // "C" — in-horizon by the filter above
-              anchors = anchors.flatMap { a =>
-                var l = a.closedUpTo + 1
-                while (l <= a.bIds.length) {
-                  out += KleeneMatch(key, a.aId, l.toLong, a.bIds.head,
-                    a.bIds(l - 1), e.event_id, e.ts_us - a.aTsUs)
-                  l += 1
-                }
-                val closed = a.copy(closedUpTo = a.bIds.length)
-                // all prefixes closed and no room for more — retire
-                if (closed.closedUpTo >= maxPrefix) None else Some(closed)
-              }
-          }
-        }
-        if (anchors.isEmpty) state.remove()
-        else {
-          state.update(RelaxedState(anchors))
-          armRelaxedTimer(state, anchors.map(a => a.aTsUs + withinUs))
-        }
-        out.iterator
-        }
-      }
+    kleeneRelaxed[KleeneMatch](kleeneEvents(ev.withWatermark(tsCol, delay),
+        keyCol, tsCol, idCol, predA, predB, predC, lit(0L)),
+      withinUs, maxPrefix) { (key, a, l, e) =>
+      KleeneMatch(key, a.aId, l, a.bIds.head, a.bIds(l - 1), e.event_id,
+        e.ts_us - a.aTsUs)
+    }
   }
 
-  /** Arm the idle-key expiry timer at the EARLIEST live deadline (so
-    * each firing prunes what it can and re-arms for the next), clamped
-    * above the current watermark as the API requires. */
-  private def armRelaxedTimer(state: GroupState[_], deadlinesUs: Seq[Long]): Unit = {
-    val nextMs = deadlinesUs.min / 1000L + 1L
-    state.setTimeoutTimestamp(math.max(nextMs, state.getCurrentWatermarkMs() + 1L))
+  /** The relaxed-contiguity anchor automaton of the two relaxed twins:
+    * they differ only in the row `emit` makes when a C closes prefix `l`
+    * of an anchor. An anchor whose `within` deadline an event (or the
+    * watermark) has passed can never close another prefix, so it is
+    * dropped; a key with no anchor left is idle. */
+  private def kleeneRelaxed[O: Encoder](events: Dataset[KleeneEvent],
+      withinUs: Long, maxPrefix: Int)(
+      emit: (Long, RelaxedAnchor, Int, KleeneEvent) => O): Dataset[O] = {
+    require(maxPrefix >= 1, "maxPrefix must be >= 1")
+    val sp = events.sparkSession
+    import sp.implicits._
+    def live(st: RelaxedState, t: Long) =
+      st.anchors.filter(a => t <= a.aTsUs + withinUs)
+    keyedAutomaton[Long, KleeneEvent, RelaxedState, O](events, _.k,
+      RelaxedState(Nil), Some(e => (e.ts_us, e.event_id)), None,
+      _.anchors.isEmpty,
+      Some((_, s) => s.anchors.iterator.map(_.aTsUs).min + withinUs))(
+      (key, st, e, out) => RelaxedState(e.cls match {
+        case "A" =>
+          RelaxedAnchor(e.event_id, e.ts_us, Vector.empty, Vector.empty, 0) ::
+            live(st, e.ts_us)
+        case "B" =>
+          live(st, e.ts_us).map { a =>
+            if (a.bIds.length < maxPrefix)
+              a.copy(bIds = a.bIds :+ e.event_id,
+                bSum6s = a.bSum6s :+ (a.bSum6s.lastOption.getOrElse(0L) + e.v6))
+            else a
+          }
+        case _ => // "C" — in-horizon by the filter: close every open prefix
+          live(st, e.ts_us).flatMap { a =>
+            (a.closedUpTo + 1 to a.bIds.length).foreach(l => out += emit(key, a, l, e))
+            // all prefixes closed and no room for more — retire
+            if (a.bIds.length >= maxPrefix) None
+            else Some(a.copy(closedUpTo = a.bIds.length))
+          }
+      }),
+      (_, st, wmUs, _) => RelaxedState(live(st, wmUs)))
   }
 
   /** Streaming twin of [[CepOps.cepGroupTimes]] — the group quantifier
@@ -1312,7 +1364,28 @@ object StreamOps {
     val maxLen = g * maxReps
     val sp = ev.sparkSession
     import sp.implicits._
-    val mask = group.map(_._2).zipWithIndex.map { case (p, j) =>
+    partialChain[GKMatch](
+      maskEvents(ev, keyCol, tsCol, idCol, group.map(_._2), delay),
+      withinUs, maxPartials, "cepGroupKleeneStream") { (key, p, e, out) =>
+      if (((e.mask >> (p.ids.length % g)) & 1) == 0) None // slots repeat mod g
+      else {
+        val ext = p.extend(e)
+        if (ext.ids.length % g == 0) // a repetition completed
+          out += GKMatch(key, ext.ids.head, e.event_id,
+            ext.ids.length / g, e.ts_us - ext.firstTs)
+        if (ext.ids.length >= maxLen) None else Some(ext)
+      }
+    }
+  }
+
+  /** The bitmask event projection of the group automata (bit j of
+    * `mask` = predicate j matches; the bits are disjoint powers, so the
+    * sum is a bitwise OR), watermarked on the event time. */
+  private def maskEvents(ev: DataFrame, keyCol: String, tsCol: String,
+      idCol: String, preds: Seq[Column], delay: String): Dataset[GTEvent] = {
+    val sp = ev.sparkSession
+    import sp.implicits._
+    val mask = preds.zipWithIndex.map { case (p, j) =>
       when(p, lit(1 << j)).otherwise(lit(0)) }.reduce(_ + _)
     ev.withWatermark(tsCol, delay)
       .withColumn("__mask", mask.cast("int"))
@@ -1322,67 +1395,69 @@ object StreamOps {
         col(idCol).cast("long").as("event_id"),
         col("__mask").as("mask"), col(tsCol).as("tsw"))
       .as[GTEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[GTState, GKMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        final case class P(ids: Array[Long], firstTs: Long, lastTs: Long)
-        def unpack(s: GTState): List[P] = {
-          var off = 0
-          val b = List.newBuilder[P]
-          var i = 0
-          while (i < s.lens.length) {
-            b += P(java.util.Arrays.copyOfRange(s.idsFlat, off, off + s.lens(i)),
-              s.firstTs(i), s.lastTs(i))
-            off += s.lens(i)
-            i += 1
-          }
-          b.result()
-        }
-        def pack(ps: List[P]): GTState = GTState(
-          ps.iterator.flatMap(_.ids).toArray, ps.map(_.ids.length).toArray,
-          ps.map(_.firstTs).toArray, ps.map(_.lastTs).toArray)
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val live = state.getOption.map(unpack).getOrElse(Nil)
-            .filter(p => wmUs <= p.lastTs + withinUs)
-          if (live.isEmpty) state.remove()
-          else {
-            state.update(pack(live))
-            armRelaxedTimer(state, live.map(_.lastTs + withinUs))
-          }
-          Iterator.empty
-        } else {
-          var partials = state.getOption.map(unpack).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[GKMatch]
-          it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            partials = partials.filter(p => e.ts_us <= p.lastTs + withinUs)
-            val grown = partials.flatMap { p =>
-              val slot = p.ids.length % g // predicates repeat mod g
-              if (((e.mask >> slot) & 1) == 1 && e.ts_us > p.lastTs) {
-                val ext = P(p.ids :+ e.event_id, p.firstTs, e.ts_us)
-                if (ext.ids.length % g == 0) // a repetition completed
-                  out += GKMatch(key, ext.ids.head, e.event_id,
-                    ext.ids.length / g, e.ts_us - ext.firstTs)
-                if (ext.ids.length >= maxLen) None else Some(ext)
-              } else None
-            }
-            partials = grown ::: partials
-            if ((e.mask & 1) == 1)
-              partials = P(Array(e.event_id), e.ts_us, e.ts_us) :: partials
-            require(partials.size <= maxPartials,
-              s"cepGroupKleeneStream: key $key holds ${partials.size} " +
-                s"live partial matches (> maxPartials=$maxPartials) — " +
-                "the within band times per-key event rate exceeds the " +
-                "supported fan-out; tighten `within` or lower maxReps")
-          }
-          if (partials.isEmpty) state.remove()
-          else {
-            state.update(pack(partials))
-            armRelaxedTimer(state, partials.map(_.lastTs + withinUs))
-          }
-          out.iterator
-        }
-      }
+  }
+
+  /** One in-progress path of the group automata — the working form of a
+    * [[GTState]] entry, never crossing the encoder boundary. */
+  private final case class GTPartial(ids: Array[Long], firstTs: Long,
+      lastTs: Long, phase: Int = -1) {
+    def extend(e: GTEvent, phase: Int = -1): GTPartial =
+      GTPartial(ids :+ e.event_id, firstTs, e.ts_us, phase)
+  }
+
+  private def unpack(s: GTState): List[GTPartial] = {
+    var off = 0
+    List.tabulate(s.lens.length) { i =>
+      val p = GTPartial(java.util.Arrays.copyOfRange(s.idsFlat, off, off + s.lens(i)),
+        s.firstTs(i), s.lastTs(i), s.phase(i))
+      off += s.lens(i)
+      p
+    }
+  }
+
+  private def pack(ps: List[GTPartial]): GTState = GTState(
+    ps.iterator.flatMap(_.ids).toArray, ps.map(_.ids.length).toArray,
+    ps.map(_.firstTs).toArray, ps.map(_.lastTs).toArray,
+    ps.map(_.phase).toArray)
+
+  /** The partials an event (or the watermark) at `t` has not out-waited:
+    * past `lastTs + within` every later event is also past it, so the
+    * drop is exact. */
+  private def alive(ps: List[GTPartial], t: Long, withinUs: Long) =
+    ps.filter(p => t <= p.lastTs + withinUs)
+
+  private def checkFanOut(op: String, key: Long, n: Int, maxPartials: Int): Unit =
+    require(n <= maxPartials,
+      s"$op: key $key holds $n live partial matches " +
+        s"(> maxPartials=$maxPartials) — the within band times " +
+        "per-key event rate exceeds the supported fan-out; " +
+        "tighten `within` or reduce the repetition bound")
+
+  /** The live-partial automaton of [[cepSlotsStream]] and
+    * [[cepGroupKleeneStream]]: per event, drop the out-waited partials,
+    * let `grow` extend every partial the event may follow (emitting as
+    * it completes; `None` retires or rejects it) WITHOUT consuming the
+    * event, and anchor a fresh partial on a slot-0 event. A key with no
+    * live partial is idle. */
+  private def partialChain[O: Encoder](events: Dataset[GTEvent],
+      withinUs: Long, maxPartials: Int, op: String)(
+      grow: (Long, GTPartial, GTEvent, Out[O]) => Option[GTPartial]): Dataset[O] = {
+    val sp = events.sparkSession
+    import sp.implicits._
+    keyedAutomaton[Long, GTEvent, GTState, O](events, _.k, pack(Nil),
+      Some(e => (e.ts_us, e.event_id)), None, _.lens.isEmpty,
+      Some((_, s) => s.lastTs.min + withinUs))(
+      (key, st, e, out) => {
+        val live = alive(unpack(st), e.ts_us, withinUs)
+        val ps = live.flatMap(p =>
+          if (e.ts_us > p.lastTs) grow(key, p, e, out) else None) ::: live
+        val seeded =
+          if ((e.mask & 1) == 1) GTPartial(Array(e.event_id), e.ts_us, e.ts_us) :: ps
+          else ps
+        checkFanOut(op, key, seeded.size, maxPartials)
+        pack(seeded)
+      },
+      (_, st, wmUs, _) => pack(alive(unpack(st), wmUs, withinUs)))
   }
 
   /** Streaming twin of [[CepOps.cepGroupRange]] — `(s₁ … s_g){n,m}` on
@@ -1491,149 +1566,89 @@ object StreamOps {
       "pre/group/post step names must be distinct")
     val sp = ev.sparkSession
     import sp.implicits._
+    val op = s"cepGroupRange${if (greedy) "Greedy" else "Reluctant"}Stream"
     // bit j < npre: pre step j; then g group-member bits; then post
-    val mask = (pre.map(_._2) ++ group.map(_._2) ++ post.map(_._2))
-      .zipWithIndex
-      .map { case (p, j) => when(p, lit(1 << j)).otherwise(lit(0)) }
-      .reduce(_ + _)
-    val matches = ev.withWatermark(tsCol, delay)
-      .withColumn("__mask", mask.cast("int"))
-      .filter(col("__mask") =!= 0)
-      .select(col(keyCol).cast("long").as("k"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col("__mask").as("mask"), col(tsCol).as("tsw"))
-      .as[GTEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[GRState, GRMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        final case class P(ids: Array[Long], firstTs: Long, lastTs: Long,
-          phase: Int)
-        final case class C(gids: Array[Long], pids: Array[Long], reps: Int,
-          totalUs: Long)
-        def unpack(s: GRState): (List[P], List[C]) = {
-          var off = 0
-          val pb = List.newBuilder[P]
-          var i = 0
-          while (i < s.lens.length) {
-            pb += P(java.util.Arrays.copyOfRange(s.idsFlat, off, off + s.lens(i)),
-              s.firstTs(i), s.lastTs(i), s.phase(i))
-            off += s.lens(i); i += 1
-          }
-          var coff = 0
-          val cb = List.newBuilder[C]
-          var j = 0
-          while (j < s.cLens.length) {
-            val all = java.util.Arrays.copyOfRange(s.cIdsFlat, coff, coff + s.cLens(j))
-            val cut = npre + g * s.cReps(j)
-            cb += C(all.take(cut), all.drop(cut), s.cReps(j), s.cTotalUs(j))
-            coff += s.cLens(j); j += 1
-          }
-          (pb.result(), cb.result())
-        }
-        def pack(ps: List[P], cs: List[C]): GRState = GRState(
-          ps.iterator.flatMap(_.ids).toArray, ps.map(_.ids.length).toArray,
-          ps.map(_.firstTs).toArray, ps.map(_.lastTs).toArray,
-          ps.map(_.phase).toArray,
-          cs.iterator.flatMap(c => c.gids ++ c.pids).toArray,
-          cs.map(c => c.gids.length + c.pids.length).toArray,
-          cs.map(_.reps).toArray, cs.map(_.totalUs).toArray)
-        // an anchor resolves when NO live partial carries it: the
-        // completion set is complete, the extremal count's rows emit
-        def resolveDead(partials: List[P], pend: List[C],
-            out: scala.collection.mutable.ArrayBuffer[GRMatch]): List[C] = {
-          if (pend.isEmpty) pend
-          else {
-            val liveAnchors = partials.iterator.map(_.ids(0)).toSet
-            val (blocked, ready) = pend.partition(c => liveAnchors(c.gids(0)))
-            ready.groupBy(_.gids(0)).valuesIterator.foreach { cs =>
-              val pick = if (greedy) cs.map(_.reps).max else cs.map(_.reps).min
-              cs.filter(_.reps == pick).foreach(c => out +=
-                GRMatch(key, c.gids.toSeq, c.pids.toSeq, c.reps, c.totalUs))
-            }
-            blocked
-          }
-        }
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val (ps0, cs0) = state.getOption.map(unpack).getOrElse((Nil, Nil))
-          val live = ps0.filter(p => wmUs <= p.lastTs + withinUs)
-          val out = scala.collection.mutable.ArrayBuffer.empty[GRMatch]
-          val cs = resolveDead(live, cs0, out)
-          if (live.isEmpty && cs.isEmpty) state.remove()
-          else {
-            state.update(pack(live, cs))
-            if (live.nonEmpty)
-              armRelaxedTimer(state, live.map(_.lastTs + withinUs))
-          }
-          out.iterator
-        } else {
-          var (partials, pend) = state.getOption.map(unpack).getOrElse((Nil, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[GRMatch]
-          it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            partials = partials.filter(p => e.ts_us <= p.lastTs + withinUs)
-            pend = resolveDead(partials, pend, out)
-            val adds = scala.collection.mutable.ListBuffer.empty[P]
-            partials.foreach { pp =>
-              if (pp.phase == -1) {
-                // walking the flat pre chain then the repeated group
-                val len0 = pp.ids.length
-                val slot =
-                  if (len0 < npre) len0 else npre + (len0 - npre) % g
-                if (((e.mask >> slot) & 1) == 1 && e.ts_us > pp.lastTs) {
-                  val ids2 = pp.ids :+ e.event_id
-                  val len = ids2.length
-                  if (len > npre && (len - npre) % g == 0) {
-                    val reps = (len - npre) / g
-                    if (reps >= n)
-                      adds += P(ids2, pp.firstTs, e.ts_us, reps << 8)
-                    if (reps < m)
-                      adds += P(ids2, pp.firstTs, e.ts_us, -1)
-                  } else adds += P(ids2, pp.firstTs, e.ts_us, -1)
-                }
-              } else {
-                val reps = pp.phase >> 8
-                val pi = pp.phase & 0xff
-                if (((e.mask >> (npre + g + pi)) & 1) == 1 &&
-                    e.ts_us > pp.lastTs) {
-                  val ids2 = pp.ids :+ e.event_id
-                  val cut = npre + g * reps
-                  if (pi + 1 == np)
-                    pend ::= C(ids2.take(cut), ids2.drop(cut),
-                      reps, e.ts_us - pp.firstTs)
-                  else
-                    adds += P(ids2, pp.firstTs, e.ts_us, (reps << 8) | (pi + 1))
-                }
+    val matches = keyedAutomaton[Long, GTEvent, GRState, GRMatch](
+      maskEvents(ev, keyCol, tsCol, idCol,
+        (pre ++ group ++ post).map(_._2), delay),
+      _.k, GRState(pack(Nil), pack(Nil)), Some(e => (e.ts_us, e.event_id)),
+      None, s => s.live.lens.isEmpty && s.done.lens.isEmpty,
+      Some((_, s) => s.live.lastTs.min + withinUs))(
+      (key, st, e, out) => {
+        val live = alive(unpack(st.live), e.ts_us, withinUs)
+        var pend = resolveDead(key, live, unpack(st.done), npre, g, greedy, out)
+        val adds = scala.collection.mutable.ListBuffer.empty[GTPartial]
+        live.foreach { pp =>
+          if (e.ts_us > pp.lastTs) {
+            if (pp.phase == -1) {
+              // walking the flat pre chain then the repeated group
+              val len0 = pp.ids.length
+              val slot = if (len0 < npre) len0 else npre + (len0 - npre) % g
+              if (((e.mask >> slot) & 1) == 1) {
+                val len = len0 + 1
+                if (len > npre && (len - npre) % g == 0) {
+                  val reps = (len - npre) / g
+                  if (reps >= n) adds += pp.extend(e, reps << 8)
+                  if (reps < m) adds += pp.extend(e)
+                } else adds += pp.extend(e)
+              }
+            } else {
+              val reps = pp.phase >> 8
+              val pi = pp.phase & 0xff
+              if (((e.mask >> (npre + g + pi)) & 1) == 1) {
+                if (pi + 1 == np) pend ::= pp.extend(e, reps) // completed
+                else adds += pp.extend(e, (reps << 8) | (pi + 1))
               }
             }
-            partials = adds.toList ::: partials
-            if ((e.mask & 1) == 1) {
-              // seed (pre.head when pre steps exist, else group.head);
-              // with no pre, a 1-member group completes its first
-              // repetition AT the seed, so fork its post walker here
-              partials = P(Array(e.event_id), e.ts_us, e.ts_us, -1) :: partials
-              if (npre == 0 && g == 1 && n <= 1)
-                partials = P(Array(e.event_id), e.ts_us, e.ts_us, 1 << 8) :: partials
-            }
-            require(partials.size + pend.size <= maxPartials,
-              s"cepGroupRange${if (greedy) "Greedy" else "Reluctant"}" +
-                s"Stream: key $key holds ${partials.size} live partials " +
-                s"+ ${pend.size} buffered completions " +
-                s"(> maxPartials=$maxPartials) — the within band times " +
-                "per-key event rate exceeds the supported fan-out; " +
-                "tighten `within` or the repetition bound")
           }
-          pend = resolveDead(partials, pend, out)
-          if (partials.isEmpty && pend.isEmpty) state.remove()
-          else {
-            state.update(pack(partials, pend))
-            if (partials.nonEmpty)
-              armRelaxedTimer(state, partials.map(_.lastTs + withinUs))
-          }
-          out.iterator
+        }
+        var partials = adds.toList ::: live
+        if ((e.mask & 1) == 1) {
+          // seed (pre.head when pre steps exist, else group.head);
+          // with no pre, a 1-member group completes its first
+          // repetition AT the seed, so fork its post walker here
+          partials = GTPartial(Array(e.event_id), e.ts_us, e.ts_us) :: partials
+          if (npre == 0 && g == 1 && n <= 1)
+            partials = GTPartial(Array(e.event_id), e.ts_us, e.ts_us, 1 << 8) :: partials
+        }
+        checkFanOut(op, key, partials.size + pend.size, maxPartials)
+        GRState(pack(partials), pack(pend))
+      },
+      groupRangeClose(npre, g, withinUs, greedy))
+    groupRangeClosedShape(matches.toDF(), keyCol, pre, group, m, post)
+  }
+
+  /** Resolve every anchor (a completion's first bound event) that no
+    * live partial carries any more: its completion set is complete, so
+    * the extremal count's completions all emit (NO_SKIP within it — the
+    * batch tie-break contract verbatim). Completions of a still-live
+    * anchor stay pending. A completion's `phase` is its count. */
+  private def resolveDead(key: Long, live: List[GTPartial],
+      pend: List[GTPartial], npre: Int, g: Int, greedy: Boolean,
+      out: Out[GRMatch]): List[GTPartial] =
+    if (pend.isEmpty) pend
+    else {
+      val liveAnchors = live.iterator.map(_.ids(0)).toSet
+      val (blocked, ready) = pend.partition(c => liveAnchors(c.ids(0)))
+      ready.groupBy(_.ids(0)).valuesIterator.foreach { cs =>
+        val pick = if (greedy) cs.map(_.phase).max else cs.map(_.phase).min
+        cs.filter(_.phase == pick).foreach { c =>
+          val cut = npre + g * c.phase
+          out += GRMatch(key, c.ids.take(cut).toSeq, c.ids.drop(cut).toSeq,
+            c.phase, c.lastTs - c.firstTs)
         }
       }
-    groupRangeClosedShape(matches.toDF(), keyCol, pre, group, m, post)
+      blocked
+    }
+
+  /** The closed-range close step: partials the watermark has out-waited
+    * die, and every anchor left without a live partial resolves. At
+    * [[EndOfStream]] every partial is dead, whatever `withinUs`. */
+  private[streaming] def groupRangeClose(npre: Int, g: Int, withinUs: Long,
+      greedy: Boolean): Close[Long, GRState, GRMatch] = (key, st, wmUs, out) => {
+    val live = alive(unpack(st.live), wmUs, withinUs)
+    GRState(pack(live),
+      pack(resolveDead(key, live, unpack(st.done), npre, g, greedy, out)))
   }
 
   /** The batch [[CepOps.cepGroupRangeReluctant]] column shape over
@@ -1679,89 +1694,21 @@ object StreamOps {
       s"slot chain length $slots outside the supported 2..31")
     val sp = ev.sparkSession
     import sp.implicits._
-    // bit j of mask = slot j's predicate matches (bits are disjoint
-    // powers, so the sum is a bitwise OR)
-    val mask = slotPreds.zipWithIndex.map { case (p, j) =>
-      when(p, lit(1 << j)).otherwise(lit(0)) }.reduce(_ + _)
-    val matches = ev.withWatermark(tsCol, delay)
-      .withColumn("__mask", mask.cast("int"))
-      .filter(col("__mask") =!= 0)
-      .select(col(keyCol).cast("long").as("k"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col("__mask").as("mask"), col(tsCol).as("tsw"))
-      .as[GTEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[GTState, GTMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        // internal working form — never crosses the encoder boundary
-        final case class P(ids: Array[Long], firstTs: Long, lastTs: Long)
-        def unpack(s: GTState): List[P] = {
-          var off = 0
-          val b = List.newBuilder[P]
-          var i = 0
-          while (i < s.lens.length) {
-            b += P(java.util.Arrays.copyOfRange(s.idsFlat, off, off + s.lens(i)),
-              s.firstTs(i), s.lastTs(i))
-            off += s.lens(i)
-            i += 1
-          }
-          b.result()
+    val matches = partialChain[GTMatch](
+      maskEvents(ev, keyCol, tsCol, idCol, slotPreds, delay), withinUs,
+      maxPartials,
+      if (emitEvery > 0) "cepGroupRangeStream" else "cepGroupTimesStream") {
+      (key, p, e, out) =>
+        if (((e.mask >> p.ids.length) & 1) == 0) None // next expected slot
+        else {
+          val ext = p.extend(e)
+          val len = ext.ids.length
+          if (if (emitEvery > 0) len >= emitFromLen && len % emitEvery == 0
+              else len == slots)
+            out += GTMatch(key, ext.ids.toSeq, ext.lastTs - ext.firstTs)
+          if (len == slots) None else Some(ext)
         }
-        def pack(ps: List[P]): GTState = GTState(
-          ps.iterator.flatMap(_.ids).toArray, ps.map(_.ids.length).toArray,
-          ps.map(_.firstTs).toArray, ps.map(_.lastTs).toArray)
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val live = state.getOption.map(unpack).getOrElse(Nil)
-            .filter(p => wmUs <= p.lastTs + withinUs)
-          if (live.isEmpty) state.remove()
-          else {
-            state.update(pack(live))
-            armRelaxedTimer(state, live.map(_.lastTs + withinUs))
-          }
-          Iterator.empty
-        } else {
-          var partials = state.getOption.map(unpack).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[GTMatch]
-          it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            // a partial any in-order event has out-waited can never
-            // extend again — drop before processing (exact, see class doc)
-            partials = partials.filter(p => e.ts_us <= p.lastTs + withinUs)
-            val grown = partials.flatMap { p =>
-              val slot = p.ids.length // next expected slot index
-              if (((e.mask >> slot) & 1) == 1 && e.ts_us > p.lastTs) {
-                val ext = P(p.ids :+ e.event_id, p.firstTs, e.ts_us)
-                val len = ext.ids.length
-                if (emitEvery > 0 && len >= emitFromLen &&
-                    len % emitEvery == 0)
-                  out += GTMatch(key, ext.ids.toSeq, ext.lastTs - ext.firstTs)
-                if (len == slots) {
-                  if (emitEvery == 0)
-                    out += GTMatch(key, ext.ids.toSeq, ext.lastTs - ext.firstTs)
-                  None
-                } else Some(ext)
-              } else None
-            }
-            partials = grown ::: partials
-            if ((e.mask & 1) == 1 && slots > 1)
-              partials = P(Array(e.event_id), e.ts_us, e.ts_us) :: partials
-            require(partials.size <= maxPartials,
-              s"${if (emitEvery > 0) "cepGroupRangeStream"
-                else "cepGroupTimesStream"}: key $key holds " +
-                s"${partials.size} live partial matches " +
-                s"(> maxPartials=$maxPartials) — the within band times " +
-                "per-key event rate exceeds the supported fan-out; " +
-                "tighten `within` or reduce the repetition bound")
-          }
-          if (partials.isEmpty) state.remove()
-          else {
-            state.update(pack(partials))
-            armRelaxedTimer(state, partials.map(_.lastTs + withinUs))
-          }
-          out.iterator
-        }
-      }
+    }
     val idCols = outNames.zipWithIndex.map { case (nm, i) =>
       if (emitEvery > 0) get(col("ids"), lit(i)).as(nm) // null past a
       else col("ids").getItem(i).as(nm) // short match's length (ANSI-safe)
@@ -1785,76 +1732,16 @@ object StreamOps {
       tsCol: String, idCol: String, predA: Column, predB: Column,
       predC: Column, withinUs: Long, maxPrefix: Int,
       valueCol: Column, delay: String = "10 minutes"): Dataset[RelaxedMMatch] = {
-    require(maxPrefix >= 1, "maxPrefix must be >= 1")
     val sp = ev.sparkSession
     import sp.implicits._
-    def r4(d: Double): Double =
-      java.math.BigDecimal.valueOf(d)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
-    ev.withWatermark(tsCol, delay)
-      .withColumn("__cls",
-        when(predA, lit("A")).when(predB, lit("B")).when(predC, lit("C")))
-      .filter(col("__cls").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"), col("__cls").as("cls"),
-        (valueCol.cast("decimal(18,6)") * lit(1000000L)).cast("long").as("v6"),
-        col(tsCol).as("tsw"))
-      .as[RelaxedMEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[RelaxedMState, RelaxedMMatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        if (state.hasTimedOut) {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val live = state.getOption.map(_.anchors).getOrElse(Nil)
-            .filter(a => wmUs <= a.aTsUs + withinUs)
-          if (live.isEmpty) state.remove()
-          else {
-            state.update(RelaxedMState(live))
-            armRelaxedTimer(state, live.map(a => a.aTsUs + withinUs))
-          }
-          Iterator.empty
-        } else {
-        var anchors = state.getOption.map(_.anchors).getOrElse(Nil)
-        val out = scala.collection.mutable.ArrayBuffer.empty[RelaxedMMatch]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          anchors = anchors.filter(a => e.ts_us <= a.aTsUs + withinUs)
-          e.cls match {
-            case "A" =>
-              anchors = RelaxedMAnchor(e.event_id, e.ts_us, Vector.empty,
-                Vector.empty, 0) :: anchors
-            case "B" =>
-              anchors = anchors.map { a =>
-                if (a.bIds.length < maxPrefix)
-                  a.copy(bIds = a.bIds :+ e.event_id,
-                    bSum6s = a.bSum6s :+
-                      (a.bSum6s.lastOption.getOrElse(0L) + e.v6))
-                else a
-              }
-            case _ => // "C" — in-horizon by the filter above
-              anchors = anchors.flatMap { a =>
-                var l = a.closedUpTo + 1
-                while (l <= a.bIds.length) {
-                  val sumDec = java.math.BigDecimal.valueOf(a.bSum6s(l - 1), 6)
-                  out += RelaxedMMatch(key, a.aId, l.toLong, a.bIds.head,
-                    a.bIds(l - 1), e.event_id,
-                    sumDec.setScale(4, java.math.RoundingMode.HALF_UP).doubleValue,
-                    r4(sumDec.doubleValue / l),
-                    e.ts_us - a.aTsUs)
-                  l += 1
-                }
-                val closed = a.copy(closedUpTo = a.bIds.length)
-                if (closed.closedUpTo >= maxPrefix) None else Some(closed)
-              }
-          }
-        }
-        if (anchors.isEmpty) state.remove()
-        else {
-          state.update(RelaxedMState(anchors))
-          armRelaxedTimer(state, anchors.map(a => a.aTsUs + withinUs))
-        }
-        out.iterator
-        }
-      }
+    kleeneRelaxed[RelaxedMMatch](kleeneEvents(ev.withWatermark(tsCol, delay),
+        keyCol, tsCol, idCol, predA, predB, predC, valueCol),
+      withinUs, maxPrefix) { (key, a, l, e) =>
+      val s6 = a.bSum6s(l - 1)
+      RelaxedMMatch(key, a.aId, l.toLong, a.bIds.head, a.bIds(l - 1),
+        e.event_id, round4(s6), r4(BigDecimal(s6, 6).toDouble / l),
+        e.ts_us - a.aTsUs)
+    }
   }
 
   /** Streaming twin of [[graft.operators.IntervalOps.gapFillHourly]]:
@@ -1882,35 +1769,36 @@ object StreamOps {
   def gapFillHourlyStream(ev: DataFrame, loUs: Long): Dataset[GapRow] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withWatermark("ts", "10 minutes")
-      .select(col("event_type"),
-        (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(HourUs)))
-          .as("h_us"),
-        (col("value").cast("decimal(18,6)") * lit(1000000L)).cast("long").as("v6"),
-        col("ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[GapFillState, GapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        val st = state.getOption.getOrElse(GapFillState(loUs, Map.empty))
-        var pending = st.pending
-        it.foreach { case (_, h, v6, _) =>
-          val (n0, s0) = pending.getOrElse(h, (0L, 0L))
-          pending = pending.updated(h, (n0 + 1L, s0 + v6))
-        }
-        val wmUs = state.getCurrentWatermarkMs() * 1000L
-        val out = scala.collection.mutable.ArrayBuffer.empty[GapRow]
-        var nh = st.nextHourUs
-        while (nh + HourUs <= wmUs) {
-          val (n, s6) = pending.getOrElse(nh, (0L, 0L))
-          out += GapRow(nh, key, n, StateFlush.gapSum4(s6))
-          pending -= nh
-          nh += HourUs
-        }
-        state.update(GapFillState(nh, pending))
-        out.iterator
-      }
+    keyedAutomaton[String, (String, Long, Long, java.sql.Timestamp), GapFillState, GapRow](
+      ev.withWatermark("ts", "10 minutes")
+        .select(col("event_type"),
+          (unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(HourUs)))
+            .as("h_us"),
+          (col("value").cast("decimal(18,6)") * lit(1000000L)).cast("long").as("v6"),
+          col("ts"))
+        .as[(String, Long, Long, java.sql.Timestamp)],
+      _._1, GapFillState(loUs, Map.empty), None, None, _ => false, None)(
+      { case (_, st, (_, h, v6, _), _) =>
+        val (n0, s0) = st.pending.getOrElse(h, (0L, 0L))
+        st.copy(pending = st.pending.updated(h, (n0 + 1L, s0 + v6)))
+      }, gapFillClose)
   }
+
+  /** [[gapFillHourlyStream]]'s close step: sweep the cursor over every
+    * hour the watermark has passed the end of, emitting its accumulator
+    * or an explicit zero. The replay drain runs it at the grid end. */
+  private[streaming] val gapFillClose: Close[String, GapFillState, GapRow] =
+    (key, st, wmUs, out) => {
+      var nh = st.nextHourUs
+      var pending = st.pending
+      while (nh + HourUs <= wmUs) {
+        val (n, s6) = pending.getOrElse(nh, (0L, 0L))
+        out += GapRow(nh, key, n, round4(s6))
+        pending -= nh
+        nh += HourUs
+      }
+      GapFillState(nh, pending)
+    }
 
   /** Streaming twin of
     * [[graft.operators.IntervalOps.sessionIdsCapped]]: gap+duration
@@ -1928,24 +1816,20 @@ object StreamOps {
       idCol: String, gapUs: Long, capUs: Long): Dataset[SessCapRow] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"))
-      .as[SessCapEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[SessCapState, SessCapRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        var st = state.getOption.getOrElse(SessCapState(0, 0L, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[SessCapRow]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          if (st.sid == 0 || e.ts_us - st.prev > gapUs ||
-              e.ts_us - st.start > capUs)
-            st = SessCapState(st.sid + 1, e.ts_us, e.ts_us)
-          else st = st.copy(prev = e.ts_us)
-          out += SessCapRow(key, e.event_id, st.sid)
-        }
-        state.update(st)
-        out.iterator
-      }
+    keyedAutomaton[Long, SessCapEvent, SessCapState, SessCapRow](
+      ev.select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
+          col(idCol).as("event_id"))
+        .as[SessCapEvent],
+      _.k, SessCapState(0, 0L, 0L), Some(e => (e.ts_us, e.event_id)), None,
+      _ => false, None)((key, st, e, out) => {
+      val next =
+        if (st.sid == 0 || e.ts_us - st.prev > gapUs ||
+            e.ts_us - st.start > capUs)
+          SessCapState(st.sid + 1, e.ts_us, e.ts_us)
+        else st.copy(prev = e.ts_us)
+      out += SessCapRow(key, e.event_id, next.sid)
+      next
+    }, noClose)
   }
 
   /** Streaming twin of [[CepOps.cepKleeneMeasures]] — the
@@ -1964,51 +1848,14 @@ object StreamOps {
       withinUs: Long, valueCol: Column): Dataset[KleeneMeasuresMatch] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    def r4(d: Double): Double =
-      java.math.BigDecimal.valueOf(d)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
-    ev.withColumn("__cls",
-        when(predA, lit("A")).when(predB, lit("B")).when(predC, lit("C")))
-      .filter(col("__cls").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"), col("__cls").as("cls"),
-        (valueCol.cast("decimal(18,6)") * lit(1000000L)).cast("long").as("v6"))
-      .as[KleeneMEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[KleeneMState, KleeneMeasuresMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        var st = state.getOption.getOrElse(
-          KleeneMState("", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[KleeneMeasuresMatch]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          e.cls match {
-            case "A" =>
-              st = KleeneMState("A", e.event_id, e.ts_us,
-                runActive = false, 0L, 0L, 0L, 0L, 0L, 0L)
-            case "B" =>
-              st =
-                if (st.runActive)
-                  st.copy(prev = "B", lastB = e.event_id, nB = st.nB + 1,
-                    sumB6 = st.sumB6 + e.v6)
-                else if (st.prev == "A")
-                  KleeneMState("B", 0L, 0L, runActive = true,
-                    st.aId, st.aTsUs, e.event_id, e.event_id, 1L, e.v6)
-                else st.copy(prev = "B")
-            case _ => // "C"
-              if (st.runActive && e.ts_us <= st.runATsUs + withinUs) {
-                val sumDec = java.math.BigDecimal.valueOf(st.sumB6, 6)
-                out += KleeneMeasuresMatch(key, st.runAId, e.event_id,
-                  e.ts_us - st.runATsUs, st.nB,
-                  sumDec.setScale(4, java.math.RoundingMode.HALF_UP).doubleValue,
-                  r4(sumDec.doubleValue / st.nB),
-                  st.firstB, st.lastB)
-              }
-              st = KleeneMState("C", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L, 0L)
-          }
-        }
-        state.update(st)
-        out.iterator
-      }
+    kleeneContiguous[KleeneMeasuresMatch](
+      kleeneEvents(ev, keyCol, tsCol, idCol, predA, predB, predC, valueCol),
+      (sum6, e) => sum6 + e.v6) { (key, st, e) =>
+      if (e.ts_us > st.runATsUs + withinUs) None
+      else Some(KleeneMeasuresMatch(key, st.runAId, e.event_id,
+        e.ts_us - st.runATsUs, st.nB, round4(st.acc),
+        r4(BigDecimal(st.acc, 6).toDouble / st.nB), st.firstB, st.lastB))
+    }
   }
 
   /** Streaming twin of [[CepOps.cepKleeneUntil]]: the SAME automaton as
@@ -2021,42 +1868,14 @@ object StreamOps {
       withinUs: Long): Dataset[KleeneUntilMatch] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withColumn("__cls",
-        when(predA, lit("A")).when(predB, lit("B")).when(predU, lit("C")))
-      .filter(col("__cls").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("event_id"), col("__cls").as("cls"))
-      .as[KleeneEvent]
-      .groupByKey(_.k)
-      .flatMapGroupsWithState[KleeneState, KleeneUntilMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, it, state) =>
-        var st = state.getOption.getOrElse(
-          KleeneState("", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[KleeneUntilMatch]
-        it.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-          e.cls match {
-            case "A" =>
-              st = KleeneState("A", e.event_id, e.ts_us,
-                runActive = false, 0L, 0L, 0L, 0L, 0L)
-            case "B" =>
-              st =
-                if (st.runActive)
-                  st.copy(prev = "B", lastB = e.event_id, nB = st.nB + 1,
-                    lastBTsUs = e.ts_us)
-                else if (st.prev == "A")
-                  KleeneState("B", 0L, 0L, runActive = true,
-                    st.aId, st.aTsUs, e.event_id, e.event_id, 1L, e.ts_us)
-                else st.copy(prev = "B")
-            case _ => // the until stopper: emit, run consumed, stopper outside
-              if (st.runActive && st.lastBTsUs <= st.runATsUs + withinUs)
-                out += KleeneUntilMatch(key, st.runAId, st.nB, st.firstB,
-                  st.lastB, st.lastBTsUs - st.runATsUs)
-              st = KleeneState("C", 0L, 0L, runActive = false, 0L, 0L, 0L, 0L, 0L)
-          }
-        }
-        state.update(st)
-        out.iterator
-      }
+    // the run accumulates its last loop event's time: the span ends there
+    kleeneContiguous[KleeneUntilMatch](
+      kleeneEvents(ev, keyCol, tsCol, idCol, predA, predB, predU, lit(0L)),
+      (_, e) => e.ts_us) { (key, st, _) =>
+      if (st.acc > st.runATsUs + withinUs) None
+      else Some(KleeneUntilMatch(key, st.runAId, st.nB, st.firstB, st.lastB,
+        st.acc - st.runATsUs))
+    }
   }
 
   /** T7: keyed stateful forward-fill (`flatMapGroupsWithState`): per user,
@@ -2067,31 +1886,34 @@ object StreamOps {
   def forwardFill(ev: DataFrame): Dataset[FillRow] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("value"))
-      .as[FillEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FillState, FillRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (uid, it, state) =>
-        val evs = it.toArray.sortBy(e => (e.ts_us, e.event_id))
-        var st: FillState = state.getOption.orNull
-        val out = scala.collection.mutable.ArrayBuffer.empty[FillRow]
-        evs.foreach { e =>
-          val h = Math.floorDiv(e.ts_us, HourUs) * HourUs
-          if (st == null) st = FillState(h, e.ts_us, e.event_id, e.value)
-          else if (h > st.curHourUs) {
-            var hh = st.curHourUs
-            while (hh < h) { out += FillRow(uid, hh, st.curValue); hh += HourUs }
-            st = FillState(h, e.ts_us, e.event_id, e.value)
-          } else if (e.ts_us > st.curTsUs ||
-            (e.ts_us == st.curTsUs && e.event_id > st.curEventId)) {
-            st = FillState(st.curHourUs, e.ts_us, e.event_id, e.value)
-          }
-        }
-        if (st != null) state.update(st)
-        out.iterator
-      }
+    // a key's first event opens its first hour: the start state is null
+    keyedAutomaton[Long, FillEvent, FillState, FillRow](
+      ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("value"))
+        .as[FillEvent],
+      _.user_id, null, Some(e => (e.ts_us, e.event_id)), None, _ => false,
+      None)((uid, st, e, out) => {
+      val h = Math.floorDiv(e.ts_us, HourUs) * HourUs
+      if (st == null) FillState(h, e.ts_us, e.event_id, e.value)
+      else if (h > st.curHourUs) {
+        var hh = st.curHourUs
+        while (hh < h) { out += FillRow(uid, hh, st.curValue); hh += HourUs }
+        FillState(h, e.ts_us, e.event_id, e.value)
+      } else if (e.ts_us > st.curTsUs ||
+        (e.ts_us == st.curTsUs && e.event_id > st.curEventId))
+        FillState(st.curHourUs, e.ts_us, e.event_id, e.value)
+      else st
+    }, forwardFillClose)
   }
+
+  /** [[forwardFill]]'s close step: the key's current hour emits once the
+    * watermark passes its end (the stream itself is unwatermarked, so
+    * only the end-of-replay drain runs it). */
+  private[streaming] val forwardFillClose: Close[Long, FillState, FillRow] =
+    (uid, st, wmUs, out) => {
+      if (st.curHourUs + HourUs <= wmUs) out += FillRow(uid, st.curHourUs, st.curValue)
+      st
+    }
 
   /** Streaming twin of [[CepOps.cepSkipPastLast]]: the same greedy
     * skip-past-last-event automaton as a keyed fMGWS — a B event closes
@@ -2113,31 +1935,27 @@ object StreamOps {
       withinUs: Long): Dataset[SkipLastMatch] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withColumn("__isa", when(predA, lit(true)).when(predB, lit(false)))
-      .filter(col("__isa").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("id"), col("__isa").as("isA"))
-      .as[(Long, Long, Long, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SkipLastState, SkipLastMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (k, it, state) =>
-        var st = state.getOption.getOrElse(SkipLastState(Long.MinValue, Nil))
-        val open = scala.collection.mutable.ArrayDeque.from(st.open)
-        var pos = st.pos
-        val out = scala.collection.mutable.ArrayBuffer.empty[SkipLastMatch]
-        it.toArray.sortBy(e => (e._2, e._3)).foreach { case (_, tsUs, id, isA) =>
-          if (isA) { if (tsUs > pos) open.append((tsUs, id)) }
-          else {
-            while (open.nonEmpty && open.head._1 < tsUs - withinUs)
-              open.removeHead()
-            if (open.nonEmpty && open.head._1 < tsUs) {
-              out += SkipLastMatch(k, open.head._2, id); pos = tsUs; open.clear()
-            }
-          }
+    // `pos` outlives every match: a later A at exactly `pos` is read
+    // against it, so only the start state itself is idle
+    keyedAutomaton[Long, (Long, Long, Long, Boolean), SkipLastState, SkipLastMatch](
+      ev.withColumn("__isa", when(predA, lit(true)).when(predB, lit(false)))
+        .filter(col("__isa").isNotNull)
+        .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
+          col(idCol).as("id"), col("__isa").as("isA"))
+        .as[(Long, Long, Long, Boolean)],
+      _._1, SkipLastState(Long.MinValue, Nil), Some(e => (e._2, e._3)), None,
+      s => s.pos == Long.MinValue && s.open.isEmpty, None)(
+      { case (k, st, (_, tsUs, id, isA), out) =>
+        if (isA) {
+          if (tsUs > st.pos) st.copy(open = st.open :+ ((tsUs, id))) else st
+        } else {
+          val open = st.open.dropWhile(_._1 < tsUs - withinUs)
+          if (open.nonEmpty && open.head._1 < tsUs) {
+            out += SkipLastMatch(k, open.head._2, id)
+            SkipLastState(tsUs, Nil)
+          } else st.copy(open = open)
         }
-        state.update(SkipLastState(pos, open.toSeq))
-        out.iterator
-      }
+      }, noClose)
   }
 
   /** Streaming twin of [[CepOps.cepSkipToNext]]: each A-start matches
@@ -2145,8 +1963,9 @@ object StreamOps {
     * arrival is only provable once the watermark passes the candidate B
     * (an earlier-in-event-time B can no longer arrive). Per key the
     * state holds unresolved starts and the B buffer above the
-    * watermark; on each invocation every start whose minimal candidate
-    * B has `b_ts ≤ wm` emits, starts with no possible B left
+    * watermark; on each invocation (new events, or the event-time
+    * timer at the earliest pending deadline) every start whose minimal
+    * candidate B has `b_ts ≤ wm` emits, starts with no possible B left
     * (`wm > a_ts + Δt`, none buffered) drop, and B's at or below the
     * watermark evict after the emission pass (a surviving start's
     * candidate is then provably above the watermark, and future starts
@@ -2154,47 +1973,55 @@ object StreamOps {
     *
     * @note scale: one shuffle on the key; state per key = starts + B's
     *   inside (watermark delay + Δt) — the inherent bound for
-    *   event-time earliest-match semantics. Emission is append-only.
+    *   event-time earliest-match semantics; a key with nothing pending
+    *   holds no state row. Emission is append-only.
     *   Bounded-replay tail: drain with [[StateFlush.cepSkipToNext]]. */
   def cepSkipToNextStream(ev: DataFrame, keyCol: String, tsCol: String,
       idCol: String, predA: Column, predB: Column, withinUs: Long,
       delay: String = "30 minutes"): Dataset[SkipNextMatch] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withWatermark(tsCol, delay)
-      .withColumn("__isa", when(predA, lit(true)).when(predB, lit(false)))
-      .filter(col("__isa").isNotNull)
-      .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).as("id"), col("__isa").as("isA"), col(tsCol))
-      .as[(Long, Long, Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SkipNextState, SkipNextMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (k, it, state) =>
-        val wmUs = state.getCurrentWatermarkMs() * 1000L
-        val st0 = state.getOption.getOrElse(SkipNextState(Nil, Nil))
-        val fresh = it.toArray.filter(_._2 > wmUs) // late rows drop
-        val openA = (st0.openA ++ fresh.collect {
-          case (_, ts, id, true, _) => (ts, id) }).sortBy(identity)
-        val bufB = (st0.bufB ++ fresh.collect {
-          case (_, ts, id, false, _) => (ts, id) }).sortBy(identity)
-        val out = scala.collection.mutable.ArrayBuffer.empty[SkipNextMatch]
-        val keepA = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        openA.foreach { case (aTs, aId) =>
-          val cand = bufB.find { case (bTs, _) =>
-            bTs > aTs && bTs <= aTs + withinUs } // sorted → first is minimal
-          cand match {
-            case Some((bTs, bId)) if bTs <= wmUs =>
-              out += SkipNextMatch(k, aId, bId, bTs - aTs)
-            case Some(_) => keepA += ((aTs, aId)) // candidate above wm — wait
-            case None =>
-              if (wmUs <= aTs + withinUs) keepA += ((aTs, aId)) // B may come
-            // else: window closed with no B — start drops
-          }
-        }
-        state.update(SkipNextState(keepA.toSeq, bufB.filter(_._1 > wmUs)))
-        out.iterator
-      }
+    keyedAutomaton[Long, (Long, Long, Long, Boolean, java.sql.Timestamp),
+        SkipNextState, SkipNextMatch](
+      ev.withWatermark(tsCol, delay)
+        .withColumn("__isa", when(predA, lit(true)).when(predB, lit(false)))
+        .filter(col("__isa").isNotNull)
+        .select(col(keyCol).as("k"), unix_micros(col(tsCol)).as("ts_us"),
+          col(idCol).as("id"), col("__isa").as("isA"), col(tsCol))
+        .as[(Long, Long, Long, Boolean, java.sql.Timestamp)],
+      // the timer fires once the watermark reaches the earliest buffered
+      // B (it emits or evicts) or passes a start's window (it drops), so
+      // a quiet key is closed without waiting for its next event
+      _._1, SkipNextState(Nil, Nil), None, Some(_._2),
+      s => s.openA.isEmpty && s.bufB.isEmpty,
+      Some((_, s) => (s.bufB.iterator.map(_._1 - 1) ++
+        s.openA.iterator.map(_._1 + withinUs)).min))(
+      { case (_, st, (_, ts, id, isA, _), _) =>
+        if (isA) st.copy(openA = st.openA :+ ((ts, id)))
+        else st.copy(bufB = st.bufB :+ ((ts, id)))
+      }, skipToNextClose(withinUs))
   }
+
+  /** [[cepSkipToNextStream]]'s close step at watermark `wmUs`: every
+    * start whose minimal candidate B is at or below it emits, a start
+    * with no candidate whose window the watermark has passed drops, and
+    * B's at or below it evict. */
+  private[streaming] def skipToNextClose(
+      withinUs: Long): Close[Long, SkipNextState, SkipNextMatch] =
+    (k, st, wmUs, out) => {
+      val bufB = st.bufB.sortBy(identity)
+      val openA = st.openA.sortBy(identity).filter { case (aTs, aId) =>
+        bufB.find { case (bTs, _) =>
+          bTs > aTs && bTs <= aTs + withinUs } match { // sorted → first is minimal
+          case Some((bTs, bId)) if bTs <= wmUs =>
+            out += SkipNextMatch(k, aId, bId, bTs - aTs)
+            false
+          case Some(_) => true // candidate above the watermark — wait
+          case None => wmUs <= aTs + withinUs // a B may still come
+        }
+      }
+      SkipNextState(openA, bufB.filter(_._1 > wmUs))
+    }
 
   /** Event-time OVER aggregation on a stream (Flink SQL
     * `SUM(value) OVER (PARTITION BY key ORDER BY ts ROWS BETWEEN n
@@ -2229,35 +2056,36 @@ object StreamOps {
       delay: String = "30 minutes"): Dataset[OverRow] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.withWatermark("ts", delay)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4)) *
-          lit(10000L)).cast("long").as("c4"),
-        col("ts")) // the watermark-tagged column must reach the operator
-      .as[(Long, Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OverState, OverRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (uid, it, state) =>
-        val wmUs = state.getCurrentWatermarkMs() * 1000L
-        val st0 = state.getOption.getOrElse(OverState(Nil, Nil))
-        // rows at or below the current watermark are late (their emission
-        // slot has passed) — dropped, Flink's OVER late-row behavior
-        val fresh = it.collect {
-          case (_, tsUs, id, c4, _) if tsUs > wmUs => OverPend(tsUs, id, c4)
-        }
-        val all = (st0.pending ++ fresh).sortBy(p => (p.ts_us, p.event_id))
-        val (ready, pend) = all.partition(_.ts_us <= wmUs)
-        var ctx = st0.ctx
-        val out = ready.map { p =>
-          val frame = ctx :+ p.c4
-          ctx = frame.takeRight(nPrec)
-          OverRow(uid, p.event_id, frame.size,
-            BigDecimal(frame.sum, 4).toDouble)
-        }
-        state.update(OverState(ctx, pend))
-        out.iterator
-      }
+    keyedAutomaton[Long, (Long, Long, Long, Long, java.sql.Timestamp), OverState, OverRow](
+      ev.withWatermark("ts", delay)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"),
+          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 4)) *
+            lit(10000L)).cast("long").as("c4"),
+          col("ts")) // the watermark-tagged column must reach the operator
+        .as[(Long, Long, Long, Long, java.sql.Timestamp)],
+      // rows at or below the current watermark are late (their emission
+      // slot has passed) — dropped, Flink's OVER late-row behavior
+      _._1, OverState(Nil, Nil), None, Some(_._2), _ => false, None)(
+      { case (_, st, (_, tsUs, id, c4, _), _) =>
+        st.copy(pending = st.pending :+ OverPend(tsUs, id, c4))
+      }, overRowsClose(nPrec))
+  }
+
+  /** [[overRows]]'s close step: emit the pending rows at or below the
+    * watermark in `(ts, event_id)` order, each framed by the key's last
+    * `nPrec` emitted values. */
+  private[streaming] def overRowsClose(
+      nPrec: Int): Close[Long, OverState, OverRow] = (uid, st, wmUs, out) => {
+    val (ready, pend) = st.pending.sortBy(p => (p.ts_us, p.event_id))
+      .partition(_.ts_us <= wmUs)
+    var ctx = st.ctx
+    ready.foreach { p =>
+      val frame = ctx :+ p.c4
+      ctx = frame.takeRight(nPrec)
+      out += OverRow(uid, p.event_id, frame.size, BigDecimal(frame.sum, 4).toDouble)
+    }
+    OverState(ctx, pend)
   }
 
   /** O4: continuous global Top-N (Flink's retract-stream Top-N). File
@@ -2296,28 +2124,31 @@ object StreamOps {
   def countWindows(ev: DataFrame, n: Int = 10): Dataset[CountWinRow] = {
     val sp = ev.sparkSession
     import sp.implicits._
-    ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)) *
-          lit(1000000L)).cast("long").as("v6"))
-      .as[CountWinEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CountWinState, CountWinRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) { (uid, it, state) =>
-        val evs = it.toArray.sortBy(e => (e.ts_us, e.event_id))
-        var st = state.getOption.getOrElse(CountWinState(0, 0, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[CountWinRow]
-        evs.foreach { e =>
-          st = CountWinState(st.bucket, st.cnt + 1, st.sum6 + e.v6)
-          if (st.cnt == n) {
-            out += CountWinRow(uid, st.bucket, st.cnt, StateFlush.gapSum4(st.sum6))
-            st = CountWinState(st.bucket + 1, 0, 0L)
-          }
-        }
-        state.update(st)
-        out.iterator
+    keyedAutomaton[Long, CountWinEvent, CountWinState, CountWinRow](
+      ev.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"),
+          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)) *
+            lit(1000000L)).cast("long").as("v6"))
+        .as[CountWinEvent],
+      _.user_id, CountWinState(0, 0, 0L), Some(e => (e.ts_us, e.event_id)),
+      None, _ => false, None)((uid, st, e, out) => {
+      val next = CountWinState(st.bucket, st.cnt + 1, st.sum6 + e.v6)
+      if (next.cnt != n) next
+      else {
+        out += CountWinRow(uid, next.bucket, next.cnt, round4(next.sum6))
+        CountWinState(next.bucket + 1, 0, 0L)
       }
+    }, countWindowsClose)
   }
+
+  /** [[countWindows]]' close step: a partial bucket is final only at
+    * the end of the stream. */
+  private[streaming] val countWindowsClose: Close[Long, CountWinState, CountWinRow] =
+    (uid, st, wmUs, out) => {
+      if (st.cnt > 0 && wmUs == EndOfStream)
+        out += CountWinRow(uid, st.bucket, st.cnt, round4(st.sum6))
+      st
+    }
 
   /** T5: late-row side-channel — the Flink `sideOutputLateData` parity
     * operator the divergence note above only documented until now. Spark
@@ -2479,33 +2310,29 @@ object StreamOps {
     // the watermarked ts column must SURVIVE the projection — the
     // event-time-timeout checker requires the tagged attribute in the
     // fMGWS child, even though only ws_us/user_id feed the state
-    ev.withWatermark("ts", "10 minutes")
-      .select((unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(HourUs)))
-        .as("ws_us"), col("user_id"), col("ts"))
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WinTopState, WinTopRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (ws, it, state) =>
-        if (state.hasTimedOut) {
-          val m = state.getOption.map(_.counts).getOrElse(Map.empty[Long, Long])
-          state.remove()
-          m.toSeq.sortBy { case (uid, n) => (-n, uid) }.take(k).zipWithIndex
-            .map { case ((uid, n), i) => WinTopRow(ws, uid, n, i + 1) }.iterator
-        } else {
-          val m0 = state.getOption.map(_.counts).getOrElse(Map.empty[Long, Long])
-          val m = it.foldLeft(m0) { case (acc, t) =>
-            val uid = t._2
-            acc.updated(uid, acc.getOrElse(uid, 0L) + 1L) }
-          state.update(WinTopState(m))
-          // a straggler window re-opened behind the watermark must not
-          // set a timeout in the past (that throws) — clamp to wm+1
-          state.setTimeoutTimestamp(math.max(
-            ws / 1000L + HourUs / 1000L + delayMs,
-            state.getCurrentWatermarkMs() + 1L))
-          Iterator.empty
-        }
-      }
+    keyedAutomaton[Long, (Long, Long, java.sql.Timestamp), WinTopState, WinTopRow](
+      ev.withWatermark("ts", "10 minutes")
+        .select((unix_micros(col("ts")) - pmod(unix_micros(col("ts")), lit(HourUs)))
+          .as("ws_us"), col("user_id"), col("ts"))
+        .as[(Long, Long, java.sql.Timestamp)],
+      _._1, WinTopState(Map.empty), None, None, _.counts.isEmpty,
+      Some((ws, _) => ws + HourUs + delayMs * 1000L))(
+      { case (_, st, (_, uid, _), _) =>
+        WinTopState(st.counts.updated(uid, st.counts.getOrElse(uid, 0L) + 1L))
+      }, windowTopNClose(k, delayMs))
   }
+
+  /** [[windowTopN]]'s close step: once the watermark passes the
+    * window's end + delay, emit its top k by (n DESC, key ASC) and clear
+    * it. */
+  private[streaming] def windowTopNClose(k: Int,
+      delayMs: Long): Close[Long, WinTopState, WinTopRow] = (ws, st, wmUs, out) =>
+    if (wmUs <= ws + HourUs + delayMs * 1000L) st
+    else {
+      st.counts.toSeq.sortBy { case (uid, n) => (-n, uid) }.take(k).zipWithIndex
+        .foreach { case ((uid, n), i) => out += WinTopRow(ws, uid, n, i + 1) }
+      WinTopState(Map.empty)
+    }
 
   /** Flink-style CUMULATE windows (`CUMULATE(ts, step, size)`): each
     * event lands in every expanding window `[ws, ws + k·step)` whose end
@@ -2579,45 +2406,42 @@ object StreamOps {
     import sp.implicits._
     val sizeUs = sizeHours * 3600L * 1000000L
     val stepUs = stepMinutes * 60L * 1000000L
-    ev.withWatermark("ts", delay)
-      .select(unix_micros(col("ts")).as("ts_us"),
-        (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)) *
-          lit(1000000L)).cast("long").as("v6"), col("ts"))
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(t => t._1 - Math.floorMod(t._1, sizeUs))
-      .flatMapGroupsWithState[CumState, CumRow](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (ws, it, state) =>
-        val weLast = ws + sizeUs
-        val st0 = state.getOption.getOrElse(CumState(Map.empty, Long.MinValue))
-        // merge this batch's events into their own step buckets
-        val st1 = it.foldLeft(st0) { case (st, (tsUs, v6, _)) =>
-          val we = tsUs - Math.floorMod(tsUs, stepUs) + stepUs
-          val (n0, s0) = st.steps.getOrElse(we, (0L, 0L))
-          st.copy(steps = st.steps.updated(we, (n0 + 1L, s0 + v6)))
-        }
-        if (st1.steps.isEmpty) { state.remove(); Iterator.empty }
-        else {
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val first = st1.steps.keysIterator.min
-          val start = math.max(first, st1.emittedUpTo + stepUs)
-          val due = Iterator.iterate(start)(_ + stepUs)
-            .takeWhile(we => we <= wmUs && we <= weLast).toList
-          val rows = due.map { we =>
-            val (n, s6) = st1.steps.iterator.filter(_._1 <= we)
-              .foldLeft((0L, 0L)) { case ((a, b), (_, (n2, s2))) => (a + n2, b + s2) }
-            CumRow(ws, we, n, BigDecimal(s6, 6).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-          }
-          val emitted = if (due.nonEmpty) due.last else st1.emittedUpTo
-          if (emitted >= weLast) state.remove()
-          else {
-            state.update(st1.copy(emittedUpTo = emitted))
-            val next = math.max(if (emitted == Long.MinValue) first else emitted + stepUs, first)
-            state.setTimeoutTimestamp(math.max(next / 1000L,
-              state.getCurrentWatermarkMs() + 1L))
-          }
-          rows.iterator
-        }
-      }
+    keyedAutomaton[Long, (Long, Long, java.sql.Timestamp), CumState, CumRow](
+      ev.withWatermark("ts", delay)
+        .select(unix_micros(col("ts")).as("ts_us"),
+          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)) *
+            lit(1000000L)).cast("long").as("v6"), col("ts"))
+        .as[(Long, Long, java.sql.Timestamp)],
+      t => t._1 - Math.floorMod(t._1, sizeUs), CumState(Map.empty, Long.MinValue),
+      None, None, _.steps.isEmpty, Some((_, st) => cumNextEnd(st, stepUs)))(
+      // merge each event into its own step bucket
+      { case (_, st, (tsUs, v6, _), _) =>
+        val we = tsUs - Math.floorMod(tsUs, stepUs) + stepUs
+        val (n0, s0) = st.steps.getOrElse(we, (0L, 0L))
+        st.copy(steps = st.steps.updated(we, (n0 + 1L, s0 + v6)))
+      }, cumulateClose(sizeUs, stepUs))
+  }
+
+  /** The earliest sub-window end a [[CumState]] has not emitted. */
+  private def cumNextEnd(st: CumState, stepUs: Long): Long =
+    math.max(st.steps.keysIterator.min, st.emittedUpTo + stepUs)
+
+  /** [[cumulateAppend]]'s close step: emit every un-emitted sub-window
+    * end at or below the watermark with its exact cumulative partials;
+    * the window is done (and its state idle) once `ws + size` emits. */
+  private[streaming] def cumulateClose(sizeUs: Long,
+      stepUs: Long): Close[Long, CumState, CumRow] = (ws, st, wmUs, out) => {
+    val weLast = ws + sizeUs
+    val due = Iterator.iterate(cumNextEnd(st, stepUs))(_ + stepUs)
+      .takeWhile(we => we <= wmUs && we <= weLast).toList
+    due.foreach { we =>
+      val (n, s6) = st.steps.iterator.filter(_._1 <= we)
+        .foldLeft((0L, 0L)) { case ((a, b), (_, (n2, s2))) => (a + n2, b + s2) }
+      out += CumRow(ws, we, n, round4(s6))
+    }
+    val emitted = due.lastOption.getOrElse(st.emittedUpTo)
+    if (emitted >= weLast) CumState(Map.empty, Long.MinValue)
+    else st.copy(emittedUpTo = emitted)
   }
 
   /** Flink temporal-TABLE join (`FOR SYSTEM_TIME AS OF` event time)

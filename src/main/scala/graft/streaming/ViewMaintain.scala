@@ -144,7 +144,6 @@ object ViewMaintain {
       groupCols, snapshotBuckets)
     val sliceSchema = widen(deltas.schema)
 
-    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
     // per-batch plans here are micro-batch-sized (KB..tens of MB): AQE
     // re-plans per query stage and submits each stage as its own job,
     // which at this granularity is pure scheduling overhead (measured
@@ -153,7 +152,8 @@ object ViewMaintain {
     // action. A production deployment with unbounded per-batch volume
     // keeps AQE on — this session is sized per micro-batch by contract.
     // (The two-input loop keeps AQE on; see maintainJoinViewStream.)
-    ss.conf.set("spark.sql.adaptive.enabled", false)
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions, "hdfs",
+      aqe = false)
 
     // durable state seeds: base snapshot s0 + view version v0
     phase(spark.sparkContext, "seed snapshot") { base.seed(oldBase) }
@@ -369,7 +369,8 @@ object ViewMaintain {
     // the compaction shuffles' partitions) and the compact phase rose
     // 1.74 -> 2.58 s; the workload's wall time was not faster over 3
     // before/after pairs.
-    val ss = LocalFs.microBatchSession(spark, ShufflePartitions)
+    val ss = LocalFs.microBatchSession(spark, ShufflePartitions, "hdfs",
+      aqe = true)
 
     phase(spark.sparkContext, "seed snapshot") {
       storeA.seed(oldA)

@@ -20,6 +20,21 @@ class CepKleeneSpec extends SparkSpec {
 
   private val withinUs = 360L * 60L * 1000000L
 
+  /** The automaton state a replay leaves in its checkpoint is bounded:
+    * no surviving row is the idle start state, and fewer keys keep a
+    * row than have a classified event. */
+  private def assertStateBounded(ckpt: String, types: String*): Unit = {
+    val rows = spark.read.format("statestore").option("path", ckpt).load()
+    val idle = !col("value.groupState.runActive") &&
+      col("value.groupState.prev") =!= "A"
+    assert(rows.filter(idle).count() == 0, "an idle automaton row survived")
+    val keys = graft.Tables.events(spark, sf)
+      .filter(col("event_type").isin(types: _*))
+      .select("user_id").distinct().count()
+    val n = rows.count()
+    assert(n < keys, s"$n state rows for $keys keys with a classified event")
+  }
+
   private def batchForm: DataFrame =
     CepOps.cepKleene(graft.Tables.events(spark, sf),
       "user_id", "ts", "event_id",
@@ -28,23 +43,26 @@ class CepKleeneSpec extends SparkSpec {
 
   test("streamed replay equals the batch form with zero flush gap") {
     import spark.implicits._
+    var ckpt = ""
     val streamed = BoundedReplay.replayEvents(spark, sf)(ev =>
       StreamOps.cepKleeneStream(ev, "user_id", "ts", "event_id",
         col("event_type") === "view", col("event_type") === "click",
         col("event_type") === "purchase", withinUs = withinUs))(
-      _ => spark.emptyDataset[KleeneMatch])
+      { c => ckpt = c; spark.emptyDataset[KleeneMatch] })
     val b = rows(batchForm)
     assert(b.nonEmpty, "fixture must contain at least one A B+ C match")
     assert(rows(streamed) == b)
+    assertStateBounded(ckpt, "view", "click", "purchase")
   }
 
   test("until-form streamed replay equals the batch form (stopper outside the match)") {
     import spark.implicits._
+    var ckpt = ""
     val streamed = BoundedReplay.replayEvents(spark, sf)(ev =>
       StreamOps.cepKleeneUntilStream(ev, "user_id", "ts", "event_id",
         col("event_type") === "view", col("event_type") === "click",
         col("event_type") === "error", withinUs = withinUs))(
-      _ => spark.emptyDataset[KleeneUntilMatch])
+      { c => ckpt = c; spark.emptyDataset[KleeneUntilMatch] })
     val batch = CepOps.cepKleeneUntil(graft.Tables.events(spark, sf),
       "user_id", "ts", "event_id",
       col("event_type") === "view", col("event_type") === "click",
@@ -52,6 +70,7 @@ class CepKleeneSpec extends SparkSpec {
     val b = rows(batch)
     assert(b.nonEmpty, "fixture must contain at least one A B+ until match")
     assert(rows(streamed.toDF()) == b)
+    assertStateBounded(ckpt, "view", "click", "error")
   }
 
   test("matches are disjoint (skip past last row) and runs maximal") {
@@ -67,12 +86,13 @@ class CepKleeneSpec extends SparkSpec {
 
   test("measures streamed replay equals the batch cepKleeneMeasures") {
     import spark.implicits._
+    var ckpt = ""
     val streamed = BoundedReplay.replayEvents(spark, sf)(ev =>
       StreamOps.cepKleeneMeasuresStream(ev, "user_id", "ts", "event_id",
         col("event_type") === "view", col("event_type") === "click",
         col("event_type") === "purchase", withinUs = withinUs,
         valueCol = col("value")))(
-      _ => spark.emptyDataset[KleeneMeasuresMatch])
+      { c => ckpt = c; spark.emptyDataset[KleeneMeasuresMatch] })
     val batch = CepOps.cepKleeneMeasures(graft.Tables.events(spark, sf),
         "user_id", "ts", "event_id",
         col("event_type") === "view", col("event_type") === "click",
@@ -86,5 +106,6 @@ class CepKleeneSpec extends SparkSpec {
     assert(b.nonEmpty)
     assert(rows(streamed.toDF()) == b,
       "streaming decimal-micro accumulator must match the batch decimal sum bit-for-bit")
+    assertStateBounded(ckpt, "view", "click", "purchase")
   }
 }

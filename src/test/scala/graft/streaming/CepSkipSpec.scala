@@ -93,11 +93,12 @@ class CepSkipSpec extends SparkSpec {
 
   test("streaming skip-to-next ∪ flush equals the batch argmin") {
     val W = 2L * HourUs
+    var ckpt = ""
     val out = BoundedReplay.replayEvents(spark, sf)(ev =>
       StreamOps.cepSkipToNextStream(ev, "user_id", "ts", "event_id",
         col("event_type") === "view", col("event_type") === "purchase",
         withinUs = W).toDF())(
-      ckpt => StateFlush.cepSkipToNext(spark, ckpt, withinUs = W))
+      { c => ckpt = c; StateFlush.cepSkipToNext(spark, c, withinUs = W) })
     val batch = CepOps.cepSkipToNext(Tables.events(spark, sf),
       "user_id", "ts", "event_id",
       col("event_type") === "view", col("event_type") === "purchase", "2 hours")
@@ -105,6 +106,17 @@ class CepSkipSpec extends SparkSpec {
       df.select("user_id", "a_id", "b_id", "gap_us").collect().toSeq
         .map(_.toSeq.mkString("|")).sorted
     assert(key(out) == key(batch) && out.count() > 0)
+    // bounded state: no surviving row is idle (no open start, no
+    // buffered B), and fewer keys keep a row than have an A or B event
+    val rows = spark.read.format("statestore").option("path", ckpt).load()
+    assert(rows.filter(size(col("value.groupState.openA")) === 0 &&
+      size(col("value.groupState.bufB")) === 0).count() == 0,
+      "an idle automaton row survived")
+    val keys = Tables.events(spark, sf)
+      .filter(col("event_type").isin("view", "purchase"))
+      .select("user_id").distinct().count()
+    val n = rows.count()
+    assert(n < keys, s"$n state rows for $keys keys with a classified event")
   }
 
   test("streaming automaton equals the batch scan on replayed events") {

@@ -22,14 +22,7 @@ class CheckpointRecoverySpec extends SparkSpec {
     restart("rocksdb"))
 
   private def restart(provider: String): Unit = {
-    val sp = LocalFs.microBatchSession(spark, 2)
-    if (provider == "rocksdb") {
-      sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      sp.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-    }
+    val sp = LocalFs.microBatchSession(spark, 2, provider, aqe = true)
     import sp.implicits._
     val inDir = Files.createTempDirectory("ckpt-in").toString
     val outDir = Files.createTempDirectory("ckpt-out").toString

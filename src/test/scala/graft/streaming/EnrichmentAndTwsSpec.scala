@@ -6,12 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
-/** Two remaining streaming surfaces:
-  *  - J5 streaming side: stream-static broadcast enrichment — the
-  *    Flink broadcast-state pattern as a stream⋈static join (the static
-  *    side is re-read per micro-batch).
-  *  - T7 on the Spark 4 `transformWithState` API, equal to the
-  *    `flatMapGroupsWithState` implementation under full replay.
+/** J5 streaming side: stream-static broadcast enrichment — the Flink
+  * broadcast-state pattern as a stream⋈static join (the static side is
+  * re-read per micro-batch).
   */
 class EnrichmentAndTwsSpec extends SparkSpec {
 
@@ -37,71 +34,5 @@ class EnrichmentAndTwsSpec extends SparkSpec {
     assert(got.count() == expected.count())
     assert(got.select("event_id").distinct().count() == got.count(),
       "each event enriched exactly once")
-  }
-
-  test("T7-timer: event-time timers flush each quiet key's tail bucket") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val base = replayToTable(StreamOps.forwardFill(StreamOps.source(spark, sf)).toDF(),
-        "append", "t_ffill_base")
-        .collect().map(_.toSeq.mkString("|")).toSet
-      val timed = replayToTable(
-        ForwardFillTimerTws(StreamOps.source(spark, sf)).toDF(),
-        "append", "t_ffill_timer")
-        .collect().map(_.toSeq.mkString("|")).toSet
-      // expected extras: per key the final (ts, event_id)-latest value in
-      // its last event hour, iff the final watermark (global max ts - 10
-      // min) passed that hour's end
-      val ev = Tables.events(spark, sf)
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_id"), col("value"))
-      val wmUs = ev.agg(max(col("ts_us"))).head.getLong(0) - 10L * 60 * 1000000
-      val hourUs = 3600L * 1000000L
-      val extras = ev
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-            .orderBy(col("ts_us").desc, col("event_id").desc)))
-        .filter(col("rn") === 1)
-        .select(col("user_id"),
-          (floor(col("ts_us") / hourUs) * hourUs).cast("long").as("h_us"),
-          col("value"))
-        .filter(col("h_us") + hourUs <= wmUs)
-        .collect().map(_.toSeq.mkString("|")).toSet
-      assert(extras.nonEmpty, "fixture should have flushable tails")
-      assert((base & extras).isEmpty, "tail buckets are absent without timers")
-      assert(timed == base ++ extras,
-        "timer variant must add exactly the watermark-passed tail buckets")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("T7-tws: transformWithState forward-fill equals flatMapGroupsWithState") {
-    // transformWithState requires the RocksDB state store provider
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tws = replayToTable(ForwardFillTws(StreamOps.source(spark, sf)).toDF(),
-        "append", "t_ffill_tws")
-      val fmgws = replayToTable(StreamOps.forwardFill(StreamOps.source(spark, sf)).toDF(),
-        "append", "t_ffill_fmgws")
-      val a = tws.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      val b = fmgws.collect().map(_.toSeq.mkString("|")).sorted.toSeq
-      assert(a == b, "the two stateful APIs must produce identical output")
-      assert(a.nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 }

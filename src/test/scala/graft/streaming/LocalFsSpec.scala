@@ -116,7 +116,7 @@ class LocalFsSpec extends SparkSpec {
     def hadoopConf(s: org.apache.spark.sql.SparkSession) =
       s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.newHadoopConf()
-    val conf = hadoopConf(LocalFs.microBatchSession(spark, 2))
+    val conf = hadoopConf(LocalFs.microBatchSession(spark, 2, "hdfs", aqe = true))
     assert(FileSystem.get(fileUri, conf).isInstanceOf[NoForkLocalFileSystem])
     assert(AbstractFileSystem.get(fileUri, conf).isInstanceOf[NoForkLocalFs])
     // the base session (GraftSession.local) is no-fork from its build on
@@ -128,5 +128,20 @@ class LocalFsSpec extends SparkSpec {
     // the cached file: instance may still be a stock one in a caller's
     // session built elsewhere, so micro-batch sessions bypass the cache
     assert(conf.getBoolean("fs.file.impl.disable.cache", false))
+  }
+
+  test("microBatchSession builds each configuration once and reuses it") {
+    val a = LocalFs.microBatchSession(spark, 2, "hdfs", aqe = true)
+    assert(LocalFs.microBatchSession(spark, 2, "hdfs", aqe = true) eq a)
+    val others = Seq(LocalFs.microBatchSession(spark, 8, "hdfs", aqe = true),
+      LocalFs.microBatchSession(spark, 2, "rocksdb", aqe = true),
+      LocalFs.microBatchSession(spark, 2, "hdfs", aqe = false))
+    val all = a +: others
+    for (i <- all.indices; j <- all.indices if i < j)
+      assert(!(all(i) eq all(j)), "each distinct configuration is its own session")
+    assert(others(1).conf.get("spark.sql.streaming.stateStore.providerClass")
+      .endsWith("RocksDBStateStoreProvider"))
+    assert(others(2).conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(a.conf.get("spark.sql.shuffle.partitions") == "2")
   }
 }
