@@ -18,12 +18,27 @@ import java.nio.file.{Files, Path}
   *     new batchId-keyed snapshot is the previous snapshot with the
   *     slice's signed weights reconciled (only delta-touched payloads
   *     pass through the weighted group-by; everything else is carried
-  *     over by an anti-join against the delta-sized touched set), and
-  *     the consumed slice is truncated,
+  *     over by an anti-join against the delta-sized touched set),
   *   - the VIEW itself, versioned per batch, advances via the caller's
   *     maintain step (e.g. [[ViewOps.maintainAggView]]: counts/sums
   *     delta-merged, min/max recomputed only for delete-touched groups
-  *     against the snapshot PRUNED to those groups).
+  *     against the snapshot PRUNED to those groups),
+  *   - and only then are the consumed slice and the superseded
+  *     snapshots truncated.
+  *
+  * Steps that do not depend on each other run AT THE SAME TIME (`both`):
+  * in both loops the seeding of the stores and of view version 0 runs
+  * alongside the changelog staging, and in the join loop each batch's
+  * view step runs alongside the compaction of each side. At micro-batch
+  * sizes a loop is driver-bound — each Spark job is tens of
+  * milliseconds of scheduling around milliseconds of compute — so
+  * overlapping independent jobs, not faster operators, is what shortens
+  * it (SCALE.md § "View maintenance"). Overlap is safe because the
+  * overlapped steps read only immutable versions and write disjoint
+  * directories, truncation waits for all of them, and every worker
+  * thread is created by the thread that waits for it: a batch's workers
+  * inherit the stream's job group, so a failed or stopped query cancels
+  * their jobs, and each sets its own `vm: <phase>` job description.
   *
   * The final view hash-matches the full-recompute oracle on the new
   * snapshot, certifying that a continuously-maintained view never
@@ -33,7 +48,9 @@ import java.nio.file.{Files, Path}
   * [[BoundedReplay.feed]], the same chunk stager and feeder the
   * bounded replay keys run on: one chunk is one micro-batch. Both
   * loops keep their bases in one [[SideStore]] each (the single-table
-  * loop one, the join loop one per input).
+  * loop one, the join loop one per input). A loop that returns
+  * releases its scratch — every tree but the returned view version,
+  * and the changelog stage; a loop that fails keeps its state.
   *
   * @note scale: per micro-batch the work is (a) one delta-sized slice
   *   commit, (b) one base compaction — the base is scanned (twice: the
@@ -49,9 +66,12 @@ import java.nio.file.{Files, Path}
   *   an UNPARTITIONED base too, since nothing relies on partition
   *   elimination; the bucketed store layout rewrites touched buckets
   *   only. foreachBatch retries are idempotent: slice, snapshot and
-  *   view version are all keyed by batchId, and the previous snapshot
-  *   is only truncated AFTER the batch's outputs commit, so a replayed
-  *   batch recomputes the same state from the same inputs. Measured
+  *   view version are all keyed by batchId, batch N reads only
+  *   snapshot `s<N>` and view `v<N>`, and `s<N>` is truncated only
+  *   AFTER all of the batch's outputs commit. So while `s<N>` exists a
+  *   replayed batch rewrites the same outputs from the same inputs,
+  *   and once it is gone the batch has committed and only finishes its
+  *   truncation. Measured
   *   (sf0.1, SCALE.md § "View maintenance"): the three
   *   `stream_*view*_replay` bench keys' changelog is 447 k signed rows
   *   against a 560 k-row base — a deliberate 75%-churn full-taxonomy
@@ -110,9 +130,9 @@ object ViewMaintain {
   /** The generic single-table core: stage the changelog into `chunks`
     * range-ordered micro-batches, and per batch (a) commit the
     * batchId-keyed log slice, (b) compact the base snapshot with
-    * exactly that slice and truncate the slice and the superseded
-    * snapshot, (c) advance the batchId-versioned view with `maintain`,
-    * handing it the new base pruned to the delete-touched groups.
+    * exactly that slice, (c) advance the batchId-versioned view with
+    * `maintain`, handing it the new base pruned to the delete-touched
+    * groups, and then truncate the slice and the superseded snapshot.
     * `buildView` seeds version 0 from the base snapshot. An EMPTY
     * changelog replays no batches (detected for free in the staging
     * bounds pass), so version 0 — `buildView` on the base snapshot —
@@ -156,45 +176,38 @@ object ViewMaintain {
       aqe = false)
 
     // durable state seeds: base snapshot s0 + view version v0
-    phase(spark.sparkContext, "seed snapshot") { base.seed(oldBase) }
-    val viewSchema = phase(ss.sparkContext, "seed view") {
-      val v0 = buildView(base.rows(ss, 0))
-      v0.write.parquet(viewDir.resolve("v0").toString)
-      widen(v0.schema)
+    replay(spark, ss, root, deltas, orderCol, chunks) {
+      phase(ss.sparkContext, "seed snapshot") { base.seed(oldBase) }
+      phase(ss.sparkContext, "seed view") {
+        val v0 = buildView(base.rows(ss, 0))
+        v0.write.parquet(viewDir.resolve("v0").toString)
+        widen(v0.schema)
+      }
+    } { (viewSchema, sb, batchId, sliceDir) =>
+      // s{batchId} gone: this is a retry of a batch that committed
+      if (base.has(batchId)) {
+        val slice = sb.read.schema(sliceSchema).parquet(sliceDir.toString)
+        // compact: s{batchId+1} = s{batchId} ⊎ this slice
+        phase(sb.sparkContext, s"b$batchId compact") {
+          base.compact(sb, batchId, slice)
+        }
+        // advance view v{batchId} -> v{batchId+1}; the maintain step
+        // only rescans delete-touched groups, so hand it the new base
+        // pruned to those groups
+        phase(sb.sparkContext, s"b$batchId view") {
+          val negKeys = slice.filter(col("w") < 0)
+            .select(groupCols.map(col): _*).distinct()
+          val pruned = base.rowsInBucketsOf(sb, batchId + 1, negKeys)
+            .join(negKeys, groupCols, "left_semi")
+          val prev = sb.read.schema(viewSchema)
+            .parquet(viewDir.resolve(s"v$batchId").toString)
+          maintain(prev, slice, pruned)
+            .write.mode("overwrite")
+            .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
+        }
+      }
+      truncate(batchId, sliceDir, base)
     }
-
-    replay(ss, root, deltas, orderCol, chunks) { (sb, batchId, sliceDir) =>
-      val slice = sb.read.schema(sliceSchema).parquet(sliceDir.toString)
-      // compact: s{batchId+1} = s{batchId} ⊎ this slice. A retry that
-      // fires AFTER its own compaction already committed s{batchId+1}
-      // finds that snapshot live and reuses it — the view step still
-      // recomputes v{batchId+1} from identical inputs
-      val compact = base.version == batchId
-      if (compact) phase(sb.sparkContext, s"b$batchId compact") {
-        base.compact(sb, batchId, slice)
-      }
-      // advance view v{batchId} -> v{batchId+1}; the maintain step
-      // only rescans delete-touched groups, so hand it the new base
-      // pruned to those groups
-      phase(sb.sparkContext, s"b$batchId view") {
-        val negKeys = slice.filter(col("w") < 0)
-          .select(groupCols.map(col): _*).distinct()
-        val pruned = base.rowsInBucketsOf(sb, batchId + 1, negKeys)
-          .join(negKeys, groupCols, "left_semi")
-        val prev = sb.read.schema(viewSchema)
-          .parquet(viewDir.resolve(s"v$batchId").toString)
-        maintain(prev, slice, pruned)
-          .write.mode("overwrite")
-          .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
-      }
-      // truncate consumed state only AFTER this batch's outputs commit
-      if (compact) {
-        graft.Scratch.deleteTree(sliceDir)
-        base.truncate(batchId)
-      }
-    }
-    spark.read.parquet(
-      viewDir.resolve(s"v${maxVersion(viewDir)}").toString)
   }
 
   /** One versioned side of the maintained state: snapshot versions
@@ -236,8 +249,8 @@ object ViewMaintain {
     private def rowsIn(sb: SparkSession, v: Long, bs: Seq[Int]): DataFrame =
       read(sb, v).filter(col("gb").isin(bs: _*)).select(cols.map(col): _*)
 
-    /** Highest version present. */
-    def version: Long = maxVersion(dir, "s")
+    /** Whether version `v` is present (not yet truncated). */
+    def has(v: Long): Boolean = Files.exists(path(v))
 
     /** The rows of version `v`. */
     def rows(sb: SparkSession, v: Long): DataFrame =
@@ -253,7 +266,8 @@ object ViewMaintain {
     def seed(d: DataFrame): Unit = write(d, 0)
 
     /** Write version `v`+1 = version `v` ⊎ `slice` (signed rows
-      * carrying this side's columns and `w`). */
+      * carrying this side's columns and `w`), overwriting any version
+      * `v`+1 an earlier try left. */
     def compact(sb: SparkSession, v: Long, slice: DataFrame): Unit =
       if (buckets.isEmpty) write(applyDelta(rows(sb, v), slice, cols), v + 1)
       else {
@@ -303,10 +317,10 @@ object ViewMaintain {
     * the loop splits the batch into ΔA/ΔB, derives the join-view delta
     * against the PRE-batch snapshots (`Δ(A⋈B) = ΔA⋈A-side-old's B ∪
     * A_old⋈ΔB ∪ ΔA⋈ΔB`), merges it into the versioned view with
-    * [[ViewOps.maintainSumView]], and then compacts both side stores.
-    * The view never touches either base table — its merge is
-    * delta-sized; only the snapshot compaction reads the bases, once
-    * each, shuffle-free.
+    * [[ViewOps.maintainSumView]], and compacts both side stores
+    * (`JoinView.step`). The view never touches either base table —
+    * its merge is delta-sized; only the snapshot compaction reads the
+    * bases, once each, shuffle-free.
     *
     * `viewGroupCols`/`viewSumCols` must be drawn from
     * `joinKeys ++ aVals ++ bVals` (the join-delta output columns).
@@ -317,10 +331,19 @@ object ViewMaintain {
     *   side (AQE does this at real delta/base ratios), ΔA⋈ΔB is
     *   delta×delta, and the sum-view merge is touched-group-sized —
     *   the fact⋈dim rollup refreshed continuously at delta cost while
-    *   BOTH tables change under it. `snapshotBuckets` buckets BOTH
-    *   side stores, each on its side's full payload: compaction
-    *   reconciles only slice-touched buckets and hard-links the rest —
-    *   O(touched) rewrite per side under skewed churn, same hashes
+    *   BOTH tables change under it. Per batch, the view step and the
+    *   two side compactions run at the same time, on threads the
+    *   stream's batch thread creates and joins: all three read only
+    *   the pre-batch versions (`s<N>` of both sides, view `v<N>`) and
+    *   write disjoint directories (`v<N+1>`, `snapA/s<N+1>`,
+    *   `snapB/s<N+1>`); the slice and `s<N>` are truncated only after
+    *   all three committed; and the threads inherit the stream's job
+    *   group, so a failed or stopped query cancels their jobs. The
+    *   seeding of both sides and of `v0` likewise runs alongside the
+    *   changelog staging. `snapshotBuckets` buckets BOTH side stores,
+    *   each on its side's full payload: compaction reconciles only
+    *   slice-touched buckets and hard-links the rest — O(touched)
+    *   rewrite per side under skewed churn, same hashes
     *   (`ViewOpsSpec`). */
   def maintainJoinViewStream(spark: SparkSession,
       oldA: DataFrame, deltaA: DataFrame,
@@ -342,26 +365,9 @@ object ViewMaintain {
     require((aCols ++ bCols).contains(orderCol),
       s"orderCol $orderCol must appear in one of the inputs")
 
-    // one tagged envelope stream: side + (aCols ∪ bCols, padded with
-    // typed nulls) + w — both changelogs arrive in the SAME micro-batch
-    // slice, so each batch is a consistent two-table transaction
-    val allCols = (aCols ++ bCols).distinct
-    val colType = (oldA.schema ++ oldB.schema)
-      .map(f => f.name -> f.dataType).toMap
-    def pad(d: DataFrame, side: String, have: Set[String]): DataFrame =
-      d.select(lit(side).as("side") +:
-        allCols.map(c => if (have(c)) col(c)
-          else lit(null).cast(colType(c)).as(c)) :+ col("w"): _*)
-    val envelope = pad(deltaA, "A", aCols.toSet)
-      .unionByName(pad(deltaB, "B", bCols.toSet))
-    val envSchema = widen(envelope.schema)
-
     val root = graft.Scratch.dir("graft-join-view-maintain")
-    val viewDir = Files.createDirectories(root.resolve("view"))
-    val storeA = new SideStore(root.resolve("snapA"), oldA.schema, aCols,
-      snapshotBuckets)
-    val storeB = new SideStore(root.resolve("snapB"), oldB.schema, bCols,
-      snapshotBuckets)
+    val jv = new JoinView(root, oldA, deltaA, oldB, deltaB, joinKeys,
+      aVals, bVals, viewGroupCols, viewSumCols, snapshotBuckets)
 
     // AQE stays ON in this loop, unlike the single-table one. Measured
     // with it off (replay bench, stream_join_view_replay): Spark jobs
@@ -372,50 +378,100 @@ object ViewMaintain {
     val ss = LocalFs.microBatchSession(spark, ShufflePartitions, "hdfs",
       aqe = true)
 
-    phase(spark.sparkContext, "seed snapshot") {
-      storeA.seed(oldA)
-      storeB.seed(oldB)
+    replay(spark, ss, root, jv.envelope, orderCol, chunks)(jv.seed(ss)) {
+      (_, sb, batchId, sliceDir) => jv.step(sb, batchId, sliceDir)
     }
-    val viewSchema = phase(ss.sparkContext, "seed view") {
-      val v0 = storeA.rows(ss, 0).join(storeB.rows(ss, 0), joinKeys)
-        .groupBy(viewGroupCols.map(col): _*)
+  }
+
+  /** The join loop's durable state under `root` — one [[SideStore]]
+    * per input (`snapA`, `snapB`) and the batchId-versioned view
+    * (`view`) — with its seed and its per-batch step. */
+  private[streaming] final class JoinView(root: Path,
+      oldA: DataFrame, deltaA: DataFrame,
+      oldB: DataFrame, deltaB: DataFrame,
+      joinKeys: Seq[String], aVals: Seq[String], bVals: Seq[String],
+      viewGroupCols: Seq[String], viewSumCols: Seq[String],
+      snapshotBuckets: Option[Int]) {
+    private val aCols = oldA.columns.toSeq
+    private val bCols = oldB.columns.toSeq
+    private val viewDir = Files.createDirectories(root.resolve("view"))
+    private val storeA = new SideStore(root.resolve("snapA"), oldA.schema,
+      aCols, snapshotBuckets)
+    private val storeB = new SideStore(root.resolve("snapB"), oldB.schema,
+      bCols, snapshotBuckets)
+
+    /** One tagged envelope stream: side + (aCols ∪ bCols, padded with
+      * typed nulls) + w — both changelogs arrive in the SAME
+      * micro-batch slice, so each batch is a consistent two-table
+      * transaction. */
+    val envelope: DataFrame = {
+      val allCols = (aCols ++ bCols).distinct
+      val colType = (oldA.schema ++ oldB.schema)
+        .map(f => f.name -> f.dataType).toMap
+      def pad(d: DataFrame, side: String, have: Set[String]): DataFrame =
+        d.select(lit(side).as("side") +:
+          allCols.map(c => if (have(c)) col(c)
+            else lit(null).cast(colType(c)).as(c)) :+ col("w"): _*)
+      pad(deltaA, "A", aCols.toSet).unionByName(pad(deltaB, "B", bCols.toSet))
+    }
+    private val envSchema = widen(envelope.schema)
+
+    private def viewOf(a: DataFrame, b: DataFrame): DataFrame =
+      a.join(b, joinKeys).groupBy(viewGroupCols.map(col): _*)
         .agg(count(lit(1)).as("cnt"),
           viewSumCols.map(c => sum(col(c)).as("sum_" + c)): _*)
-      v0.write.parquet(viewDir.resolve("v0").toString)
-      widen(v0.schema)
+    private val viewSchema = widen(viewOf(oldA, oldB).schema)
+
+    /** Seed `s0` of both sides at the same time, then view `v0`. */
+    def seed(ss: SparkSession): Unit = {
+      phase(ss.sparkContext, "seed snapshot") {
+        both(storeA.seed(oldA), storeB.seed(oldB))
+      }
+      phase(ss.sparkContext, "seed view") {
+        viewOf(storeA.rows(ss, 0), storeB.rows(ss, 0))
+          .write.parquet(viewDir.resolve("v0").toString)
+      }
     }
 
-    replay(ss, root, envelope, orderCol, chunks) { (sb, batchId, sliceDir) =>
+    /** ΔA and ΔB of the slice in `sliceDir`. */
+    private def sides(sb: SparkSession,
+        sliceDir: Path): (DataFrame, DataFrame) = {
       val slice = sb.read.schema(envSchema).parquet(sliceDir.toString)
       def sideOf(side: String, cols: Seq[String]) =
         slice.filter(col("side") === side).select((cols :+ "w").map(col): _*)
-      val dA = sideOf("A", aCols)
-      val dB = sideOf("B", bCols)
-      // join-view delta against the PRE-batch sides (the latest
-      // snapshots), merged into the versioned view — no base access
-      // beyond the two delta-sided join terms
-      val v = storeA.version
-      val dJ = ViewOps.joinViewDeltas(storeA.rows(sb, v), dA,
-        storeB.rows(sb, v), dB, joinKeys, aVals, bVals)
-      val prevV = sb.read.schema(viewSchema)
-        .parquet(viewDir.resolve(s"v$batchId").toString)
-      phase(sb.sparkContext, s"b$batchId view") {
-        ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
-          .write.mode("overwrite")
-          .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
-      }
-      // compact both side stores with this batch's slice, then
-      // truncate the slice and the superseded snapshots
-      if (v == batchId) phase(sb.sparkContext, s"b$batchId compact") {
-        storeA.compact(sb, v, dA)
-        storeB.compact(sb, v, dB)
-        graft.Scratch.deleteTree(sliceDir)
-        storeA.truncate(v)
-        storeB.truncate(v)
-      }
+      (sideOf("A", aCols), sideOf("B", bCols))
     }
-    spark.read.parquet(
-      viewDir.resolve(s"v${maxVersion(viewDir)}").toString)
+
+    /** Compact `s<batchId>` ⊎ the slice into `s<batchId+1>` on both
+      * sides at the same time. */
+    def compact(sb: SparkSession, batchId: Long, sliceDir: Path): Unit =
+      phase(sb.sparkContext, s"b$batchId compact") {
+        val (dA, dB) = sides(sb, sliceDir)
+        both(storeA.compact(sb, batchId, dA), storeB.compact(sb, batchId, dB))
+      }
+
+    /** Batch `batchId`: the view step — the join-view delta against the
+      * PRE-batch sides `s<batchId>`, merged into `v<batchId>` as
+      * `v<batchId+1>` — at the same time as [[compact]]; then, once all
+      * three committed, truncate the slice and `s<batchId>` of both
+      * sides. `storeA`'s `s<batchId>` is truncated first after the
+      * slice, so a retry that finds it gone has committed all three
+      * outputs and only finishes the truncation. */
+    def step(sb: SparkSession, batchId: Long, sliceDir: Path): Unit = {
+      if (storeA.has(batchId)) both(
+        phase(sb.sparkContext, s"b$batchId view") {
+          val (dA, dB) = sides(sb, sliceDir)
+          val dJ = ViewOps.joinViewDeltas(storeA.rows(sb, batchId), dA,
+            storeB.rows(sb, batchId), dB, joinKeys, aVals, bVals)
+          val prevV = sb.read.schema(viewSchema)
+            .parquet(viewDir.resolve(s"v$batchId").toString)
+          ViewOps.maintainSumView(prevV, dJ, viewGroupCols, viewSumCols)
+            .write.mode("overwrite")
+            .parquet(viewDir.resolve(s"v${batchId + 1}").toString)
+        },
+        compact(sb, batchId, sliceDir))
+      truncate(batchId, sliceDir, storeA, storeB)
+    }
   }
 
   /** Reconcile a signed slice into a snapshot — exact multiset
@@ -462,23 +518,36 @@ object ViewMaintain {
       .unionByName(reconciled)
   }
 
-  /** Stage `deltas` into `chunks` range-ordered micro-batches over
-    * `orderCol` ([[BoundedReplay.stage]]) and feed them to a
+  /** Truncate what batch `batchId` consumed — its slice, then
+    * `s<batchId>` of each store in order — once all of the batch's
+    * outputs committed. Idempotent, so a retry finishes it. */
+  private def truncate(batchId: Long, sliceDir: Path,
+      stores: SideStore*): Unit = {
+    graft.Scratch.deleteTree(sliceDir)
+    stores.foreach(_.truncate(batchId))
+  }
+
+  /** Run a loop under `root`: `seed` its durable state while `deltas`
+    * is staged into `chunks` range-ordered micro-batches over
+    * `orderCol` ([[BoundedReplay.stage]]), then feed them to a
     * foreachBatch stream ([[BoundedReplay.feed]]) in `ss`. Each batch
-    * first commits its batchId-keyed slice to `root/log` — the WAL:
-    * a replayed batch overwrites its own slice — then runs `step` on
-    * (batch session, batchId, slice dir). Blocks until every chunk is
-    * consumed; an empty changelog stages nothing and runs no batch. */
-  private def replay(ss: SparkSession, root: Path, deltas: DataFrame,
-      orderCol: String, chunks: Int)(
-      step: (SparkSession, Long, Path) => Unit): Unit = {
-    // the changelog (often a full-outer rowDeltas join) is consumed
-    // twice — the bounds agg and the staging write — so cache it once
-    val staged = phase(deltas.sparkSession.sparkContext, "staging") {
-      val d = deltas.persist()
-      try BoundedReplay.stage(d, col(orderCol), chunks)
-      finally d.unpersist()
-    }
+    * first commits its batchId-keyed slice to `root/log` — the WAL: a
+    * replayed batch overwrites its own slice — then runs `step` on
+    * (seed result, batch session, batchId, slice dir). Blocks until
+    * every chunk is consumed (an empty changelog stages nothing and
+    * runs no batch), releases the loop's scratch and returns the final
+    * view version under `root/view`. */
+  private def replay[S](spark: SparkSession, ss: SparkSession, root: Path,
+      deltas: DataFrame, orderCol: String, chunks: Int)(seed: => S)(
+      step: (S, SparkSession, Long, Path) => Unit): DataFrame = {
+    val (seeded, staged) = both(seed,
+      phase(deltas.sparkSession.sparkContext, "staging") {
+        // the changelog (often a full-outer rowDeltas join) is consumed
+        // twice — the bounds agg and the staging write — so cache it once
+        val d = deltas.persist()
+        try BoundedReplay.stage(d, col(orderCol), chunks)
+        finally d.unpersist()
+      })
     staged.foreach { stage =>
       val src = Files.createDirectories(root.resolve("src"))
       val logDir = root.resolve("log")
@@ -490,12 +559,68 @@ object ViewMaintain {
         phase(batch.sparkSession.sparkContext, s"b$batchId slice") {
           batch.write.mode("overwrite").parquet(sliceDir.toString)
         }
-        step(batch.sparkSession, batchId, sliceDir)
+        step(seeded, batch.sparkSession, batchId, sliceDir)
       }
       BoundedReplay.feed(ss.readStream.schema(deltas.schema)
         .parquet(src.toString).writeStream.foreachBatch(onBatch)
         .option("checkpointLocation", root.resolve("ckpt").toString)
         .start(), stage, chunks, src)
+    }
+    val viewDir = root.resolve("view")
+    val result = viewDir.resolve(s"v${maxVersion(viewDir)}")
+    release(root, result, staged)
+    spark.read.parquet(result.toString)
+  }
+
+  /** Release what a finished loop holds in scratch: every tree under
+    * `root` but `keep` (the stream's source, checkpoint and log, the
+    * side stores, every other view version), then the changelog
+    * `staged` — `<its own scratch root>/chunks`, which no other run
+    * reads (it is not in [[BoundedReplay]]'s stage cache). */
+  private def release(root: Path, keep: Path, staged: Option[Path]): Unit = {
+    def prune(dir: Path): Unit = {
+      val ls = Files.list(dir)
+      val children = try ls.toArray(n => new Array[Path](n)) finally ls.close()
+      children.foreach { c =>
+        if (keep.startsWith(c)) { if (c != keep) prune(c) }
+        else graft.Scratch.deleteTree(c)
+      }
+    }
+    prune(root)
+    staged.foreach { s =>
+      graft.Scratch.deleteTree(s)
+      Files.deleteIfExists(s.getParent)
+    }
+  }
+
+  /** Evaluate `a` on this thread while `b` runs on a short-lived daemon
+    * thread created here, and return both results once both ended.
+    * Created here, the worker inherits a copy of this thread's Spark
+    * local properties — inside `foreachBatch`, the stream's job group,
+    * so a failed or stopped query cancels the worker's jobs too — and
+    * labels its own jobs with [[phase]]. A failure is rethrown (the
+    * other one attached as suppressed) only after both ended: no
+    * worker outlives the call, and a caller never goes on to truncate
+    * past a failed step. */
+  private def both[A, B](a: => A, b: => B): (A, B) = {
+    def attempt[X](x: => X): Either[Throwable, X] =
+      try Right(x) catch { case e: Throwable => Left(e) }
+    var rb: Either[Throwable, B] = null
+    val worker = new Thread(() => rb = attempt(b),
+      s"view-maintain worker of ${Thread.currentThread.getName}")
+    worker.setDaemon(true)
+    worker.start()
+    val ra = attempt(a)
+    // a stopped query interrupts this thread; its job group's jobs are
+    // cancelled, so the worker ends soon — wait for it all the same
+    var interrupted = false
+    while (worker.isAlive)
+      try worker.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), r) => r.swap.foreach(e.addSuppressed); throw e
+      case (_, Left(e)) => throw e
     }
   }
 
@@ -503,22 +628,22 @@ object ViewMaintain {
     StructType(s.fields.map(_.copy(nullable = true)))
 
   /** Run `f` with its Spark jobs labelled `vm: <name>` — the phase
-    * names the traced benchmark splits the loops' time by. */
+    * names the traced benchmark splits the loops' time by. The label
+    * is this thread's: overlapped steps each set their own. */
   private def phase[A](sc: org.apache.spark.SparkContext, name: String)(
       f: => A): A = {
     sc.setJobDescription(s"vm: $name")
     try f finally sc.setJobDescription(null)
   }
 
-  /** Highest `<prefix><N>` version present under a versioned dir
-    * (`v<N>` views, `s<N>` snapshots). */
-  private def maxVersion(dir: Path, prefix: String = "v"): Long = {
+  /** Highest view version `v<N>` present under `dir`. */
+  private def maxVersion(dir: Path): Long = {
     val vs = Files.list(dir)
     try {
       val it = vs.iterator(); var m = 0L
       while (it.hasNext) {
         val n = it.next().getFileName.toString
-        if (n.startsWith(prefix)) m = math.max(m, n.drop(prefix.length).toLong)
+        if (n.startsWith("v")) m = math.max(m, n.drop(1).toLong)
       }
       m
     } finally vs.close()
