@@ -63,9 +63,11 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     val path = s"$sfDir/events.parquet"
     nativeEventsSchema(spark, path) match {
-      case Some(_) =>
+      case Some(schema) =>
+        // the probed schema spares the read a second footer inference;
         // session TZ is pinned UTC, so an NTZ -> TS cast is value-identity
-        spark.read.parquet(path).withColumn("ts", col("ts").cast(TimestampType))
+        spark.read.schema(schema).parquet(path)
+          .withColumn("ts", col("ts").cast(TimestampType))
       case None =>
         spark.read.schema(eventsRawSchema).parquet(path)
           .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -75,7 +77,9 @@ object Tables {
   /** Footer-inferred schema when `ts` is already a parquet timestamp
     * (µs/ms, TS or NTZ); None when the footer is ns-encoded (inference
     * throws) or `ts` surfaces as a non-timestamp type. Probed once per
-    * call site — an O(1 footer) read, not a directory listing. */
+    * call site — an O(1 footer) read, not a directory listing — and the
+    * read that follows takes the probed schema instead of inferring it
+    * again. */
   private[graft] def nativeEventsSchema(
       spark: SparkSession, path: String): Option[StructType] =
     scala.util.Try(spark.read.parquet(path).schema).toOption.filter { s =>

@@ -379,37 +379,23 @@ object SimilarityOps {
   }
 
   /** [[knnIvf]] with Lloyd-refined centroids: seeds are the `nCells`
-    * lowest-id vectors (deterministic), then `refineIters` passes each
-    * assign every vector to its nearest centroid and replace centroids
-    * with the per-cell mean. Refined centroids track the data
-    * distribution instead of whatever the first `nCells` vectors
-    * happened to be, so probes recall more true neighbors at the same
-    * nprobe.
-    *
-    * The centroid table is metadata-sized (nCells·dim doubles), so the
-    * Lloyd loop keeps it on the driver — the MLlib KMeans structure: per
-    * pass, one narrow `mapPartitions` job computes per-partition
-    * (cell → count, sum-vector) partials against the broadcast centroids
-    * and the driver merges ≤ partitions·nCells partial rows. No per-pass
-    * shuffle, no growing lazy plan.
-    * @note scale: each pass moves O(partitions·nCells·dim) bytes to the
-    *   driver — independent of corpus size; k-means|| seeding drops in
-    *   here if the corpus is adversarial, without changing the probe
-    *   path. */
+    * lowest-id vectors, then `refineIters` passes each assign every
+    * vector to its nearest centroid and replace centroids with the
+    * per-cell mean. Refined centroids track the data distribution
+    * instead of whatever the first `nCells` vectors happened to be, so
+    * probes recall more true neighbors at the same nprobe. The training
+    * is [[lloydCells]]'s exact form, so this is [[knnIvfDet]] under its
+    * k-means name. */
   def knnIvfKmeans(df: DataFrame, isQuery: org.apache.spark.sql.Column,
       nCells: Int = 16, refineIters: Int = 2, nprobe: Int = 4, k: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val typed = normedTyped(df, idCol, vecCol)
-    probeCells(typed, trainCells(typed, nCells, refineIters), isQuery, nprobe, k)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    knnIvfDet(df, isQuery, nCells, refineIters, nprobe, k, idCol, vecCol)
 
-  /** [[knnIvfKmeans]] with DETERMINISTIC, oracle-rebuildable training —
-    * the form that puts the IVF SHORTLIST itself (not only the
-    * probe-all degenerate) under the cross-engine hash oracle. The
-    * float-partial Lloyd loop in [[trainCells]] is order-dependent at
-    * the last bit (partition-order float sums), which is why the
-    * `nprobe < nCells` keys were rows-only; here every training step is
-    * arithmetic both engines replicate exactly:
+  /** IVF kNN with DETERMINISTIC, oracle-rebuildable training — the form
+    * that puts the IVF SHORTLIST itself (not only the probe-all
+    * degenerate) under the cross-engine hash oracle. Every training
+    * step is arithmetic both engines replicate exactly
+    * ([[lloydCells]]):
     *
     *  - seeds = the `nCells` lowest-id vectors (deterministic);
     *  - assignment = argmax cosine with `(cos DESC, cid)` tie-break,
@@ -421,26 +407,15 @@ object SimilarityOps {
     * The probe path is the shared `(cos DESC, cid)`-ranked nprobe
     * shortlist + exact rerank. Returns `(qid, nbr, cos, rk)`.
     *
-    * @note scale: the iteration is `iters` broadcast joins of the
-    *   corpus against a ≤ nCells-row centroid table plus one
-    *   posexplode/groupBy per pass (shuffle on (cid, dim) — bounded by
-    *   corpus·dim narrow rows); the tiny centroid table materializes
-    *   per pass to keep lineage flat. Quantizing the partial sums to
-    *   10⁻⁹ units costs ~1e-10 per component against unit-norm
-    *   vectors — far below the round(·,6) output grid. */
+    * @note scale: `iters` narrow passes over the cached working set,
+    *   each moving O(partitions·nCells·dim) longs to the driver; then
+    *   one routing pass each for the corpus and the queries, a
+    *   broadcast join and the per-query top-k aggregate. */
   def knnIvfDet(df: DataFrame, isQuery: org.apache.spark.sql.Column,
       nCells: Int = 16, iters: Int = 2, nprobe: Int = 4, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val n = normed(df, idCol, vecCol).persist()
-    val cents = detTrainCells(n, nCells, iters)
-    val assigned = detAssignCells(n, cents)
-    val probes = detProbes(n, cents, isQuery, math.min(nprobe, nCells))
-    val scored = assigned.join(broadcast(probes), "cid")
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("cos",
-        round(expr("vec_dot(v, qv)") / (col("nrm") * col("qn")), 6))
-      .select(col("qid"), col("vec_id").as("nbr"), col("cos"))
-    topKScored(scored, k, "cos")
+    val typed = normedTyped(df, idCol, vecCol)
+    probeCells(typed, lloydCells(typed, nCells, iters), isQuery, nprobe, k)
   }
 
   /** PERSIST a deterministically-trained IVF index — the
@@ -476,16 +451,16 @@ object SimilarityOps {
       iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding", trainOn: Option[DataFrame] = None): Unit = {
     EpochLog.reset(path)
-    val n = normed(df, idCol, vecCol).persist()
+    val typed = normedTyped(df, idCol, vecCol)
     // trainOn: centroids from a designated training corpus (the bulk
     // epoch) while `df` is what gets indexed — the split the append
     // maintenance path ([[ivfAssignSaved]]) relies on
-    val nt = trainOn.fold(n)(t => normed(t, idCol, vecCol))
-    val cents = detTrainCells(nt, nCells, iters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    detAssignCells(n, cents).withColumn("epoch", lit(0L))
+    val nt = trainOn.fold(typed)(t => normedTyped(t, idCol, vecCol))
+    val cents = lloydCells(nt, nCells, iters)
+    saveCentroids(typed.sparkSession, path, cents)
+    assignCells(typed, cents).withColumn("epoch", lit(0L))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/assigned")
-    n.unpersist()
+    typed.unpersist(); nt.unpersist()
     ()
   }
 
@@ -493,9 +468,9 @@ object SimilarityOps {
     * [[saveIvfIndex]] index — the stateless ingest half of the ANN
     * lifecycle (train once → bulk build → APPEND deltas → serve).
     * The saved centroid table loads once and broadcasts; each arriving
-    * vector routes to its argmax-cosine cell with arithmetic
-    * bit-identical to the batch builder's `detAssignCells` (`vec_dot`
-    * left-to-right sum, `(cos DESC, cid)` tie-break), so rows appended
+    * vector routes to its argmax-cosine cell through the router the
+    * bulk build uses ([[nearestCell]]: `vec_dot`'s left-to-right sum,
+    * `(cos DESC, cid)` tie-break), so rows appended
     * by [[appendToIvfIndex]] are indistinguishable from rows the bulk
     * build would have written — append-maintenance loses NOTHING vs a
     * from-scratch rebuild, which is exactly what
@@ -517,17 +492,8 @@ object SimilarityOps {
     import spark.implicits._
     val cents = loadCentroids(spark, path)
     require(cents.nonEmpty, s"no centroids at $path/centroids")
-    val bc = spark.sparkContext.broadcast(cents)
-    normed(newVecs, idCol, vecCol)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .as[(Long, Seq[Double], Double)]
-      .mapPartitions { it =>
-        val cen = bc.value
-        it.map { case (id, vSeq, nrm) =>
-          (id, vSeq, nrm, cen(nearestCell(cen, vSeq.toArray, nrm))._1)
-        }
-      }
-      .toDF("vec_id", "v", "nrm", "cid")
+    assignCells(normed(newVecs, idCol, vecCol).as[(Long, Seq[Double], Double)],
+      cents)
   }
 
   /** Append [[ivfAssignSaved]] rows to the index's `assigned/` table —
@@ -609,8 +575,8 @@ object SimilarityOps {
   def cosineNearDupsCelled(df: DataFrame, minCosine: Double,
       nCells: Int = 16, iters: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val n = normed(df, idCol, vecCol).persist()
-    val a = detAssignCells(n, detTrainCells(n, nCells, iters))
+    val typed = normedTyped(df, idCol, vecCol)
+    val a = assignCells(typed, lloydCells(typed, nCells, iters))
     a.as("a").hint("shuffle_hash")
       .join(a.as("b"), col("a.cid") === col("b.cid") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -641,27 +607,21 @@ object SimilarityOps {
     *   side of the serve join — i.e. driver-memory-bounded by design
     *   — so it is collected a single time and both the probed-cell
     *   set and the join's (local-relation) build side come from that
-    *   one evaluation, instead of running the window-ranked
-    *   crossJoin as two jobs.
+    *   one evaluation, instead of running the routing pass as two
+    *   jobs.
     *
-    * BATCH-ONLY: the probed-cell collect (and the window ranking)
-    * are illegal on a streaming frame — streaming serves go through
-    * [[knnLookupIvf]], the broadcast-index twin. */
+    * BATCH-ONLY: the probed-cell collect is illegal on a streaming
+    * frame — streaming serves go through [[knnLookupIvf]], the
+    * broadcast-index twin. */
   def knnIvfSaved(queries: DataFrame, path: String,
       isQuery: org.apache.spark.sql.Column, nprobe: Int = 4, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbeRows: Int = 200000): DataFrame = {
     val spark = queries.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-    val nq = normed(queries, idCol, vecCol).filter(isQuery)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("__cos").desc, col("cid"))
-    val probesPlan = nq.crossJoin(broadcast(cents))
-      .withColumn("__cos", expr("vec_dot(qv, cv)") / (col("qn") * col("cnrm")))
-      .withColumn("__rk", row_number().over(wq))
-      .filter(col("__rk") <= nprobe)
-      .select(col("qid"), col("qv"), col("qn"), col("cid").cast("long").as("cid"))
+    import spark.implicits._
+    val probesPlan = probeRows(
+      normed(queries, idCol, vecCol).as[(Long, Seq[Double], Double)],
+      loadCentroids(spark, path), isQuery, nprobe)
     // the probes frame is the serve join's BROADCAST side, i.e.
     // driver-memory-bounded by design — collect it once; the probed
     // cells (≤ nCells values) fall out of the same rows and become a
@@ -679,18 +639,18 @@ object SimilarityOps {
     // cap+1 rows even on an oversized batch (a bare collect-then-check
     // would hold the whole blow-up before the require fired, leaving
     // only spark.driver.maxResultSize as the real backstop).
-    val probeRows = probesPlan.limit(maxProbeRows + 1).collect()
-    require(probeRows.length <= maxProbeRows,
+    val rows = probesPlan.limit(maxProbeRows + 1).collect()
+    require(rows.length <= maxProbeRows,
       s"knnIvfSaved collected over maxProbeRows=$maxProbeRows probe " +
         "rows: the query batch is too large for the collect-once serve " +
         "path — route it through knnLookupIvf (broadcast index) or " +
         "knnIvfDet (distributed join)")
-    val probedCells = probeRows.map(_.getLong(3)).distinct.toSeq
+    val cells = rows.map(_.getLong(3)).distinct.toSeq
     val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
+      java.util.Arrays.asList(rows: _*), probesPlan.schema)
     val assigned = EpochLog.live(spark, path,
       spark.read.parquet(s"$path/assigned")
-        .filter(col("cid").isin(probedCells: _*)), "vec_id")
+        .filter(col("cid").isin(cells: _*)), "vec_id")
     val scored = assigned.join(broadcast(probes), "cid")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos",
@@ -701,8 +661,8 @@ object SimilarityOps {
 
   /** Serve kNN queries from a [[saveIvfIndex]] index held IN MEMORY —
     * the online ANN-serving kernel, and the stateless/streaming twin
-    * of [[knnIvfSaved]] (whose probe ranking is a window function —
-    * fine batch-side, unavailable on a stream): the centroid table
+    * of [[knnIvfSaved]] (whose probe collect and partition-pruned
+    * join are batch-only): the centroid table
     * and the cid-grouped corpus load once, broadcast, and each
     * arriving query row routes itself to its `nprobe` nearest cells
     * and scans ONLY those cells' vectors, top-k inline. No shuffle,
@@ -781,75 +741,6 @@ object SimilarityOps {
       .withColumn("rk", col("rk").cast("int"))
   }
 
-  /** Deterministic argmax-cosine cell assignment — `(cos DESC, cid)`
-    * tie-break, shared by the det IVF forms. */
-  private def detAssignCells(n: DataFrame, cents: DataFrame): DataFrame =
-    // argmax-by-aggregation instead of row_number over a window: the
-    // min(struct) carries the (−cos, cid) order key plus the payload,
-    // aggregates map-side before one exchange of ≤ one row per vector,
-    // and never sorts. (−x) preserves Double.compare order exactly, so
-    // the (cos DESC, cid ASC) pick is bit-identical to the old window;
-    // (−cos, cid) is unique per vector, so the payload fields are
-    // never reached by the struct comparison.
-    n.crossJoin(broadcast(cents))
-      .withColumn("__cos",
-        expr("vec_dot(v, cv)") / (col("nrm") * col("cnrm")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("__cos")).as("nc"), col("cid"),
-        col("v"), col("nrm"))).as("m"))
-      .select(col("vec_id"), col("m.v").as("v"), col("m.nrm").as("nrm"),
-        col("m.cid").as("cid"))
-
-  /** Deterministic k-means cells (lowest-id seeds, exact-BIGINT
-    * 10⁻⁹-unit re-centering, `iters` fixed passes) — the trainer the
-    * `llm_knn_ivf_det` oracle unrolls; materializes ≤ nCells rows per
-    * pass. */
-  private def detTrainCells(n: DataFrame, nCells: Int,
-      iters: Int): DataFrame = {
-    val spark = n.sparkSession
-    import spark.implicits._
-    var cents = n.orderBy("vec_id").limit(nCells)
-      .select(col("vec_id").as("cid"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
-    for (_ <- 1 to iters) {
-      val next = detAssignCells(n, cents)
-        .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-        .withColumn("x9", round(col("x") * lit(1.0e9)).cast("long"))
-        .groupBy("cid", "i")
-        .agg(sum(col("x9")).as("s9"), count(lit(1)).as("cnt"))
-        .withColumn("mean", col("s9").cast("double") / col("cnt") / lit(1.0e9))
-        .groupBy("cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("i").as("i"), col("mean").as("m")))),
-          s => s.getField("m")).as("cv"))
-        .withColumn("cnrm", sqrt(expr("vec_dot(cv, cv)")))
-        .filter(col("cnrm") > 0)
-        .as[(Long, Seq[Double], Double)].collect().sortBy(_._1) // ≤ nCells rows
-      cents = spark.createDataset(next.toIndexedSeq).toDF("cid", "cv", "cnrm")
-    }
-    cents
-  }
-
-  /** Each query's `np` nearest cells, `(cos DESC, cid)`-ranked:
-    * `(qid, qv, qn, cid)`. */
-  private def detProbes(n: DataFrame, cents: DataFrame,
-      isQuery: org.apache.spark.sql.Column, np: Int): DataFrame =
-    // top-np by sorted-slice aggregation instead of a window: one
-    // hash agg of ≤ nCells structs per query, sliced to np — the
-    // (−cos, cid) struct sort is bit-identical to the old
-    // (cos DESC, cid ASC) window order (see detAssignCells).
-    n.filter(isQuery)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__cos", expr("vec_dot(qv, cv)") / (col("qn") * col("cnrm")))
-      .groupBy(col("qid"))
-      .agg(slice(array_sort(collect_list(struct(
-        negate(col("__cos")).as("nc"), col("cid"),
-        col("qv"), col("qn")))), 1, np).as("top"))
-      .select(col("qid"), explode(col("top")).as("e"))
-      .select(col("qid"), col("e.qv").as("qv"), col("e.qn").as("qn"),
-        col("e.cid").as("cid"))
-
   /** [[knnPq]] with DETERMINISTIC, oracle-rebuildable codebook training
     * — [[knnIvfDet]]'s exact-BIGINT re-centering applied per SUBSPACE,
     * so the full PQ pipeline (both Lloyd passes per codebook, encoding,
@@ -904,8 +795,8 @@ object SimilarityOps {
   /** Deterministic argmin-L2 code assignment — `(dist ASC, code ASC)`
     * tie-break, squared-difference fold left-to-right. */
   private def detAssignCodes(sp: DataFrame, book: DataFrame): DataFrame =
-    // argmin-by-aggregation (see detAssignCells): min(struct(d, c))
-    // replicates the (dist ASC, code ASC) window pick exactly — (d, c)
+    // argmin-by-aggregation: min(struct(d, c)) replicates the
+    // (dist ASC, code ASC) window pick exactly — (d, c)
     // is unique per (vector, subspace) — with a map-side partial agg
     // instead of an exchange + sort of corpus·kCodes rows.
     sp.join(broadcast(book), "j")
@@ -987,10 +878,10 @@ object SimilarityOps {
   /** The FULL production ANN stack — IVF cells pruning the scan, PQ
     * codes compressing it, exact rerank ordering the tail — with BOTH
     * trainings deterministic, so the `llm_knn_ivfpq_det` oracle
-    * rebuilds cells ([[detTrainCells]]), codebooks ([[detTrainBooks]]),
+    * rebuilds cells ([[lloydCells]]), codebooks ([[detTrainBooks]]),
     * probe routing, in-cell ADC scoring and the rerank, hash-checking
-    * the entire pipeline (the float-Lloyd [[knnIvfPq]] stays the speed
-    * path, rows-only). Candidates are ADC-scored ONLY inside each
+    * the entire pipeline ([[knnIvfPq]], with float-Lloyd codebooks,
+    * stays rows-only). Candidates are ADC-scored ONLY inside each
     * query's `nprobe` cells. Returns `(qid, nbr, cos, rk)` with exact
     * final cosines.
     *
@@ -1002,12 +893,11 @@ object SimilarityOps {
       m: Int = 8, kCodes: Int = 16, pqIters: Int = 2, rerank: Int = 40,
       k: Int = 10, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val n = normed(df, idCol, vecCol).persist()
-    val cents = detTrainCells(n, nCells, cellIters)
-    val cellOf = detAssignCells(n, cents).select("vec_id", "cid")
-    val probes = detProbes(n, cents, isQuery, math.min(nprobe, nCells))
-      .select("qid", "cid")
-    val u = n.select(col("vec_id"),
+    val typed = normedTyped(df, idCol, vecCol)
+    val cents = lloydCells(typed, nCells, cellIters)
+    val cellOf = assignCells(typed, cents).select("vec_id", "cid")
+    val probes = probeRows(typed, cents, isQuery, nprobe).select("qid", "cid")
+    val u = typed.select(col("vec_id"),
       expr("transform(v, x -> x / nrm)").as("uv")).persist()
     val sp = detSubspaces(u, m)
     val book = detTrainBooks(sp, u, kCodes, pqIters)
@@ -1043,19 +933,19 @@ object SimilarityOps {
   def saveIvfPqIndex(df: DataFrame, path: String, nCells: Int = 16,
       cellIters: Int = 2, m: Int = 8, kCodes: Int = 16, pqIters: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val n = normed(df, idCol, vecCol).persist()
-    val cents = detTrainCells(n, nCells, cellIters)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    detAssignCells(n, cents).select("vec_id", "cid")
+    val typed = normedTyped(df, idCol, vecCol)
+    val cents = lloydCells(typed, nCells, cellIters)
+    saveCentroids(typed.sparkSession, path, cents)
+    assignCells(typed, cents).select("vec_id", "cid")
       .write.mode("overwrite").parquet(s"$path/cellOf")
-    val u = n.select(col("vec_id"),
+    val u = typed.select(col("vec_id"),
       expr("transform(v, x -> x / nrm)").as("uv")).persist()
     val sp = detSubspaces(u, m)
     val book = detTrainBooks(sp, u, kCodes, pqIters)
     book.write.mode("overwrite").parquet(s"$path/books")
     detAssignCodes(sp, book).write.mode("overwrite").parquet(s"$path/codes")
     u.write.mode("overwrite").parquet(s"$path/unit")
-    n.unpersist(); u.unpersist(); sp.unpersist()
+    typed.unpersist(); u.unpersist(); sp.unpersist()
     ()
   }
 
@@ -1227,67 +1117,13 @@ object SimilarityOps {
     topKScored(fused, k, "rrf")
   }
 
-  /** Lloyd-refined coarse cells over the normalized working set —
-    * shared by [[knnIvfKmeans]] and [[knnIvfPq]]. */
-  private def trainCells(
-      typed: org.apache.spark.sql.Dataset[(Long, Seq[Double], Double)],
-      nCells: Int, refineIters: Int): Array[(Long, Array[Double], Double)] = {
-    val spark = typed.sparkSession
-    import spark.implicits._
-    // Seeds: the nCells lowest ids. An id-hash SPREAD was tried and
-    // measured strictly worse on both fixtures (SCALE.md, "IVF recall":
-    // 0.46/0.68 vs 0.84/1.00) — Lloyd refinement recovers distribution
-    // shape from any deterministic seed, and low-id seeds keep the probe
-    // recall bound reproducible.
-    var cents = typed.orderBy("vec_id").limit(nCells).collect()
-      .map { case (id, v, nr) => (id, v.toArray, nr) }
-    for (_ <- 1 to refineIters if cents.nonEmpty) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val partials = typed.mapPartitions { it =>
-        val cs = bc.value
-        val sums = new Array[Array[Double]](cs.length)
-        val cnts = new Array[Long](cs.length)
-        it.foreach { case (_, vSeq, nr) =>
-          val v = vSeq.toArray
-          val best = nearestCell(cs, v, nr)
-          if (sums(best) == null) sums(best) = new Array[Double](v.length)
-          val s = sums(best)
-          var i = 0
-          val m = math.min(v.length, s.length)
-          while (i < m) { s(i) += v(i); i += 1 }
-          cnts(best) += 1
-        }
-        Iterator.range(0, cs.length).filter(sums(_) != null)
-          .map(ix => (cs(ix)._1, cnts(ix), sums(ix).toSeq))
-      }.collect()
-      cents = partials.groupBy(_._1).toArray.sortBy(_._1).map {
-        case (cid, rows) =>
-          val dim = rows.head._3.length
-          val s = new Array[Double](dim)
-          var c = 0L
-          rows.foreach { case (_, cnt, sv) =>
-            c += cnt
-            var i = 0
-            while (i < dim) { s(i) += sv(i); i += 1 }
-          }
-          var i = 0
-          while (i < dim) { s(i) /= c; i += 1 }
-          var d = 0.0
-          i = 0
-          while (i < dim) { d += s(i) * s(i); i += 1 }
-          (cid, s, math.sqrt(d))
-      }.filter(_._3 > 0)
-    }
-    cents
-  }
-
   /** Product-quantization kNN with ADC scoring — the memory-compression
     * scale path for similarity search: each normalized vector is stored
     * as `m` small code indices (one byte each at kCodes ≤ 256) instead
     * of `dim` doubles, an 8·dim/m× compression that lets a 100 TB
     * embedding corpus fit a cluster's memory for scanning. Codebooks
-    * (per-subspace k-means, driver-held Lloyd exactly like
-    * [[knnIvfKmeans]]) are metadata-sized: m·kCodes·(dim/m) doubles.
+    * (per-subspace k-means, driver-held Lloyd in [[lloydCells]]'s
+    * shape) are metadata-sized: m·kCodes·(dim/m) doubles.
     *
     * Scoring is asymmetric distance computation: per query ONE
     * m×kCodes table of exact subspace dot products, then each corpus
@@ -1360,7 +1196,7 @@ object SimilarityOps {
     val spark = df.sparkSession
     import spark.implicits._
     val typed = normedTyped(df, idCol, vecCol)
-    val cells = trainCells(typed, nCells, cellIters)
+    val cells = lloydCells(typed, nCells, cellIters)
     val unit = toUnit(typed)
     val books = trainBooks(unit, m, kCodes, pqIters)
     val sub = books(0)(0).length
@@ -1410,66 +1246,19 @@ object SimilarityOps {
     *   one scale double) — the float vector is fetched only for the
     *   shortlist rows (here kept alongside; in a real store it lives in
     *   a separate column family keyed by id). Routing + encoding are
-    *   narrow passes against broadcast centroids; the only shuffle is
-    *   the per-query top-k window. */
+    *   narrow passes against broadcast centroids; the only shuffles
+    *   are the per-query top-k aggregates. The cells are
+    *   [[lloydCells]]'s exact form, so this is [[knnIvfSq8Det]]. */
   def knnIvfSq8(df: DataFrame, isQuery: org.apache.spark.sql.Column,
       nCells: Int = 16, cellIters: Int = 2, nprobe: Int = 4,
       shortlist: Int = 40, k: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val typed = normedTyped(df, idCol, vecCol)
-    val cells = trainCells(typed, nCells, cellIters)
-    if (cells.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nbr", "cos", "rk")
-    val bc = spark.sparkContext.broadcast(cells)
-    // one narrow pass: cell routing; the SQ8 encode is the same
-    // declarative form as knnSq8 (int8 codes + per-vector scale)
-    val assigned = typed.mapPartitions { it =>
-      val cs = bc.value
-      it.map { case (id, vSeq, nr) =>
-        (id, vSeq, nr, cs(nearestCell(cs, vSeq.toArray, nr))._1)
-      }
-    }.toDF("vec_id", "v", "nrm", "cid")
-    val q8 = assigned
-      .withColumn("s", greatest(expr("array_max(transform(v, x -> abs(x)))"),
-        lit(1e-12)) / 127.0)
-      .withColumn("q", expr("transform(v, x -> CAST(round(x / s) AS TINYINT))"))
-      .withColumn("qd", expr("transform(q, x -> CAST(x AS DOUBLE))"))
-    val np = math.min(nprobe, cells.length)
-    val probes = typed.filter(isQuery).mapPartitions { it =>
-      val cs = bc.value
-      it.flatMap { case (qid, vSeq, qn) =>
-        probedCells(cs, vSeq.toArray, qn, np).map(cid => (qid, vSeq, qn, cid))
-      }
-    }.toDF("qid", "qv", "qn", "cid")
-      .withColumn("qs", greatest(expr("array_max(transform(qv, x -> abs(x)))"),
-        lit(1e-12)) / 127.0)
-      .withColumn("qqd",
-        expr("transform(qv, x -> CAST(CAST(round(x / qs) AS TINYINT) AS DOUBLE))"))
-    val shortIds = topKScored(
-      q8.join(broadcast(probes), "cid")
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("approx",
-          col("s") * col("qs") * expr("vec_dot(qd, qqd)") / (col("nrm") * col("qn")))
-        .select(col("qid"), col("vec_id").as("nbr"), col("approx")),
-      shortlist, "approx").select("qid", "nbr")
-    // shortlist fetch against the full-vector tier (typed is cached),
-    // then the final exact-ordered top-k through the partial aggregate
-    val qside = typed.filter(isQuery)
-      .toDF("qid", "qv", "qn").select("qid", "qv", "qn")
-    val exact = typed.toDF("nbr", "nv", "nn")
-      .join(broadcast(shortIds), "nbr")
-      .join(broadcast(qside), "qid")
-      .withColumn("cos", round(expr("vec_dot(nv, qv)") / (col("nn") * col("qn")), 6))
-      .select(col("qid"), col("nbr"), col("cos"))
-    topKScored(exact, k, "cos")
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    knnIvfSq8Det(df, isQuery, nCells, cellIters, nprobe, shortlist, k,
+      idCol, vecCol)
 
-  /** [[knnIvfSq8]] with DETERMINISTIC, oracle-rebuildable cell
-    * training — the last ANN tier to get a hash-verified twin of its
-    * own composed stack: [[knnIvfDet]]'s exact-BIGINT Lloyd cells
+  /** [[knnIvfSq8]] under the hash oracle — the last ANN tier to get a
+    * hash-verified form of its own composed stack: the exact-BIGINT
+    * Lloyd cells of [[lloydCells]]
     * (lowest-id seeds, `(cos DESC, cid)` assignment, 10⁻⁹-unit
     * re-centering) route the probes, the in-cell scan runs on the
     * [[knnSq8]] int8 storage tier (per-vector scale + `round(x/s)`
@@ -1478,26 +1267,24 @@ object SimilarityOps {
     * re-ranks only the per-query `shortlist`. Every step is
     * arithmetic DuckDB replicates exactly, so the `llm_knn_ivfsq8_det`
     * oracle rebuilds train → assign → quantize → probe → shortlist →
-    * rerank end to end and hash-checks shortlist membership itself;
-    * the float-Lloyd [[knnIvfSq8]] stays the rows-only speed path.
+    * rerank end to end and hash-checks shortlist membership itself.
     *
-    * @note scale: same shape as [[knnIvfSq8]] — broadcast centroids
-    *   route, int8 codes bound the in-cell scan bytes (4× under
-    *   float32), and the float tier is touched only for
-    *   shortlist×queries rows. */
+    * @note scale: broadcast centroids route, int8 codes bound the
+    *   in-cell scan bytes (4× under float32), and the float tier is
+    *   touched only for shortlist×queries rows. */
   def knnIvfSq8Det(df: DataFrame, isQuery: org.apache.spark.sql.Column,
       nCells: Int = 16, iters: Int = 2, nprobe: Int = 4,
       shortlist: Int = 40, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val n = normed(df, idCol, vecCol).persist()
-    val cents = detTrainCells(n, nCells, iters)
-    // storage tier over the det-assigned corpus: int8 codes + scale
-    val q8 = detAssignCells(n, cents)
+    val typed = normedTyped(df, idCol, vecCol)
+    val cents = lloydCells(typed, nCells, iters)
+    // storage tier over the assigned corpus: int8 codes + scale
+    val q8 = assignCells(typed, cents)
       .withColumn("s", greatest(expr("array_max(transform(v, x -> abs(x)))"),
         lit(1e-12)) / 127.0)
       .withColumn("qd",
         expr("transform(v, x -> CAST(CAST(round(x / s) AS TINYINT) AS DOUBLE))"))
-    val probes = detProbes(n, cents, isQuery, math.min(nprobe, nCells))
+    val probes = probeRows(typed, cents, isQuery, nprobe)
       .withColumn("qs", greatest(expr("array_max(transform(qv, x -> abs(x)))"),
         lit(1e-12)) / 127.0)
       .withColumn("qqd",
@@ -1509,10 +1296,9 @@ object SimilarityOps {
           col("s") * col("qs") * expr("vec_dot(qd, qqd)") / (col("nrm") * col("qn")))
         .select(col("qid"), col("vec_id").as("nbr"), col("approx")),
       shortlist, "approx").select("qid", "nbr")
-    val qside = n.filter(isQuery).select(col("vec_id").as("qid"),
-      col("v").as("qv"), col("nrm").as("qn"))
-    val exact = n.select(col("vec_id").as("nbr"), col("v").as("nv"),
-        col("nrm").as("nn"))
+    // shortlist fetch against the full-vector tier (typed is cached)
+    val qside = typed.filter(isQuery).toDF("qid", "qv", "qn")
+    val exact = typed.toDF("nbr", "nv", "nn")
       .join(broadcast(shortIds), "nbr")
       .join(broadcast(qside), "qid")
       .withColumn("cos", round(expr("vec_dot(nv, qv)") / (col("nn") * col("qn")), 6))
@@ -1613,7 +1399,7 @@ object SimilarityOps {
 
   /** Per-subspace k-means codebooks over the unit working set —
     * driver-held Lloyd with the same structure and seeding policy as
-    * [[trainCells]]; empty clusters keep their previous centroid. */
+    * [[lloydCells]]; empty clusters keep their previous centroid. */
   private def trainBooks(
       unit: org.apache.spark.sql.Dataset[(Long, Seq[Double])],
       m: Int, kCodes: Int, refineIters: Int): Array[Array[Array[Double]]] = {
@@ -1740,6 +1526,15 @@ object SimilarityOps {
     normed(df, idCol, vecCol).as[(Long, Seq[Double], Double)].persist()
   }
 
+  /** Write a routing array as an index's `centroids/` table
+    * `(cid, cv, cnrm)` — what [[loadCentroids]] reads back. */
+  private def saveCentroids(spark: SparkSession, path: String,
+      cents: Array[(Long, Array[Double], Double)]): Unit = {
+    import spark.implicits._
+    cents.toSeq.map(c => (c._1, c._2.toSeq, c._3)).toDF("cid", "cv", "cnrm")
+      .write.mode("overwrite").parquet(s"$path/centroids")
+  }
+
   /** A saved index's `centroids/` as a cid-sorted routing array
     * `(cid, cv, cnrm)` — what the append and serve kernels broadcast. */
   private def loadCentroids(spark: SparkSession,
@@ -1753,8 +1548,8 @@ object SimilarityOps {
 
   /** Cosine of `v` (norm `nr`) to centroid `c`: the dot product summed
     * left to right over the shorter length, divided by `nr · cnrm` —
-    * `vec_dot`'s arithmetic, so the cell routing below is bit-identical
-    * to `detAssignCells` / `detProbes`. */
+    * `vec_dot`'s arithmetic, so every IVF form routes with the cosine
+    * the det oracles compute. */
   private def cellCos(c: (Long, Array[Double], Double), v: Array[Double],
       nr: Double): Double = {
     val cv = c._2
@@ -1767,8 +1562,10 @@ object SimilarityOps {
 
   /** Index of the centroid with max cosine to `v`; ties keep the first
     * (lowest cid — callers keep `cs` sorted by cid ascending), matching
-    * the declarative `ORDER BY cos DESC, cid` tie-break. */
-  private def nearestCell(cs: Array[(Long, Array[Double], Double)],
+    * the declarative `ORDER BY cos DESC, cid` tie-break under Spark's
+    * ordering: −0.0 equals 0.0, a NaN cosine never wins, and a vector
+    * whose every cosine is NaN goes to the lowest cid. */
+  private[graft] def nearestCell(cs: Array[(Long, Array[Double], Double)],
       v: Array[Double], nr: Double): Int = {
     var best = 0
     var bestCos = Double.NegativeInfinity
@@ -1782,40 +1579,148 @@ object SimilarityOps {
   }
 
   /** The cids of the `np` centroids nearest `v`, `(cos DESC, cid)`
-    * ranked — detProbes' order. */
-  private def probedCells(cs: Array[(Long, Array[Double], Double)],
+    * ranked under Spark's ordering: `+ 0.0` folds −0.0 into 0.0 (Scala's
+    * `Double` ordering puts −0.0 first), and NaN sorts last. */
+  private[graft] def probedCells(cs: Array[(Long, Array[Double], Double)],
       v: Array[Double], nr: Double, np: Int): Array[Long] =
-    cs.map(c => (cellCos(c, v, nr), c._1))
-      .sortBy { case (c, cid) => (-c, cid) }.take(np).map(_._2)
+    cs.map(c => (-cellCos(c, v, nr) + 0.0, c._1))
+      .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+      .take(np).map(_._2)
 
-  /** Shared IVF probe path: assign corpus rows to cells and route each
-    * query to its `nprobe` nearest cells — both narrow passes against
-    * the broadcast centroid array — then scan only the probed cells.
-    * The one shuffle left is the per-query top-k window. */
-  private def probeCells(
+  /** Spark's `round(x · 1e9)` cast to BIGINT under ANSI: HALF_UP on the
+    * double's shortest decimal form, failing where the cast would. */
+  private def round9(x: Double): Long = {
+    val r = java.math.BigDecimal.valueOf(x * 1.0e9)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue
+    if (!(r <= Long.MaxValue && r >= Long.MinValue))
+      throw new ArithmeticException(s"round($x * 1e9) overflows BIGINT")
+    r.toLong
+  }
+
+  /** Exact Lloyd cells over the normalized working set — the one IVF
+    * trainer, behind every IVF form and the `llm_knn_ivf*_det` oracles:
+    *
+    *  - seeds = the `nCells` lowest-id vectors;
+    *  - per pass, one narrow `mapPartitions` job routes each vector
+    *    with [[nearestCell]] against the broadcast centroids and keeps
+    *    per-cell, per-dimension sums of `round(x·10⁹)` as exact `Long`s
+    *    (order-free; `Math.addExact`, so an overflow fails as Spark's
+    *    ANSI `sum` does) plus per-dimension counts — ragged vectors
+    *    count only the dimensions they have;
+    *  - the driver merges ≤ partitions·nCells partials, mean = one IEEE
+    *    division per dimension, `cnrm` = the left-to-right norm, and
+    *    cells with `cnrm ≤ 0` drop out.
+    *
+    * Returns the cid-sorted routing array `(cid, cv, cnrm)`.
+    *
+    * @note scale: each pass moves O(partitions·nCells·dim) longs to the
+    *   driver — independent of corpus size; no shuffle, no growing lazy
+    *   plan. Quantizing to 10⁻⁹ units costs ~1e-10 per component
+    *   against unit-norm vectors, far below the round(·,6) output
+    *   grid. */
+  private[graft] def lloydCells(
       typed: org.apache.spark.sql.Dataset[(Long, Seq[Double], Double)],
-      cents: Array[(Long, Array[Double], Double)],
-      isQuery: org.apache.spark.sql.Column, nprobe: Int, k: Int): DataFrame = {
+      nCells: Int, iters: Int): Array[(Long, Array[Double], Double)] = {
     val spark = typed.sparkSession
     import spark.implicits._
-    if (cents.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("qid", "nbr", "cos", "rk")
+    // Seeds: the nCells lowest ids. An id-hash SPREAD was tried and
+    // measured strictly worse on both fixtures (SCALE.md, "IVF recall":
+    // 0.46/0.68 vs 0.84/1.00) — Lloyd refinement recovers distribution
+    // shape from any deterministic seed, and low-id seeds keep the probe
+    // recall bound reproducible.
+    var cents = typed.orderBy("vec_id").limit(nCells).collect()
+      .map { case (id, v, nr) => (id, v.toArray, nr) }
+    for (_ <- 1 to iters if cents.nonEmpty) {
+      val bc = spark.sparkContext.broadcast(cents)
+      val partials = typed.mapPartitions { it =>
+        val cs = bc.value
+        // normed drops empty vectors, so an empty array marks an empty cell
+        val sums = Array.fill(cs.length)(Array.emptyLongArray)
+        val cnts = Array.fill(cs.length)(Array.emptyLongArray)
+        it.foreach { case (_, vSeq, nr) =>
+          val v = vSeq.toArray
+          val best = nearestCell(cs, v, nr)
+          if (sums(best).length < v.length) {
+            sums(best) = java.util.Arrays.copyOf(sums(best), v.length)
+            cnts(best) = java.util.Arrays.copyOf(cnts(best), v.length)
+          }
+          val (s, n) = (sums(best), cnts(best))
+          var i = 0
+          while (i < v.length) {
+            s(i) = Math.addExact(s(i), round9(v(i))); n(i) += 1; i += 1
+          }
+        }
+        Iterator.range(0, cs.length).filter(sums(_).nonEmpty)
+          .map(ix => (cs(ix)._1, sums(ix).toSeq, cnts(ix).toSeq))
+      }.collect()
+      cents = partials.groupBy(_._1).toArray.sortBy(_._1).map {
+        case (cid, rows) =>
+          val dim = rows.map(_._2.length).max
+          val s = new Array[Long](dim)
+          val n = new Array[Long](dim)
+          rows.foreach { case (_, sv, nv) =>
+            var i = 0
+            while (i < sv.length) {
+              s(i) = Math.addExact(s(i), sv(i)); n(i) += nv(i); i += 1
+            }
+          }
+          val cv = Array.tabulate(dim)(i => s(i).toDouble / n(i) / 1.0e9)
+          var d = 0.0
+          var i = 0
+          while (i < dim) { d += cv(i) * cv(i); i += 1 }
+          (cid, cv, math.sqrt(d))
+      }.filter(_._3 > 0)
+    }
+    cents
+  }
+
+  /** Every row of `typed` routed to its [[nearestCell]]:
+    * `(vec_id, v, nrm, cid)`, the `assigned/` table's schema. One
+    * narrow pass against the broadcast centroids. */
+  private def assignCells(
+      typed: org.apache.spark.sql.Dataset[(Long, Seq[Double], Double)],
+      cents: Array[(Long, Array[Double], Double)]): DataFrame = {
+    val spark = typed.sparkSession
+    import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
-    val assigned = typed.mapPartitions { it =>
+    typed.mapPartitions { it =>
       val cs = bc.value
-      it.map { case (id, vSeq, nr) =>
+      if (cs.isEmpty) Iterator.empty
+      else it.map { case (id, vSeq, nr) =>
         (id, vSeq, nr, cs(nearestCell(cs, vSeq.toArray, nr))._1)
       }
     }.toDF("vec_id", "v", "nrm", "cid")
+  }
+
+  /** Each `isQuery` row's [[probedCells]], one row per probed cell:
+    * `(qid, qv, qn, cid)`. One narrow pass against the broadcast
+    * centroids. */
+  private def probeRows(
+      typed: org.apache.spark.sql.Dataset[(Long, Seq[Double], Double)],
+      cents: Array[(Long, Array[Double], Double)],
+      isQuery: org.apache.spark.sql.Column, nprobe: Int): DataFrame = {
+    val spark = typed.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(cents)
     val np = math.min(nprobe, cents.length)
-    val probes = typed.filter(isQuery).mapPartitions { it =>
+    typed.filter(isQuery).mapPartitions { it =>
       val cs = bc.value
       it.flatMap { case (qid, vSeq, qn) =>
         probedCells(cs, vSeq.toArray, qn, np).map(cid => (qid, vSeq, qn, cid))
       }
     }.toDF("qid", "qv", "qn", "cid")
-    val scored = assigned.join(broadcast(probes), "cid")
+  }
+
+  /** Shared IVF probe path: assign corpus rows to cells and route each
+    * query to its `nprobe` nearest cells — both narrow passes against
+    * the broadcast centroid array — then scan only the probed cells.
+    * The one shuffle left is the per-query top-k aggregate. */
+  private def probeCells(
+      typed: org.apache.spark.sql.Dataset[(Long, Seq[Double], Double)],
+      cents: Array[(Long, Array[Double], Double)],
+      isQuery: org.apache.spark.sql.Column, nprobe: Int, k: Int): DataFrame = {
+    val scored = assignCells(typed, cents)
+      .join(broadcast(probeRows(typed, cents, isQuery, nprobe)), "cid")
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("cos", round(expr("vec_dot(v, qv)") / (col("nrm") * col("qn")), 6))
       .select(col("qid"), col("vec_id").as("nbr"), col("cos"))

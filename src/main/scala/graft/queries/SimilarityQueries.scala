@@ -145,9 +145,8 @@ object SimilarityQueries {
   }
 
   /** IVF with the SHORTLIST under the hash oracle
-    * ([[SimilarityOps.knnIvfDet]]): the rows-only `llm_knn_ivf` key
-    * exists because float-partial Lloyd training is order-dependent at
-    * the last bit; this twin's training is deterministic integer/IEEE
+    * ([[SimilarityOps.knnIvfDet]], which the rows-only `llm_knn_ivf`
+    * key also runs): the training is deterministic integer/IEEE
     * arithmetic (lowest-id seeds, `(cos DESC, cid)` argmax assignment,
     * exact-BIGINT 10⁻⁹-unit re-centering, 2 fixed passes), so the
     * oracle REBUILDS the ENTIRE pipeline — both k-means passes
@@ -446,8 +445,8 @@ object SimilarityQueries {
     * and the oracle rebuilds ALL of it: both cell-training passes,
     * both codebook passes per subspace, probe routing, in-cell ADC
     * and the rerank. Composes the `llm_knn_ivf_det` and
-    * `llm_knn_pq_det` oracle machinery; the float-Lloyd
-    * `llm_knn_ivfpq` stays the rows-only speed path. */
+    * `llm_knn_pq_det` oracle machinery; `llm_knn_ivfpq`, with
+    * float-Lloyd codebooks, stays the rows-only speed path. */
   private val knnIvfPqDet = Q(
     "llm_knn_ivfpq_det",
     s"""WITH $oNormed,
@@ -681,8 +680,9 @@ object SimilarityQueries {
     * contract — exact small-integer dot products, order-free), the
     * exact pass re-ranks. The oracle rebuilds training, assignment,
     * quantization, probe routing, the 40-deep shortlist and the
-    * rerank, hash-checking shortlist membership itself; the
-    * float-Lloyd `llm_knn_ivfsq8` stays the rows-only speed path. */
+    * rerank, hash-checking shortlist membership itself; the rows-only
+    * `llm_knn_ivfsq8` runs the same code at a deeper probe and
+    * shortlist. */
   private val knnIvfSq8Det = Q(
     "llm_knn_ivfsq8_det",
     s"""WITH $oNormed,

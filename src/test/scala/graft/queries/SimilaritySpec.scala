@@ -282,4 +282,56 @@ class SimilaritySpec extends SparkSpec {
     assert(kept.keySet == Set(1L, 6L))
     assert(kept(6L) == 5.0)
   }
+
+  test("cell router: -0.0 ties 0.0 with the lower cid first; NaN never wins; all-NaN goes to the lowest cid") {
+    import graft.operators.SimilarityOps.{nearestCell, probedCells}
+    def route(cs: Array[(Long, Array[Double], Double)], v: Array[Double],
+        nr: Double): (Long, Seq[Long]) =
+      (cs(nearestCell(cs, v, nr))._1, probedCells(cs, v, nr, cs.length).toSeq)
+    // v = (-1, -0.0) against (0, 1) and (0, -1): both dot products sum
+    // from +0.0, so both cosines are +0.0 — a tie the lower cid takes
+    val v = Array(-1.0, -0.0)
+    assert(route(Array((1L, Array(0.0, 1.0), 1.0), (2L, Array(0.0, -1.0), 1.0)),
+      v, 1.0) == (1L, Seq(1L, 2L)))
+    // a real -0.0 cosine needs a negative norm: cid 1 scores -0.0, cid 2
+    // +0.0; Spark's ordering calls them equal, so cid 1 still leads
+    // (Scala's Double ordering alone would put cid 2 first)
+    val up = Array(0.0, 1.0)
+    val signed = Array((1L, Array(1.0, 0.0), -1.0), (2L, Array(1.0, 0.0), 1.0))
+    assert(route(signed, up, 1.0) == (1L, Seq(1L, 2L)))
+    // a NaN cosine ranks below every number, and all-NaN keeps cid order
+    val nanFirst = Array((1L, Array(0.0, 1.0), Double.NaN), (2L, Array(0.0, 1.0), 1.0))
+    assert(route(nanFirst, up, 1.0) == (2L, Seq(2L, 1L)))
+    assert(route(nanFirst, up, Double.NaN) == (1L, Seq(1L, 2L)))
+  }
+
+  test("Lloyd trainer: ragged vectors average each dimension over the vectors that have it") {
+    import spark.implicits._
+    val typed = graft.operators.SimilarityOps.normed(Seq(
+        (1L, Seq(1.0, 2.0, 3.0)), (2L, Seq(3.0, 4.0)), (3L, Seq(5.0)),
+        (4L, Seq(-7.0, 0.5)))
+      .toDF("vec_id", "embedding").repartition(3))
+      .as[(Long, Seq[Double], Double)]
+    // one cell of all four: dimension 0 sums over 4 vectors, 1 over 3
+    // and 2 over 1 (10⁻⁹-unit sums, mean = sum / count / 1e9); one count
+    // per cell would give 6.5/4 and 3/4 for the last two
+    val Array((cid, cv, cnrm)) =
+      graft.operators.SimilarityOps.lloydCells(typed, nCells = 1, iters = 2)
+    assert(cid == 1L)
+    assert(cv.toSeq == Seq(2.0e9 / 4 / 1e9, 6.5e9 / 3 / 1e9, 3.0e9 / 1 / 1e9))
+    assert(cnrm == math.sqrt(cv(0) * cv(0) + cv(1) * cv(1) + cv(2) * cv(2)))
+  }
+
+  test("Lloyd trainer: a cell sum past Long.MaxValue fails instead of wrapping") {
+    import spark.implicits._
+    // round(5e9 · 1e9) = 5e18 per vector; two of them pass 9.22e18
+    val typed = graft.operators.SimilarityOps.normed(
+        Seq((1L, Seq(5.0e9)), (2L, Seq(5.0e9))).toDF("vec_id", "embedding"))
+      .as[(Long, Seq[Double], Double)]
+    val e = intercept[Exception] {
+      graft.operators.SimilarityOps.lloydCells(typed, nCells = 1, iters = 1)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[ArithmeticException]), e)
+  }
 }
